@@ -24,8 +24,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 32 like every other harness main (GenBench/SoloBench/ScaleBench/...):
-    // the old "4" default silently measured local[4] whenever the env var
+    // 32: the old "4" default silently measured local[4] whenever the env var
     // was forgotten — feeders read 8× low and the run was not the
     // measurement it claimed to be. The driver always sets this explicitly.
     // Parsed eagerly: a malformed value must abort here, not interpolate
@@ -109,8 +108,8 @@ object Bench {
     // Two failure modes demand the hybrid:
     //  - SUSTAINED JIT-lag windows (the r9 "regressions": a query runs
     //    2-3× steady state for several consecutive seconds until C2
-    //    finishes its hot path — RegressionDiag measured q_attribution
-    //    at 1.13/1.13/1.18/1.06 then an abrupt 0.47). Back-to-back-only
+    //    finishes its hot path — q_attribution measured
+    //    1.13/1.13/1.18/1.06 then an abrupt 0.47). Back-to-back-only
     //    reps are perfectly correlated with such a window; the ~1 min
     //    of other work between pass 1 and pass 2 decorrelates.
     //  - LOST HOT-REP: two fully-separated passes never run a query on
@@ -120,16 +119,8 @@ object Bench {
     //    consecutive-rep solo mins reproduce the r9-comparable 77 s
     //    level). The pass-2 double-run restores that hot rep on a JVM
     //    that is fully warm AND past any compile window.
-    // SPARK_GRAFT_ORDER=reverse runs each pass in reverse name order —
-    // the round-15 diagnostic for ORDER-DEPENDENT in-run interference
-    // (q_bpe_encode reads 2.35-2.40 in every in-run measurement and
-    // 2.05-2.14 in every fresh-JVM solo; if the elevation follows the
-    // predecessors and not the query, reversing the order moves it).
-    // The driver never sets it, so driver artifacts stay alphabetical.
-    val queryOrder: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
-      val base = SparkEntry.queries.toSeq.sortBy(_._1)
-      if (sys.env.get("SPARK_GRAFT_ORDER").contains("reverse")) base.reverse else base
-    }
+    // Passes run in name order, so artifacts are comparable run to run.
+    val queryOrder = SparkEntry.queries.toSeq.sortBy(_._1)
     def timedPass(reps: Int): Map[String, Seq[Double]] =
       queryOrder.map { case (name, fn) =>
         val times = (1 to reps).map { _ =>
@@ -198,9 +189,7 @@ object Bench {
     // first rep landed in, and bench_vs_baseline inherited the noise.
     // Min-of-3 decorrelated reps is the report; all reps go to
     // BENCH_FULL.json (gen_reps/csv_reps) so a window round is
-    // self-diagnosing, and graft.GenBench is the SoloBench-style
-    // standalone for targeted re-measurement (SCALE.md §"CSV-sink
-    // throughput envelope").
+    // self-diagnosing (SCALE.md §"CSV-sink throughput envelope").
     val genSpec = "key,bigint,int(11),varchar(50),double,date,bigint(20)"
     val genRows = 10000000L
     val csvDir = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_bench_csv")
@@ -243,8 +232,8 @@ object Bench {
     // re-measure on this now-fully-warm JVM, emitted as `movers_solo`
     // in BENCH_FULL.json — the judge reads driver-run movers already
     // discriminated (solo ≈ prior level ⇒ run-scoped ambient; solo
-    // elevated ⇒ candidate regression for the SoloBench min-of-5
-    // protocol). Capped at the 12 slowest movers to bound bench cost.
+    // elevated ⇒ candidate regression for a fresh-JVM min-of-5
+    // re-measure). Capped at the 12 slowest movers to bound bench cost.
     val prior: Map[String, Double] = {
       val dir = new java.io.File(".")
       val files = Option(dir.listFiles((_, n) => n.matches("BENCH_r\\d+\\.json")))
@@ -333,7 +322,7 @@ object Bench {
     * axis the CPU probe cannot see: round-14 closure run #3 read +7%
     * total on a CPU-probe-quiet host, which pinned the blind spot this
     * probe closes. Envelope alongside the CPU probe's in SCALE.md
-    * §"Calibration probe"; `graft.ProbeBench` re-measures standalone.
+    * §"Calibration probe".
     */
   def probeIoOnce(spark: SparkSession): Double = {
     val dir = new java.io.File(
@@ -352,8 +341,7 @@ object Bench {
     * through a `parts`-partition shuffle, noop sink. Constant by
     * construction (no input tables, no disk), so its wall time prices the
     * HOST, not the inventory — the steady-state envelope is pinned in
-    * SCALE.md §"Calibration probe" and `graft.ProbeBench` re-measures it
-    * standalone.
+    * SCALE.md §"Calibration probe".
     */
   def probeOnce(spark: SparkSession, parts: Int): Double = {
     val t0 = System.nanoTime()

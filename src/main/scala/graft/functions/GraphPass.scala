@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * derivation is ~90% of each query's wall (checkpoint write ≈ free,
   * ~30 MB blocks), so a deployment that runs several graph analyses
   * over the same corpus pays the dominant cost five times.
-  * `graft.GraphCkptBench` measured the derive-once alternative at
-  * 118.1 → 40.7 s for the five-query pass at 100× (2.9×); this class IS
+  * The derive-once alternative measured 118.1 → 40.7 s for the
+  * five-query pass at 100× (2.9×); this class IS
   * that alternative: materialize the canonical edge list once (eager
   * graft.Checkpoint — local blocks in dev, reliable checkpoint dir
   * under a real cluster) and bind the five post-edge bodies — the EXACT

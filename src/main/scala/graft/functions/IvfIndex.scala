@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.ColumnBridge
   *
   * The flat assignment is an n×k cosine fan-out; SemDeDup at production
   * scale raises k with n (tens of thousands of cells), so the fan-out
-  * itself becomes the bottleneck (round-14 `graft.SemKBench` measured
+  * itself becomes the bottleneck (round 14 measured
   * 15.96 s flat vs 4.34 s indexed at 100×/k=800, and the indexed slope
   * sub-linear at ~3×/decade). The remedy measured there and shipped
   * here: bucket the k centroids into g = k/groupSize groups, summarize
@@ -29,9 +29,8 @@ import org.apache.spark.sql.graft.ColumnBridge
   * k=800/g=100/nprobe=2 that is 116 vs 800 per vector, and g grows as
   * k/8 so the advantage compounds as k ∝ n. Approximation is exactly
   * production IVF's: a vector whose true best centroid lies outside its
-  * probed groups lands in a neighbor cell (SemKBench measures the
-  * disagreement rate and the recall cost: 0.747 → 0.625 recall@≥0.9 on
-  * the clustered replica at 100×).
+  * probed groups lands in a neighbor cell (measured recall cost:
+  * 0.747 → 0.625 recall@≥0.9 on the clustered replica at 100×).
   *
   * Determinism contract (the oracle-gate rules): group means fold
   * member centroids in cid-ascending order and dimensions ascending,
@@ -149,8 +148,8 @@ object IvfIndex {
     * `cid div groupSize`.
     *
     * `kHint` is the centroid count when the caller knows it (every
-    * in-repo caller does — the gated query's fixed IdxK, SemKBench's
-    * 8·copies, fit's own k); pass -1 to have it counted (one k-row job,
+    * in-repo caller does — the gated query's fixed IdxK, fit's own
+    * k); pass -1 to have it counted (one k-row job,
     * cheap next to the assignment, but a job nonetheless — the hint
     * exists so the size gate costs nothing on the hot path).
     * `broadcastMaxCids` is the stage-2 broadcast ceiling (see
@@ -249,8 +248,8 @@ object IvfIndex {
     * k-specific (a k=80 re-check read sil 0.145 with recall 1.000 on
     * the clustered corpus — coarse cells trade silhouette for recall)
     * but the ≲ 0.1 cutoff held at both k: read the gate at the k you
-    * will serve with — one command, `SemKBench <sfDir> sil k=<yourK>`
-    * (round 19).
+    * will serve with — run `q_sim_silhouette`'s score over your
+    * centroids at that k (round 19).
     *
     * Determinism: cosines are the codegen ascending folds; stage-1
     * ties break low-gid, cell ranking low-cid, candidate ranking
@@ -283,11 +282,11 @@ object IvfIndex {
     * is touching most of the index anyway — the full-scan
     * [[searchTopK]] over the same files is the right plan there.
     *
-    * THE BOUNDARY IS MEASURED, NOT A CLIFF (round 18, `SemKBench
-    * boundary` on a 12,500-cell layout — SCALE.md §"Semantic dedup"
-    * round-18): the IN-list plan's wall tracks the files actually read
-    * essentially proportionally all the way to 10⁴ literals (0.20 s at
-    * 100 cells, 0.55 s at 10³, 3.56 s at 10⁴, vs 4.56 s full scan) —
+    * THE BOUNDARY IS MEASURED, NOT A CLIFF (round 18, on a 12,500-cell
+    * layout — SCALE.md §"Semantic dedup" round-18): the IN-list plan's
+    * wall tracks the files actually read essentially proportionally
+    * all the way to 10⁴ literals (0.20 s at 100 cells, 0.55 s at 10³,
+    * 3.56 s at 10⁴, vs 4.56 s full scan) —
     * analysis/planning of a 10⁴-literal isin adds nothing visible, and
     * the collect itself is 10⁴ longs ≈ 80 KB. So the default exists to
     * bound DRIVER list size, and a deployment with more cells can raise
@@ -625,8 +624,8 @@ object IvfIndex {
     * against stale centroids degrade routing recall, never correctness
     * of the probed-cell search itself.
     *
-    * THE DRIFT COST IS MEASURED (round 18, `SemKBench cluster drift` —
-    * SCALE.md §"Semantic dedup" round-18 (a)): appending
+    * THE DRIFT COST IS MEASURED (round 18 — SCALE.md §"Semantic
+    * dedup" round-18 (a)): appending
     * distribution-SHIFTED batches (new clusters in new locations) at
     * 10/25/50% of the corpus against frozen k=800 centroids, floor-free
     * recall@10 for drifted-population queries reads a FLAT **0.786 at
@@ -645,7 +644,7 @@ object IvfIndex {
     * [[routeFloor]] calibrated at fit time; its est_f is a measured
     * lower bound on f — watch est_f, widen probes when it crosses your
     * budget, refit when the probe premium stops being acceptable
-    * (`SemKBench cluster monitor` proves est_f tracks true f
+    * (measured: est_f tracks true f
     * monotonically at f = 0/10/25/50% with the in-distribution control
     * at ≈ 0; SCALE.md §"Semantic dedup" round-19). In-distribution appends (the common ingest) are MEASURED
     * free, not assumed: a 25% batch of new members of existing
@@ -856,8 +855,8 @@ object IvfIndex {
     *     est_f = max(0, (below_frac − calibQ) / (1 − calibQ)) is a
     *     LOWER bound on f (β < 1 only makes true f larger — the
     *     estimator never over-triggers a refit). MEASURED on the
-    *     round-19 monitor leg's shifted-cluster geometry (`SemKBench
-    *     cluster monitor`, SCALE.md §"Semantic dedup" round-19):
+    *     round-19 monitor leg's shifted-cluster geometry (SCALE.md
+    *     §"Semantic dedup" round-19):
     *     est_f reads 0.00 / 0.06 / 0.17 / 0.45 at true f = 0/10/25/50%
     *     — monotone and conservative (β ≈ 0.73–0.91: about ¾ of OOD
     *     queries collapse below the corpus-p10 floor) — while the
@@ -874,7 +873,8 @@ object IvfIndex {
     *     so, because the drift penalty itself nearly vanishes at coarse
     *     k (stale recall 0.992→0.972; big cells catch the shifted
     *     clusters' neighbors). Calibrate at the k you serve with —
-    *     `SemKBench <sf> cluster monitor k=<k>`.
+    *     [[routeFloor]] on a base sample, then [[driftStats]] on
+    *     batches of known mix at that k.
     *
     * Deployment loop: score every query batch (query-stream cost — no
     * corpus access); when est_f crosses the probe-widening threshold,

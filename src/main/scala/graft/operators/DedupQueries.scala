@@ -58,12 +58,9 @@ object DedupQueries {
     * ~500k×64f (~130 MB) the all-pairs candidate side must not be
     * broadcast, so the query delegates to blockedAllPairs. The check
     * is a bounded COUNT (limit(bound+1).count()) — it never pulls rows
-    * to the driver. Public so the scale harness (Scale100Bench `sim`)
-    * can assert WHICH branch a given corpus takes via the exact
-    * decision the query itself evaluates, making the delegation's
-    * engagement at scale a measured fact rather than a unit-test one.
+    * to the driver.
     */
-  def embeddingDelegates(s: SparkSession, d: String): Boolean =
+  private def embeddingDelegates(s: SparkSession, d: String): Boolean =
     embeddings(s, d).select(col("vec_id")).limit(500001).count() > 500000L
 
   /** Blocked all-pairs cosine near-dup — the 100 TB form, shared by
@@ -294,8 +291,8 @@ object DedupQueries {
       // collected unconditionally and discarded the pull when
       // delegating). Acknowledged trade: the small-side branch now
       // runs two jobs (bounded count + collect); the count job is
-      // bounded-scan cheap (~0.03 s at sf0.1, inside MicroBench's
-      // embed_broadcast timing) — accepted in exchange for never
+      // bounded-scan cheap (~0.03 s at sf0.1, inside the broadcast
+      // form's timing) — accepted in exchange for never
       // shipping the candidate table to the driver when the blocked
       // plan is the one that runs.
       if (embeddingDelegates(s, d)) blockedAllPairs(s, d)
@@ -350,7 +347,7 @@ object DedupQueries {
     // loop, and NOT n-gram blocking either — on low-entropy keys
     // (shared prefixes, zero-padded ids) near-universal grams make the
     // gram join quadratic (measured 23× WORSE than the nested loop at
-    // sf0.1 — graft.MicroBench). Instead: symmetric-deletion blocking
+    // sf0.1). Instead: symmetric-deletion blocking
     // (the SymSpell scheme): each side's join keys are the string
     // itself plus every one-character deletion, so any pair at edit
     // distance ≤ 1 provably shares a key (substitution → common

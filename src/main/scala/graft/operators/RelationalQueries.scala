@@ -180,9 +180,9 @@ object RelationalQueries {
     * edge table (round 15): the gated entries compose them with a
     * per-query `coPurchaseEdges` derivation exactly as before
     * (plan-identical — the refactor moves code, not semantics), and
-    * `graft.GraphCkptBench` feeds all five from ONE shared checkpointed
-    * edge table to price what the per-query re-derivation costs at
-    * 100× (the r14 verdict's checkpoint-accounting directive).
+    * `graft.functions.GraphPass` feeds all five from ONE shared
+    * checkpointed edge table (the derive-once form, 2.9× faster for the
+    * five-query pass at 100×).
     * `graphCounts` (triangles) was already in this form.
     */
   private[graft] def pagerankOf(edges: DataFrame): DataFrame = {
@@ -1144,9 +1144,8 @@ object RelationalQueries {
     // pairs map-side carrying occurrence counts, stage 2 recovers
     // n_rows (Σcnt), n_nulls (Σcnt over null values), exact NDV
     // (count of non-null dedup'd values), min/max. Bit-identical
-    // output (MicroBench profile_expand/profile_explode pins row
-    // equality; 1.07 → 0.20 s at sf0.1), and the same shape stays
-    // map-side combinable at 100 TB — stage 1's shuffle carries
+    // output (row equality measured; 1.07 → 0.20 s at sf0.1), and the
+    // same shape stays map-side combinable at 100 TB — stage 1's shuffle carries
     // distinct (col, value) pairs hash-spread across reducers, never
     // the raw stream, so no single task holds a full column's NDV.
     "q_profile" -> ((s, d) => {
@@ -1592,7 +1591,7 @@ object RelationalQueries {
     // min(da, db) ≤ O(E^1.5) — the same orientation bound triangles
     // use — and, critically, it is what keeps a power-law hot vertex
     // out of the expansion key. Canonical-ID orientation put a degree-
-    // 37k hot vertex (SkewBench, 5% hot-basket injection at 10×) on
+    // 37k hot vertex (5% hot-basket injection at 10×) on
     // the expansion side of its ~37k edges: deg(hot)² ≈ 1.4e9 wedge
     // rows through the ONE reduce task owning that join key — measured
     // 96.7 s wall vs 4.3 s balanced, max/median task 795×. Min-degree

@@ -461,7 +461,7 @@ object SimilarityQueries {
     // assignment — the large-k path q_dedup_semantic's flat argmax
     // cannot take: SemDeDup at production scale raises k ∝ n (tens of
     // thousands of cells), and the flat n×k fan-out then dominates
-    // (round-14 SemKBench: 15.96 s flat vs 4.34 s indexed at
+    // (round 14: 15.96 s flat vs 4.34 s indexed at
     // 100×/k=800, indexed slope sub-linear ~3×/decade). This query
     // gates the SHIPPED product path end to end — since round 16 that
     // includes the TRAINER (VERDICT r15 #2): centroids are no longer
@@ -784,7 +784,7 @@ object SimilarityQueries {
     // of a centroid direction) scores 0 without dividing. Scale: one
     // corpus scan × broadcast k centroids (row-local sort of a
     // k-array), ONE cell-keyed map-side-combined shuffle of k rows.
-    // The gate is CALIBRATED (round 18, SemKBench sil — SCALE.md
+    // The gate is CALIBRATED (round 18 — SCALE.md
     // §"Semantic dedup" round-18 (b)): corpus-mean silhouette maps to
     // floor-free IVF recall@10 at k=800 as 0.51 → 0.96, 0.40 → 0.80,
     // ≤ 0.06 → ≤ 0.09 — a mean below ~0.1 says route to the flat

@@ -19,8 +19,12 @@ object SourceQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def scratch(sfDir: String, fmt: String): String =
-    s"/tmp/graft_q_source_${fmt}_${sfDir.replaceAll("[^0-9A-Za-z]", "_")}"
+  /** Per-(format, SF) scratch directory for the write→read queries,
+    * under `java.io.tmpdir` (read per call, like GenQueries' sinks).
+    */
+  private[graft] def scratch(sfDir: String, fmt: String): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_q_source_${fmt}_${sfDir.replaceAll("[^0-9A-Za-z]", "_")}").getAbsolutePath
 
   /** The per-row 60-bit content hash behind q_sink_overwrite's rerun
     * digest — FULL row content (keys, price, and the partition column),

@@ -362,8 +362,8 @@ object TextQueries {
       import org.apache.spark.sql.expressions.Window
       // trigrams stream through the ShingleGenExpr Generator — no
       // per-doc array materialization; measured 16% faster than the
-      // codegen'd transform+explode route (MicroBench tri_explode vs
-      // tri_generator) with an identical trigram multiset
+      // codegen'd transform+explode route with an identical trigram
+      // multiset
       graft.GraftExtensions.register(s)
       // round 21: the corpus-sized aggregation keys on the PACKED
       // trigram long (bijective and ORDER-preserving vs the string —

@@ -63,7 +63,7 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Conf kill-switch (default on): lets a session measure the pure
-    * window plan (MicroBench's baseline case, differential tests)
+    * window plan (a baseline case, differential tests)
     * without unregistering the rule — registration is session-global
     * and queries are optimized lazily, so a flag read at optimization
     * time is the only reliable scoping.

@@ -13,16 +13,15 @@ import org.apache.spark.sql.SparkSession
   *     RocksDbStateSpec proves the whole streaming-operator set is
   *     bit-identical under the switch).
   *   - `changelogCheckpointing.enabled = true`: per-commit RocksDB
-  *     SNAPSHOT upload is the hot-entity bottleneck — round-15
-  *     StateStoreBench measured the changelog flip on the 10×-hot corpus
-  *     at +16% rows/s, per-batch straggler 1.4× → 1.2×, checkpoint bytes
+  *     SNAPSHOT upload is the hot-entity bottleneck — round 15 measured
+  *     the changelog flip on the 10×-hot corpus at +16% rows/s, per-batch straggler 1.4× → 1.2×, checkpoint bytes
   *     halved (13.6 → 7.2 MB), and it strictly won across every measured
   *     window. Commits upload the per-batch delta; snapshots amortize in
   *     the background maintenance task.
   *
   * THE ONE COST OF THE CHANGELOG DEFAULT, AND HOW TO SIZE FOR IT
-  * (round 17, `StateStoreBench restore [deep]` — SCALE.md §"restart
-  * recovery under the changelog default"): restore-from-checkpoint must
+  * (round 17 — SCALE.md §"restart recovery under the changelog
+  * default"): restore-from-checkpoint must
   * REPLAY every changelog since the last background snapshot. At
   * 62.5k rows/commit replay is free — restart wall flat 2.0–2.2 s from
   * depth 4 to 15, at or below the snapshot-per-commit control — but at
@@ -57,8 +56,7 @@ object StatePosture {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The full posture, as conf pairs — apply at session build time or
-    * via [[set]]; StateStoreBench's lever grid carries a `posture` row
-    * measuring exactly this map so the default's delta stays a number.
+    * via [[set]].
     */
   val rocksDbConfs: Map[String, String] = Map(
     ProviderKey -> RocksDbProvider,

@@ -6,10 +6,9 @@ import org.apache.spark.SparkContext
   *
   * Anything that samples listener-fed counters right after an action —
   * SpillSpec's spill bytes, ClusterPostureSpec's speculative-task /
-  * job-end / executor-removed marks, SkewBench's per-task duration
-  * stats — races the async event queues: the event may not be
-  * processed yet, shifting attribution to the next sample or reading a
-  * stale timestamp. Draining the bus first makes the sample complete
+  * job-end / executor-removed marks — races the async event queues:
+  * the event may not be processed yet, shifting attribution to the next
+  * sample or reading a stale timestamp. Draining the bus first makes the sample complete
   * up to everything posted before the action finished.
   */
 object ListenerBridge {

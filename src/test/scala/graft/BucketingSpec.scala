@@ -69,8 +69,7 @@ class BucketingSpec extends AnyFunSuite {
   test("q_sink_rangeparts writes one sorted file per target partition") {
     val sf = "/root/testdata/sf0.001"
     SparkEntry.queries("q_sink_rangeparts")(spark, sf).collect() // runs the write
-    val root = new java.io.File(
-      s"/tmp/graft_q_source_rangeparts_${sf.replaceAll("[^0-9A-Za-z]", "_")}")
+    val root = new java.io.File(operators.SourceQueries.scratch(sf, "rangeparts"))
     val pidDirs = root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("pid="))
     assert(pidDirs.nonEmpty, s"no pid= directories under $root")
     pidDirs.foreach { dir =>
@@ -81,6 +80,28 @@ class BucketingSpec extends AnyFunSuite {
         .select("o_orderkey").collect().map(_.getLong(0))
       assert(keys.sameElements(keys.sorted),
         s"${dir.getName}: rows not sorted by o_orderkey within the file")
+    }
+  }
+
+  test("q_sink_rangeparts writes under java.io.tmpdir, not a fixed /tmp path") {
+    val sf = "/root/testdata/sf0.001"
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tmpdir").toFile
+    val prev = System.getProperty("java.io.tmpdir")
+    System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
+    try {
+      SparkEntry.queries("q_sink_rangeparts")(spark, sf).collect()
+      val root = new java.io.File(tmp,
+        s"graft_q_source_rangeparts_${sf.replaceAll("[^0-9A-Za-z]", "_")}")
+      val pidDirs = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isDirectory && f.getName.startsWith("pid="))
+      assert(pidDirs.nonEmpty, s"no pid= directories under $root")
+    } finally {
+      System.setProperty("java.io.tmpdir", prev)
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(rm)
+        f.delete()
+      }
+      rm(tmp)
     }
   }
 
@@ -100,8 +121,7 @@ class BucketingSpec extends AnyFunSuite {
       assert(r.getBoolean(5), s"untouched_preserved=false: $r")
       assert(r.getBoolean(6), s"rerun_idempotent=false: $r")
     }
-    val root = new java.io.File(
-      s"/tmp/graft_q_source_overwrite_${sf.replaceAll("[^0-9A-Za-z]", "_")}")
+    val root = new java.io.File(operators.SourceQueries.scratch(sf, "overwrite"))
     val oyDirs = root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("oy="))
     assert(oyDirs.length == rows.length, s"expected ${rows.length} partitions, got ${oyDirs.length}")
     oyDirs.foreach { dir =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The derive-once graph pass (graft.functions.GraphPass) — the round-16
-  * promotion of GraphCkptBench's measured shared-edge recipe into product
+  * promotion of the measured shared-edge recipe into product
   * surface: every analysis must be RESULT-IDENTICAL to its standalone
   * gated query (which derives its own edge table), and the pass must
   * derive the edge table exactly once.

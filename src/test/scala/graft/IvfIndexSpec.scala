@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The two-level IVF-over-centroids assignment (graft.functions.IvfIndex)
-  * — the round-15 promotion of SemKBench's measured large-k path into
+  * — the round-15 promotion of the measured large-k path into
   * the product surface: routing correctness against the flat argmax,
   * probe-constraint honesty (an indexed cell is always one of the
   * vector's probed groups), and bit-stability of the large-k fit across
@@ -81,8 +81,9 @@ class IvfIndexSpec extends AnyFunSuite {
     // case for mean-based routing (near-orthogonal random vectors, max
     // pairwise cosine ≈ 0.51, so group means summarize weakly — ~75%
     // agreement measured); real near-dup corpora route far better
-    // (SemKBench's clustered replica). The exactness check below
-    // (nprobe = g) is the hard correctness bound.
+    // (the clustered replica measured in SCALE.md §"Semantic dedup").
+    // The exactness check below (nprobe = g) is the hard correctness
+    // bound.
     val assigned = functions.IvfIndex.assignIndexed(corpus, cents32, groupSize = 8, nprobe = 2)
     val joined = assigned.select(col("vec_id"), col("cell")).join(flatCells, "vec_id")
     val n = joined.count()

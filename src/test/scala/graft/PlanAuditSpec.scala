@@ -276,7 +276,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_dedup_semantic_indexed: broadcast group means, window-free two-level assignment") {
-    // the round-15 promotion of SemKBench's indexed assignment into the
+    // the round-15 promotion of the measured indexed assignment into the
     // gated surface (VERDICT r14 #1): stage-1 routing must ride a
     // BROADCAST single-row group-means array scored row-locally (no
     // Window anywhere), stage-2 must probe the centroids through a

@@ -270,10 +270,11 @@ class RestartRecoverySpec extends AnyFunSuite {
   }
 
   test("deep changelog replay: 7 commits with maintenance parked restore bit-identically") {
-    // The round-17 restore bench (StateStoreBench `restore`) prices
-    // depth-15 replay WALLS; this pins the CORRECTNESS half the bench
-    // does not check. With background maintenance parked (no snapshot
-    // ever uploads under changelog checkpointing), the restarted
+    // The round-17 restore measurement (SCALE.md §"restart recovery
+    // under the changelog default") priced depth-15 replay WALLS; this
+    // pins the CORRECTNESS half that measurement does not check. With
+    // background maintenance parked (no snapshot ever uploads under
+    // changelog checkpointing), the restarted
     // query's ONLY path back to its state is replaying the full 7-deep
     // changelog — asserted below by counting changelog files in the
     // checkpoint before the restart. u41 carries ONE session whose
