@@ -30,8 +30,6 @@ object Bench {
     // Parsed eagerly: a malformed value must abort here, not interpolate
     // unquoted garbage into BENCH_FULL.json.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val loadStart = readLoadavg()
-    val (diskReadStart, diskWriteStart) = readDiskSectors()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -75,26 +73,6 @@ object Bench {
       releaseState()
     }
 
-    // Calibration probe (round-14 directive): a FIXED constant workload —
-    // 4M-row modulo hash-agg into 100k keys through a cpus-partition
-    // shuffle, noop sink — measured min-of-3 at three points (before
-    // pass 1, between passes, after pass 2). Its steady-state envelope
-    // lives in SCALE.md §"Calibration probe"; readings inside it say the
-    // host was quiet, elevated readings say the run landed in a host
-    // window and totals scale accordingly — decidable from the artifact
-    // alone, no prose archaeology.
-    def probeMin3(): Double = (1 to 3).map(_ => probeOnce(spark, cpus)).min
-    probeOnce(spark, cpus); probeOnce(spark, cpus) // probe's own JIT warm-up
-    // the IO probe prices the page-cache/disk axis the CPU probe is
-    // blind to (round-14 closure run #3: probe-quiet yet +7%); its own
-    // write volume (10 × ~250 MB per bench run) is measured and reported
-    // as probe_io_write_mb, and the probe directory is deleted after the
-    // final probe call (round-16 ADVICE)
-    def probeIoMin3(): Double = (1 to 3).map(_ => probeIoOnce(spark)).min
-    probeIoOnce(spark) // warm-up (plan compile + first-write allocation)
-    val probe0 = probeMin3()
-    val probeIo0 = probeIoMin3()
-
     // failed queries report -1.0, never a fake duration — a regression
     // must be visible in the JSON, not summed into total as a fast run.
     // Each query is timed TWICE and the min reported: a single-shot
@@ -134,32 +112,7 @@ object Bench {
         name -> times.toSeq
       }.toMap
     val pass1 = timedPass(1)
-    val probe1 = probeMin3()
-    val probeIo1 = probeIoMin3()
     val pass2 = timedPass(2)
-    val probe2 = probeMin3()
-    val probeIo2 = probeIoMin3()
-    // round-16 ADVICE: the IO probe's write volume is fixed (10 writes
-    // per run: 1 warm-up + 3 × min-of-3, ~250 MB each) but it was left
-    // in tmpdir permanently and silently folded into disk_write_mb.
-    // Measure one snapshot's bytes, report the run's total probe volume
-    // separately (probe_io_write_mb in BENCH_FULL.json), and delete the
-    // directory — disk_write_mb stays a raw device-level delta, with the
-    // probe's share now stated in the artifact instead of guessed.
-    val probeIoWriteMb: Double = {
-      val dir = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_probe_io")
-      def du(f: java.io.File): Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      val snapshot = du(dir)
-      rm(dir)
-      snapshot * 10.0 / 1e6
-    }
     // min = round-over-round comparison continuity; median = JIT-window
     // visibility (a query whose min is steady but whose median sits 2×
     // above it was caught in a compile window — SCALE.md §"Bench-mover
@@ -226,45 +179,6 @@ object Bench {
     val genRate = if (genSec > 0) (genRows / genSec).toLong else -1L
     val csvRate = if (csvReps.min > 0) (genRows / csvReps.min).toLong else -1L
 
-    // Run-scoped-elevation pre-discrimination (round-13 directive):
-    // any query whose min rose >15% (and >50 ms absolute) vs the prior
-    // round's driver BENCH file gets an immediate solo min-of-2
-    // re-measure on this now-fully-warm JVM, emitted as `movers_solo`
-    // in BENCH_FULL.json — the judge reads driver-run movers already
-    // discriminated (solo ≈ prior level ⇒ run-scoped ambient; solo
-    // elevated ⇒ candidate regression for a fresh-JVM min-of-5
-    // re-measure). Capped at the 12 slowest movers to bound bench cost.
-    val prior: Map[String, Double] = {
-      val dir = new java.io.File(".")
-      val files = Option(dir.listFiles((_, n) => n.matches("BENCH_r\\d+\\.json")))
-        .getOrElse(Array.empty)
-      files.sortBy(_.getName).lastOption.map { f =>
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        // matches both the parsed map and the escaped copy inside
-        // "tail" (identical values from the same run)
-        val re = """"(q_[A-Za-z0-9_]+)\\?":(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)""".r
-        re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-    }
-    val movers = results.filter { case (name, cur) =>
-      cur > 0 && prior.get(name).exists(p => p > 0 && cur > p * 1.15 && cur - p > 0.05)
-    }.sortBy(-_._2).take(12)
-    val moversSolo = movers.map { case (name, _) =>
-      val fn = SparkEntry.queries(name)
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] movers_solo $name failed: ${e.getMessage}"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        releaseState()
-        if (ok) dt else -1.0
-      }
-      name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
-    }
-
     val total = results.map(_._2).filter(_ >= 0).sum
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
 
@@ -274,33 +188,15 @@ object Bench {
     // for 80 queries overflow the window (r01/r02 both came back
     // parsed=null), so the stdout line uses 2-significant-digit seconds and
     // the full-precision copy goes to BENCH_FULL.json for the judge.
-    val loadEnd = readLoadavg()
-    val (diskReadEnd, diskWriteEnd) = readDiskSectors()
-    val probeSec = Seq(probe0, probe1, probe2)
-    val probeIoSec = Seq(probeIo0, probeIo1, probeIo2)
-    // sectors are 512 bytes regardless of the device's logical block size;
-    // -1 (unreadable) at EITHER endpoint propagates as -1, never a bogus
-    // delta (round-15 ADVICE)
-    def mb(start: Long, end: Long) =
-      if (start < 0 || end < 0) -1.0 else (end - start) * 512.0 / 1e6
-    val diskReadMb = mb(diskReadStart, diskReadEnd)
-    val diskWriteMb = mb(diskWriteStart, diskWriteEnd)
-
-    val window = windowOf(probeSec, probeIoSec)
-    val line = Bench.renderLine(results, total, sfNum, genRows, genSec, genRate, csvRate,
-      cpus, probeSec, probeIoSec, window)
+    val line = Bench.renderLine(results, total, sfNum, genRows, genSec, genRate, csvRate, cpus)
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullMeds = medians.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val fullMovers = moversSolo.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val genRepsJson = genReps.mkString("[", ",", "]")
     val csvRepsJson = csvReps.mkString("[", ",", "]")
-    val probeJson = probeSec.mkString("[", ",", "]")
-    val probeIoJson = probeIoSec.mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"window":"$window","probe_sec":$probeJson,"probe_io_sec":$probeIoJson,"probe_io_write_mb":${"%.1f".formatLocal(java.util.Locale.ROOT, probeIoWriteMb)},"load_start":$loadStart,"load_end":$loadEnd,"disk_read_mb":$diskReadMb,"disk_write_mb":$diskWriteMb,"queries":$fullQs,"queries_med":$fullMeds,"movers_solo":$fullMovers,"sf":"$sfDir","gen_rows":$genRows,"gen_sec":$genSec,"gen_rows_per_sec":$genRate,"gen_csv_rps":$csvRate,"gen_reps":$genRepsJson,"csv_reps":$csvRepsJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$fullQs,"queries_med":$fullMeds,"sf":"$sfDir","gen_rows":$genRows,"gen_sec":$genSec,"gen_rows_per_sec":$genRate,"gen_csv_rps":$csvRate,"gen_reps":$genRepsJson,"csv_reps":$csvRepsJson}"""
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_FULL.json"),
@@ -315,132 +211,20 @@ object Bench {
     System.out.flush()
   }
 
-  /** The fixed IO calibration workload: write a ~250 MB high-entropy
-    * parquet (md5 hex payloads — random hex defeats snappy, so the file
-    * size is stable by construction) to the bench tmpdir, then read it
-    * back through a full-column aggregate. Prices the page-cache/disk
-    * axis the CPU probe cannot see: round-14 closure run #3 read +7%
-    * total on a CPU-probe-quiet host, which pinned the blind spot this
-    * probe closes. Envelope alongside the CPU probe's in SCALE.md
-    * §"Calibration probe".
-    */
-  def probeIoOnce(spark: SparkSession): Double = {
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft_probe_io").getAbsolutePath
-    val t0 = System.nanoTime()
-    spark.range(0, 4000000L, 1, 8)
-      .selectExpr("id", "md5(cast(id as string)) as h1",
-        "md5(cast(id * 2654435761 as string)) as h2")
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
-      .selectExpr("sum(length(h1) + length(h2))").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** The fixed calibration workload: 4M rows hashed into 100k groups
-    * through a `parts`-partition shuffle, noop sink. Constant by
-    * construction (no input tables, no disk), so its wall time prices the
-    * HOST, not the inventory — the steady-state envelope is pinned in
-    * SCALE.md §"Calibration probe".
-    */
-  def probeOnce(spark: SparkSession, parts: Int): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0, 4000000L, 1, parts)
-      .selectExpr("id % 100000 as k")
-      .groupBy("k").count()
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Self-label the run's host window from its own probe stamps
-    * (round 20; VERDICT r19 #4): every consumer of a BENCH artifact was
-    * re-deriving "was this window quiet?" from the raw stamps — the
-    * r19 driver artifact was ambient-elevated and its +26% total could
-    * only be adjudicated by reading probe_sec/probe_io_sec against the
-    * SCALE.md §"Calibration probe" bands by hand. This is that reading
-    * as a pure function of the existing stamps (NO timed-path change):
-    *
-    *   elevated  — ANY stamp above its band top (CPU > 0.47 s,
-    *               IO > 1.85 s): part of the run landed in a host
-    *               window; the total is an upper bound (the r19 driver
-    *               artifact: CPU 0.42/0.43/0.62, IO 1.6/1.9/2.5).
-    *   sub-floor — no stamp above top AND a series' MEDIAN below its
-    *               band floor (CPU < 0.29, IO < 1.27): quieter than
-    *               the calibration envelope; per the round-19 SCALE.md
-    *               rule the total UNDERSHOOTS the quiet bracket and
-    *               must not be read as an engine speedup (the 78.59 s
-    *               run: CPU 0.30/0.23/0.25). Median, not min: a single
-    *               sub-floor reading is sampling wobble (the in-band
-    *               90.05 s run carried one IO stamp at 1.16), a
-    *               sub-floor MAJORITY is a genuinely undercut window.
-    *   in-band   — everything else: certified-quiet comparison basis.
-    *
-    * Bands are the all-time calibration envelope (SCALE.md
-    * §"Calibration probe", re-pinned r15/r17): CPU 0.29–0.47 s,
-    * IO 1.27–1.85 s. Stamps of -1/absent are ignored; no stamps at
-    * all → "unknown".
-    */
-  def windowOf(probeSec: Seq[Double], probeIoSec: Seq[Double]): String = {
-    val (cpuLo, cpuHi) = (0.29, 0.47)
-    val (ioLo, ioHi) = (1.27, 1.85)
-    val cpu = probeSec.filter(_ > 0)
-    val io = probeIoSec.filter(_ > 0)
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    if (cpu.isEmpty && io.isEmpty) "unknown"
-    else if (cpu.exists(_ > cpuHi) || io.exists(_ > ioHi)) "elevated"
-    else if ((cpu.nonEmpty && median(cpu) < cpuLo) ||
-             (io.nonEmpty && median(io) < ioLo)) "sub-floor"
-    else "in-band"
-  }
-
-  /** 1-minute loadavg, -1.0 if unreadable (non-Linux). */
-  def readLoadavg(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8).split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** (sectorsRead, sectorsWritten) summed over whole physical devices in
-    * /proc/diskstats (partitions, loop/ram devices, and md/dm mapper
-    * devices excluded — mapper devices re-count I/O that already appears
-    * on their member sd/vd/nvme disks, so counting physical devices only
-    * is what avoids double-counting on LVM/RAID/crypt hosts; round-15
-    * ADVICE). (-1,-1) if unreadable.
-    */
-  def readDiskSectors(): (Long, Long) =
-    try {
-      val dev = "^(sd[a-z]+|vd[a-z]+|xvd[a-z]+|hd[a-z]+|nvme\\d+n\\d+)$".r
-      val src = scala.io.Source.fromFile("/proc/diskstats")
-      try src.getLines()
-        .map(_.trim.split("\\s+"))
-        .filter(f => f.length >= 14 && dev.findFirstIn(f(2)).isDefined)
-        .foldLeft((0L, 0L)) { case ((r, w), f) => (r + f(5).toLong, w + f(9).toLong) }
-      finally src.close()
-    } catch { case _: Throwable => (-1L, -1L) }
-
   /** One-line JSON under the driver's 2000-char tail window (minus sbt's
     * epilogue): 2-significant-digit seconds per query, numeric sf.
     * InventorySpec's bench-line test pins the budget as the inventory grows.
     */
   def renderLine(results: Seq[(String, Double)], total: Double, sfNum: String,
                  genRows: Long, genSec: Double, genRate: Long,
-                 csvRate: Long = -1L, cpus: Int = -1,
-                 probeSec: Seq[Double] = Nil,
-                 probeIoSec: Seq[Double] = Nil,
-                 window: String = ""): String = {
+                 csvRate: Long = -1L, cpus: Int = -1): String = {
     import java.util.Locale.ROOT
     val budget = 1870 // 2000-char driver tail minus sbt epilogue + slack
-    val probeField =
-      (if (window.isEmpty) "" else s""","window":"$window"""") +
-      (if (probeSec.isEmpty) ""
-       else s""","probe_sec":${probeSec.map("%.2g".formatLocal(ROOT, _)).mkString("[", ",", "]")}""") +
-      (if (probeIoSec.isEmpty) ""
-       else s""","probe_io_sec":${probeIoSec.map("%.2g".formatLocal(ROOT, _)).mkString("[", ",", "]")}""")
     def render(entries: Seq[(String, Double)], omitted: Int): String = {
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + "%.2g".formatLocal(ROOT, v) }
         .mkString("{", ",", "}")
       val omitField = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${"%.4g".formatLocal(ROOT, total)},"unit":"sec","cpus":$cpus$probeField,"queries":$qs$omitField,"sf":$sfNum,"gen_rows":$genRows,"gen_sec":${"%.3g".formatLocal(ROOT, genSec)},"gen_rows_per_sec":$genRate,"gen_csv_rps":$csvRate}"""
+      s"""{"metric":"total","value":${"%.4g".formatLocal(ROOT, total)},"unit":"sec","cpus":$cpus,"queries":$qs$omitField,"sf":$sfNum,"gen_rows":$genRows,"gen_sec":${"%.3g".formatLocal(ROOT, genSec)},"gen_rows_per_sec":$genRate,"gen_csv_rps":$csvRate}"""
     }
     val full = render(results, 0)
     if (full.length <= budget) full

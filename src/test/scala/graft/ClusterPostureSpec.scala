@@ -54,7 +54,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ("localhost") never matches the loopback executor hosts.
   *
   * Representative inventory queries (one per heavy operator family) are
-  * fingerprint-compared against a vanilla local[4] truth pass: same
+  * [[Digest]]-compared against a vanilla local[4] truth pass: same
   * plans, now with cross-process shuffle fetches, executor-side parquet
   * commits, and broadcast over RPC.
   */
@@ -73,15 +73,10 @@ class ClusterPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q_graph_pagerank", "q_sink_rangeparts", "q_pipeline_e2e",
     "q_agg_collect")
 
-  private def fingerprint(s: SparkSession, name: String): (Long, Long) = {
-    val df = SparkEntry.queries(name)(s, sf)
-    val n = df.count()
-    val cols = df.columns.map(c => col(c).cast("string")).toSeq
-    val h = df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).head()
-    (n, if (h.isNullAt(0)) 0L else h.getLong(0))
-  }
+  private def digest(s: SparkSession, name: String): Digest =
+    Digest.of(SparkEntry.queries(name)(s, sf))
 
-  private lazy val truth: Map[String, (Long, Long)] = {
+  private lazy val truth: Map[String, Digest] = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     val vanilla = SparkSession.builder()
@@ -91,7 +86,7 @@ class ClusterPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    val fps = representative.map(n => n -> fingerprint(vanilla, n)).toMap
+    val fps = representative.map(n => n -> digest(vanilla, n)).toMap
     vanilla.stop()
     fps
   }
@@ -233,7 +228,7 @@ class ClusterPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   for (name <- representative) {
     test(s"$name is bit-identical across the process boundary") {
-      assert(truth(name) == fingerprint(spark, name),
+      assert(truth(name) == digest(spark, name),
         s"$name diverged between local[4] and local-cluster")
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Turns SCALE.md §"Cross-engine float policy"'s cluster-stability CLAIM
@@ -28,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    cluster shuffle.partitions is in the thousands, so result =
   *    f(partition count) IS a wrong-result bug even when every fixed-
   *    partitioning gate is green. Each query's order-insensitive
-  *    fingerprint must be bit-identical between the suite's default
+  *    [[Digest]] must be bit-identical between the suite's default
   *    layout (4 shuffle partitions, packed scans) and an adversarial one
   *    (13 shuffle partitions, scans split at 64 KB) — different shuffle
   *    fan-out, different scan split boundaries, different reduce-side
@@ -67,7 +66,7 @@ class DeterminismAuditSpec extends AnyFunSuite {
       s"nondeterministic expressions outside the allowlist:\n${offenders.distinct.mkString("\n")}")
   }
 
-  private def withSqlConfs(confs: (String, String)*)(body: => (Long, Long)): (Long, Long) = {
+  private def withSqlConfs(confs: (String, String)*)(body: => Digest): Digest = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -77,22 +76,17 @@ class DeterminismAuditSpec extends AnyFunSuite {
     }
   }
 
-  private def fingerprint(name: String): (Long, Long) = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    val n = df.count()
-    val cols = df.columns.map(c => col(c).cast("string")).toSeq
-    val h = df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).head()
-    (n, if (h.isNullAt(0)) 0L else h.getLong(0))
-  }
+  private def digest(name: String): Digest =
+    Digest.of(SparkEntry.queries(name)(spark, sf))
 
   for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name result is invariant to partition layout and plan family") {
       val a = withSqlConfs(
-        "spark.sql.shuffle.partitions" -> "4")(fingerprint(name))
+        "spark.sql.shuffle.partitions" -> "4")(digest(name))
       val b = withSqlConfs(
         "spark.sql.shuffle.partitions" -> "13",
         "spark.sql.files.maxPartitionBytes" -> "65536",
-        "spark.sql.files.openCostInBytes" -> "16384")(fingerprint(name))
+        "spark.sql.files.openCostInBytes" -> "16384")(digest(name))
       // Third axis — a different PHYSICAL PLAN FAMILY: the suite (like
       // Spark 4 defaults) runs everything under AQE, so coalesced
       // shuffle reads and runtime auto-broadcasts are the only world
@@ -104,7 +98,7 @@ class DeterminismAuditSpec extends AnyFunSuite {
       // the auto decision.)
       val c = withSqlConfs(
         "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(fingerprint(name))
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(digest(name))
       // same hygiene as InventorySpec: drop cache/localCheckpoint blocks
       // accumulated by the executions before the next query's triple
       spark.catalog.clearCache()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Inventory-wide contract checks at sf0.001: every query runs, every
   * query has an oracle, re-running a query is deterministic (same
-  * fingerprint), and the flagship entry returns rows — the fast local
+  * [[Digest]]), and the flagship entry returns rows — the fast local
   * guard for the driver's full DuckDB gate.
   */
 class InventorySpec extends AnyFunSuite {
@@ -22,30 +22,6 @@ class InventorySpec extends AnyFunSuite {
 
   test("every query has an oracle and every oracle has a query") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
-  }
-
-  test("host-state probes read sane values (calibration stamps cannot silently go -1)") {
-    // the round-14 bench artifact fields are only useful if they carry
-    // real readings on this platform; a parse regression would quietly
-    // stamp -1 and the window-vs-regression rule would stop working
-    assert(Bench.readLoadavg() >= 0.0, "loadavg unreadable on Linux")
-    val (r1, w1) = Bench.readDiskSectors()
-    assert(r1 > 0 && w1 > 0, s"diskstats sectors unreadable: ($r1, $w1)")
-    val (r2, w2) = Bench.readDiskSectors()
-    assert(r2 >= r1 && w2 >= w1, "sector counters must be monotonic")
-    val probe = Bench.probeOnce(spark, 4)
-    assert(probe > 0 && probe < 60, s"calibration probe wall $probe out of range")
-    // round 15: the IO probe must also read sane (and actually write —
-    // a silently-empty write would price the page cache, not the disk)
-    val io = Bench.probeIoOnce(spark)
-    assert(io > 0 && io < 120, s"IO probe wall $io out of range")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_probe_io")
-    def du(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-    val bytes = du(dir)
-    assert(bytes > 150e6, s"IO probe parquet only $bytes bytes — " +
-      "high-entropy payload no longer defeats compression")
   }
 
   test("flagship entry returns rows") {
@@ -134,46 +110,19 @@ class InventorySpec extends AnyFunSuite {
     // renderLine must degrade to the slowest-N subset, never overflow
     for (vals <- Seq(names.map(_ -> 0.28), names.map(_ -> 0.00098),
                      names.map(_ -> -1.0))) {
-      // "sub-floor" is the widest window label the line can carry
       val line = Bench.renderLine(vals, 123.4567, "0.1", 10000000L, 0.323, 30925774L,
-        1684511L, 32, Seq(0.0998, 0.1234, 0.0987), Nil, "sub-floor")
+        1684511L, 32)
       assert(line.length <= 1870, s"bench line ${line.length} chars > 1870 budget")
       assert(line.count(_ == '{') == line.count(_ == '}'))
       assert(line.contains("\"metric\":\"total\"") && line.contains("\"gen_rows_per_sec\""))
-      assert(line.contains("\"window\":\"sub-floor\""))
     }
-  }
-
-  test("bench window self-label reproduces the round-19 adjudications from the stamps alone") {
-    // the three recorded round-19 windows, classified exactly as the
-    // r19 VERDICT adjudicated them by hand (VERDICT r19 #4); bands =
-    // SCALE.md §"Calibration probe" (CPU 0.29–0.47, IO 1.27–1.85)
-    assert(Bench.windowOf(Seq(0.42, 0.43, 0.62), Seq(1.6, 1.9, 2.5)) == "elevated",
-      "the r19 driver artifact's stamps must read elevated")
-    assert(Bench.windowOf(Seq(0.30, 0.41, 0.36), Seq(1.16, 1.59, 1.28)) == "in-band",
-      "one sub-floor IO stamp is wobble, not an undercut window (the 90.05 s run)")
-    assert(Bench.windowOf(Seq(0.30, 0.23, 0.25), Seq(1.3, 1.2, 1.2)) == "sub-floor",
-      "a sub-floor stamp majority must read sub-floor (the 78.59 s run)")
-    // edge handling: elevated wins over sub-floor; failed stamps ignored
-    assert(Bench.windowOf(Seq(0.20, 0.20, 0.60), Seq(1.5, 1.5, 1.5)) == "elevated")
-    assert(Bench.windowOf(Seq(-1.0, -1.0, -1.0), Nil) == "unknown")
-    assert(Bench.windowOf(Seq(0.35, -1.0, 0.40), Seq(1.5, 1.6, 1.7)) == "in-band")
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs and is re-run deterministic") {
-      import org.apache.spark.sql.functions._
-      def fingerprint(): (Long, Long) = {
-        val df = fn(spark, sf)
-        val n = df.count()
-        val cols = df.columns.map(c => col(c).cast("string")).toSeq
-        val h = df.select(xxhash64(cols: _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
-        (n, if (h.isNullAt(0)) 0L else h.getLong(0))
-      }
-      val a = fingerprint()
-      val b = fingerprint()
-      // release per query: 158 x 2 executions otherwise accumulate
+      val a = Digest.of(fn(spark, sf))
+      val b = Digest.of(fn(spark, sf))
+      // release per query: 208 x 2 executions otherwise accumulate
       // localCheckpoint blocks in this JVM (same hygiene as
       // Bench.releaseState and the PlanAuditSpec window audit)
       spark.catalog.clearCache()

@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * crossed its in-memory bound. No fixed-memory gate can see that —
   * only actually forcing the spill paths can.
   *
-  * Three fingerprints per query, all at sf0.001:
+  * Three [[Digest]]s per query, all at sf0.001:
   *
   *  1. **Truth** — a vanilla `local[4]` session, nothing forced (the
   *     same conditions every other gate runs under).
@@ -54,17 +53,12 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def fingerprint(spark: SparkSession, name: String): (Long, Long) = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    val n = df.count()
-    val cols = df.columns.map(c => col(c).cast("string")).toSeq
-    val h = df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).head()
-    (n, if (h.isNullAt(0)) 0L else h.getLong(0))
-  }
+  private def digest(spark: SparkSession, name: String): Digest =
+    Digest.of(SparkEntry.queries(name)(spark, sf))
 
   /** Truth pass: vanilla session, computed once on first access, then
     * stopped so the pressured context can be built. */
-  private lazy val truth: Map[String, (Long, Long)] = {
+  private lazy val truth: Map[String, Digest] = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     val vanilla = SparkSession.builder()
@@ -75,7 +69,7 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     val fps = SparkEntry.queries.keys.toSeq.sorted
-      .map(n => n -> fingerprint(vanilla, n)).toMap
+      .map(n => n -> digest(vanilla, n)).toMap
     vanilla.stop()
     fps
   }
@@ -135,7 +129,7 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
     "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "1000, 3000",
   )
 
-  private def withSqlConfs(confs: (String, String)*)(body: => (Long, Long)): (Long, Long) = {
+  private def withSqlConfs(confs: (String, String)*)(body: => Digest): Digest = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -156,8 +150,8 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
       // attribute to THIS query, not whichever test reads the counter next
       org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
       val diskBefore = spilledDisk.get()
-      val sorterPressure = fingerprint(spark, name)
-      val bufferPressured = withSqlConfs(bufferPressure: _*)(fingerprint(spark, name))
+      val sorterPressure = digest(spark, name)
+      val bufferPressured = withSqlConfs(bufferPressure: _*)(digest(spark, name))
       org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
       if (spilledDisk.get() > diskBefore) spilledQueries += name
       spark.catalog.clearCache()

@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.shuffle.graft.FaultyShuffleManager
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,7 +33,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tasks can. Axis 1 also exercises the sink commit protocol: the
   * q_sink_* queries write real files through FileOutputCommitter with
   * their write tasks' first attempts dying, so a leaked partial
-  * attempt-0 output would double rows and flip the fingerprint.
+  * attempt-0 output would double rows and change the [[Digest]].
   *
   * The suite needs its own SparkContext (maxFailures is baked into the
   * `local[N,F]` master at construction; every other suite runs
@@ -66,13 +65,8 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   private val cleanSf  = "/root/testdata/sf0.001"
   private val faultySf = "faulty:///root/testdata/sf0.001"
 
-  private def fingerprint(name: String, sf: String): (Long, Long) = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    val n = df.count()
-    val cols = df.columns.map(c => col(c).cast("string")).toSeq
-    val h = df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).head()
-    (n, if (h.isNullAt(0)) 0L else h.getLong(0))
-  }
+  private def digest(name: String, sf: String): Digest =
+    Digest.of(SparkEntry.queries(name)(spark, sf))
 
   // Queries whose inputs never touch the faulty dir (pure generators,
   // or generate→/tmp-scratch→read round-trips) see no open() injection
@@ -89,18 +83,20 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name survives first-attempt failure and map-output loss bit-identically") {
-      val clean = fingerprint(name, cleanSf)
+      val clean = digest(name, cleanSf)
       val before = FaultyFileSystem.injected.get()
-      val faulty = fingerprint(name, faultySf)
+      // the faulty leg runs twice: each execution's first attempts fail
+      // afresh, and both must equal the clean digest
+      val faulty = Seq.fill(2)(digest(name, faultySf))
       val openHits = FaultyFileSystem.injected.get() - before
       val beforeFetch = FaultyShuffleManager.injected.get()
-      val refetched = FaultyShuffleManager.armedDuring(fingerprint(name, cleanSf))
+      val refetched = FaultyShuffleManager.armedDuring(digest(name, cleanSf))
       val fetchHits = FaultyShuffleManager.injected.get() - beforeFetch
       if (fetchHits == 0) zeroShuffle += name
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      assert(clean == faulty,
-        s"$name result changed under injected task retries: clean=$clean faulty=$faulty")
+      assert(faulty.forall(_ == clean),
+        s"$name result changed under injected task retries: clean=$clean faulty=${faulty.mkString(", ")}")
       assert(clean == refetched,
         s"$name result changed under injected map-output loss: clean=$clean refetched=$refetched")
       if (!fileFree(name))
@@ -112,6 +108,7 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("injection volume is structural, not incidental") {
     val opens = FaultyFileSystem.injected.get()
     val fetches = FaultyShuffleManager.injected.get()
+    info(s"injected: opens=$opens, fetches=$fetches, zero-shuffle queries=${zeroShuffle.size}")
     assert(opens > 500,
       s"only $opens injected first-attempt open failures across the inventory")
     assert(fetches > 150,
