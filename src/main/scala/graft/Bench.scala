@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
   * plus the Tier A generator's throughput, printing one JSON line.
   * The stdout line (the driver's parse target) reports per-query MINs;
@@ -30,19 +28,8 @@ object Bench {
     // Parsed eagerly: a malformed value must abort here, not interpolate
     // unquoted garbage into BENCH_FULL.json.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // uniform engine posture for every query in the run: the TopK
-    // rewrite is registered up front (not leaked mid-run by whichever
-    // query happens to register it first), so measured plans don't
-    // depend on execution order
-    graft.plans.TopKRewriteRule.register(spark)
 
     // Warm-up: run the whole inventory once at the smallest SF; fall
     // back to the bench dir itself when sf0.001 is absent. Failures are

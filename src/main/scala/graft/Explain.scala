@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan (and codegen
   * availability) for a query from the inventory or a generator spec.
   *
@@ -14,13 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(4)
     spark.sparkContext.setLogLevel("WARN")
     val (mode, target) =
       if (args(0).startsWith("codegen:")) ("codegen", args(0).stripPrefix("codegen:"))

@@ -5,21 +5,18 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.gen.{CmsEstimateExpr, ColMeansDExpr, DecUnscaledExpr, L2SqDExpr, L2SqFdExpr, LongSetAgg, Md5Hash60Expr, MinHashSigsExpr, NgramHashesExpr, PairsGenExpr, PqAdcExpr, PqCodesExpr, PqDmExpr, RandStringExpr, ShingleGenExpr, ShingleHashesExpr, Sum128Agg, TokNgramsGenExpr, TriPackGenExpr, TriUnpackExpr}
 
-/** SQL-surface registration for the engine's native expressions, so
-  * `spark.sql` users can call them without the Scala API:
+/** The engine posture every session that runs the inventory gets: the
+  * 23 `graft_*` functions in [[GraftExtensions.builders]] (generators,
+  * vector folds, sketches, hashes and the 128-bit decimal sums), the
+  * [[graft.plans.TopKPerGroupStrategy]] planner strategy and the
+  * [[graft.plans.TopKRewriteRule]] optimizer rule.
   *
-  *   graft_rand_string(id, seedMix, len, alphabet, lenDraw)
-  *   graft_minhash_sigs(text, shingleLen, numHashes)
-  *   graft_ngram_hashes(text, n)
-  *   graft_md5_60(str)
-  *   graft_cms_estimate(sketch, key)
-  *
-  * Two registration paths:
-  *  - config: `spark.sql.extensions=graft.GraftExtensions` (cluster-wide,
-  *    injected at session build);
-  *  - runtime: `GraftExtensions.register(spark)` (temp functions on an
-  *    existing session — what the tests use, since test suites share
-  *    one JVM session).
+  * Two install paths, the same three parts:
+  *  - config: `spark.sql.extensions=graft.GraftExtensions` (injected at
+  *    session build);
+  *  - runtime: `GraftExtensions.register(spark)` on an existing session.
+  *    It is idempotent, and `SparkEntry.queries` calls it before every
+  *    build, so any session handed to the inventory gets the posture.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -90,10 +87,15 @@ object GraftExtensions {
       TokNgramsGenExpr(exprs(0), litInt(exprs(1)), 1, distinct = true) },
   )
 
-  /** Runtime registration on an existing session (temp functions). */
-  def register(spark: SparkSession): Unit =
+  /** Runtime install on an existing session: what the config path
+    * injects. A function that already exists is kept, not replaced.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    graft.plans.TopKRewriteRule.register(spark) // and its strategy
+  }
 }

@@ -14,9 +14,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_pricing")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** The session every main runs on: `local[cores]`, one shuffle
+    * partition per core, UTC, Parquet nanosecond timestamps read as
+    * longs, no UI. Sets confs only; the engine posture comes with
+    * [[queries]].
+    */
+  def localSession(cores: Int): SparkSession = SparkSession.builder()
+    .master(s"local[$cores]")
+    .config("spark.sql.shuffle.partitions", cores)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** One entry per implemented operator from SURVEY.md §2. Each build
+    * first installs the engine posture ([[GraftExtensions.register]]) on
+    * the session it is given, so a plan never depends on which query
+    * that session built first.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.RelationalQueries.queries ++
+    (operators.RelationalQueries.queries ++
       operators.ScalarQueries.queries ++
       operators.TimeWindowQueries.queries ++
       operators.DedupQueries.queries ++
@@ -26,7 +43,9 @@ object SparkEntry {
       operators.MultimodalQueries.queries ++
       operators.SourceQueries.queries ++
       operators.PipelineQueries.queries ++
-      operators.SqlQueries.queries
+      operators.SqlQueries.queries).map { case (name, build) =>
+      name -> ((s: SparkSession, d: String) => { GraftExtensions.register(s); build(s, d) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

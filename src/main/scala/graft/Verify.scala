@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DecimalType
 import java.nio.file.{Files, Paths}
@@ -35,28 +35,10 @@ object Verify {
   }
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // uniform engine posture for every query in the run: the TopK
-    // rewrite is registered up front (not leaked mid-run by whichever
-    // query happens to register it first), so measured plans don't
-    // depend on execution order
-    graft.plans.TopKRewriteRule.register(spark)
     new java.io.File(outDir).mkdirs()
-    // dev-loop subset: GRAFT_VERIFY_ONLY=q_a,q_b re-checks just the
-    // named queries; the driver never sets it, so its runs stay full
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try sanitize(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

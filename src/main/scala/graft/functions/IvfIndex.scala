@@ -593,18 +593,22 @@ object IvfIndex {
     while (!fs.exists(target)) {
       val midSwap = fs.exists(old) || fs.exists(tmp)
       tried += 1
-      if (!midSwap)
+      // a swap that closes between the two probes leaves no markers and
+      // the store back in place: probe the store again before failing
+      if (!midSwap && !fs.exists(target))
         throw new IllegalStateException(
           s"inverted store not found at $path (and no maintain-swap markers " +
             "present — this is a missing store, not a swap in progress)")
-      if (tried >= attempts)
-        throw new IllegalStateException(
-          s"inverted store missing at $path with $path.maintain.old present " +
-            s"after $attempts checks — a maintain died between its two renames; " +
-            "the original store is intact at the .maintain.old path: run " +
-            "IvfIndex.maintain(spark, path) from the ingest owner to " +
-            "auto-restore it, or rename the directory back by hand")
-      Thread.sleep(waitMs)
+      if (midSwap) {
+        if (tried >= attempts)
+          throw new IllegalStateException(
+            s"inverted store missing at $path with $path.maintain.old present " +
+              s"after $attempts checks — a maintain died between its two renames; " +
+              "the original store is intact at the .maintain.old path: run " +
+              "IvfIndex.maintain(spark, path) from the ingest owner to " +
+              "auto-restore it, or rename the directory back by hand")
+        Thread.sleep(waitMs)
+      }
     }
     spark.read.parquet(path).withColumn("cell", col("cell").cast("long"))
   }
@@ -999,7 +1003,8 @@ object IvfIndex {
   }
 
   /** Candidate join + exact-cosine rank through the bounded-heap top-k
-    * (strategy registration is idempotent — the TextQueries idiom).
+    * (this library path need not go through SparkEntry.queries, so it
+    * installs the strategy itself; the install is idempotent).
     */
   private def rankCandidates(probedCells: DataFrame, inverted: DataFrame,
                              topK: Int, broadcastQueries: Boolean,

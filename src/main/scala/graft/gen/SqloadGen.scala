@@ -111,12 +111,7 @@ object SqloadGen {
       if (args.length >= 2) (args(0).toLong, args(1))
       else (100000L, "int,varchar(50),double,date,bigint") // default run (:358-360)
     val out = if (args.length >= 3) args(2) else "/tmp/sqload_out"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try writeCsvText(table(spark, spec, rows), out)
     catch {
       case e: SpecParseException => System.err.println(e.msg); sys.exit(1)

@@ -439,7 +439,6 @@ object DedupQueries {
     // key here rather than probing a broadcast set (contrast
     // q_decontaminate, where the probe side is a bounded benchmark).
     "q_dedup_boilerplate" -> ((s, d) => {
-      graft.GraftExtensions.register(s)
       // round 21: the non-overlapping 3-token chunks stream through
       // TokNgramsGenExpr at step 3 with its window ordinal standing in
       // for posexplode's pos (size div 3 windows either way —
@@ -556,7 +555,6 @@ object DedupQueries {
       // graft_shingle_hashes — same slices, same 60-bit md5, same
       // double first-occurrence distinct (ExtensionsSpec pins it
       // against the transform/array_distinct chain it replaces)
-      graft.GraftExtensions.register(s)
       val hsd = expr(
         s"graft_shingle_hashes(text, ${LshBanding.ShingleLen}, ${graft.gen.MinHashImpl.P}L)")
       val base = documents(s, d)

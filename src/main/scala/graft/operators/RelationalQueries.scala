@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.Tables._
 
 /** Core relational operator inventory: scans, filters, aggregations,
@@ -123,11 +124,13 @@ object RelationalQueries {
     // unboxed-long LongSetAgg — same sorted-distinct arrays, same
     // ObjectHashAggregate pathway (ExtensionsSpec pins equality incl.
     // nulls/dups/all-null groups); the win is the per-row boxed-set
-    // insert (measured 0.82 → 0.60 s on this subtree at sf0.1).
-    graft.GraftExtensions.register(s)
+    // insert (measured 0.82 → 0.60 s on this subtree at sf0.1). Built
+    // as an expression, not by name: GraphPass reaches this helper on
+    // sessions that never went through SparkEntry.queries.
     lineitem(s, d)
       .groupBy(col("l_orderkey").as("o"))
-      .agg(expr("graft_collect_sorted_set(l_partkey)").as("ps"))
+      .agg(ColumnBridge.column(graft.gen.LongSetAgg(
+        ColumnBridge.expression(col("l_partkey"))).toAggregateExpression()).as("ps"))
   }
 
   /** Row-local pair expansions over a sorted-array column — the lambda
@@ -167,10 +170,11 @@ object RelationalQueries {
     // order (GraphSpec pins generator ≡ lambda ≡ brute force), no
     // per-basket nested array-of-structs materialization. Plan shape
     // is untouched (Generate replaces Generate; still one scan, two
-    // keyed shuffles, no join — the PlanAuditSpec pin).
-    graft.GraftExtensions.register(s)
+    // keyed shuffles, no join — the PlanAuditSpec pin). Built as an
+    // expression for the reason given at coBaskets.
     coBaskets(s, d)
-      .select(expr("graft_pairs(ps)").as(Seq("a", "b")))
+      .select(ColumnBridge.column(
+        graft.gen.PairsGenExpr(ColumnBridge.expression(col("ps")), directed = false)).as(Seq("a", "b")))
       .groupBy("a", "b").agg(count(lit(1)).as("support"))
       .filter(col("support") >= 2)
       .select("a", "b")
@@ -524,7 +528,6 @@ object RelationalQueries {
     // semantics (and oracle) as q_window_rank, which deliberately
     // stays on Spark's window exec for coverage.
     "q_topk_group" -> ((s, d) => {
-      graft.plans.TopKRewriteRule.register(s)
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       orders(s, d).select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
@@ -565,7 +568,6 @@ object RelationalQueries {
           // conv(substr(md5(x),1,15),16,10) and the oracle's
           // ('0x'||substr(md5(x),1,15))::BIGINT, minus the per-row hex
           // string + radix parse
-          import org.apache.spark.sql.graft.ColumnBridge
           ColumnBridge.column(graft.gen.Md5Hash60Expr(ColumnBridge.expression(
             concat_ws("|", col("l_orderkey"), col("l_linenumber")))))
         })
@@ -978,7 +980,6 @@ object RelationalQueries {
     // difference between shuffling the full fact table and shuffling
     // the ~1% that can match.
     "q_join_bloom" -> ((s, d) => {
-      import org.apache.spark.sql.graft.ColumnBridge
       def hot = orders(s, d).filter(col("o_totalprice") > 400000)
         .select(col("o_orderkey"))
       val expectedItems = s.conf.get(
@@ -1011,7 +1012,6 @@ object RelationalQueries {
     // confidence — deterministic here given the fixed seed, verified
     // at every test SF.
     "q_agg_cms" -> ((s, d) => {
-      import org.apache.spark.sql.graft.ColumnBridge
       def est(sk: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column) =
         ColumnBridge.column(graft.gen.CmsEstimateExpr(
           ColumnBridge.expression(sk), ColumnBridge.expression(key)))
@@ -1174,7 +1174,6 @@ object RelationalQueries {
     // filter ahead of the aggregate — no shuffle until the (tiny)
     // grouped result.
     "q_sample_stratified" -> ((s, d) => {
-      import org.apache.spark.sql.graft.ColumnBridge
       val hkey = ColumnBridge.column(graft.gen.Md5Hash60Expr(ColumnBridge.expression(
         concat_ws("|", col("l_orderkey"), col("l_linenumber")))))
       lineitem(s, d)
@@ -1216,7 +1215,6 @@ object RelationalQueries {
     // bounded per-group heaps map-side, so at 100 TB the shuffle
     // carries ≤ k rows per group per partition, never the full table.
     "q_sample_group" -> ((s, d) => {
-      import org.apache.spark.sql.graft.ColumnBridge
       val hkey = ColumnBridge.column(graft.gen.Md5Hash60Expr(ColumnBridge.expression(
         col("o_orderkey").cast("string"))))
       val w = Window.partitionBy("o_orderpriority").orderBy(col("hkey"), col("o_orderkey"))
@@ -1407,7 +1405,6 @@ object RelationalQueries {
     // back, and the filter is row-local: one scan + one tiny aggregate
     // at any scale (q_sample_stratified is the fixed-rate cousin).
     "q_sample_balanced" -> ((s, d) => {
-      import org.apache.spark.sql.graft.ColumnBridge
       val counts = lineitem(s, d).groupBy("l_returnflag")
         .agg(count(lit(1)).as("cnt"))
       val minC = counts.agg(min(col("cnt")).as("mc"))
@@ -1476,7 +1473,6 @@ object RelationalQueries {
     // diverge cross-engine). Scale: stateless map-side filter against
     // a broadcast 1-row max — same posture as q_sample_hash.
     "q_sample_weighted" -> ((s, d) => {
-      import org.apache.spark.sql.graft.ColumnBridge
       val mx = lineitem(s, d).agg(max(col("l_extendedprice")).as("mx"))
       val u = ColumnBridge.column(graft.gen.Md5Hash60Expr(ColumnBridge.expression(
         concat_ws("|", col("l_orderkey"), col("l_linenumber")))))
@@ -1668,7 +1664,6 @@ object RelationalQueries {
       val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
       // round 21: directed pairs stream through the Generator (see
       // coPurchaseEdges — same swap, same GraphSpec equivalence pin)
-      graft.GraftExtensions.register(s)
       val pairs = baskets.select(expr("graft_pairs_all(ps)").as(Seq("a", "b")))
         .groupBy("a", "b")
         .agg(count(lit(1)).as("sab"))

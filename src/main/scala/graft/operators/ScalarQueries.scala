@@ -129,7 +129,6 @@ object ScalarQueries {
     // array per document (contrast q_explode_pos, the built-in
     // array+posexplode route). Registered via GraftExtensions.
     "q_shingle_gen" -> ((s, d) => {
-      graft.GraftExtensions.register(s)
       documents(s, d)
         .filter(col("doc_id") < 5)
         .select(col("doc_id"), expr("graft_shingles(text, 5)").as(Seq("pos", "shingle")))

@@ -329,7 +329,6 @@ object SimilarityQueries {
       // ascending IEEE op order as the lambda forms (bit-exact;
       // ExtensionsSpec pins), so the hashable raw distances are
       // unchanged.
-      graft.GraftExtensions.register(s)
       val e = embeddings(s, d)
       val cents = e.groupBy("label")
         .agg(array_sort(collect_list(struct(col("vec_id"),
@@ -361,7 +360,6 @@ object SimilarityQueries {
       // run as the codegen'd graft_pq_* expressions — same ascending
       // fold order and first-occurrence argmin as the lambda forms
       // they replace (bit-exact; ExtensionsSpec pins all three).
-      graft.GraftExtensions.register(s)
       val e = embeddings(s, d)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -592,7 +590,6 @@ object SimilarityQueries {
       // pins both against the HOF forms), compiled. assign previously
       // paid |cents|·64 interpreted lambda steps per vector, update
       // 64·|docs| per cell.
-      graft.GraftExtensions.register(s)
       val e = embeddings(s, d)
         .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
       val init = e.filter(col("vec_id") >= NumQueries && col("vec_id") < NumQueries + NCentroids)
@@ -649,7 +646,6 @@ object SimilarityQueries {
       // same squared-distance table as q_sim_pq (dimensions fold
       // ascending within each subspace) — round 21: the codegen'd
       // graft_pq_* forms, bit-exact vs the lambdas (q_sim_pq note)
-      graft.GraftExtensions.register(s)
       val dmExpr = expr(s"graft_pq_dm(v, cb, $PqSub, $PqK, $PqDim)")
       val coded = ev.filter(col("vec_id") >= NumQueries).crossJoin(cb)
         .withColumn("dm", dmExpr)
@@ -835,7 +831,6 @@ object SimilarityQueries {
       // round 21: the centroid means and the per-centroid distance
       // folds run as graft_colmeans_d / graft_l2sq_fd — identical
       // ascending IEEE op order (bit-exact, the q_embed_centroid swap)
-      graft.GraftExtensions.register(s)
       val e = embeddings(s, d).filter(col("label").isNotNull)
       val cents = e.groupBy("label")
         .agg(array_sort(collect_list(struct(col("vec_id"),

@@ -15,16 +15,19 @@ object SqlQueries {
 
   /** Temp views are session-global state: namespacing them by sfDir
     * avoids clobbering user views named `orders` etc. and keeps two
-    * scale factors from racing on one session. Returns the name map
-    * to splice into the SQL text.
+    * scale factors from racing on one session. Returns the lookup that
+    * splices a view name into the SQL text; a table's view is made on
+    * its first lookup, so a query reads only the tables it names, each
+    * once.
     */
-  private def withViews(s: SparkSession, d: String): Map[String, String] = {
+  private def withViews(s: SparkSession, d: String): String => String = {
     val sfx = d.replaceAll("[^0-9A-Za-z]", "_")
-    Seq("customer", "orders", "lineitem", "nation").map { t =>
+    val made = scala.collection.mutable.Map.empty[String, String]
+    t => made.getOrElseUpdate(t, {
       val v = s"graft_${t}_$sfx"
       Tables.t(s, d, t).createOrReplaceTempView(v)
-      t -> v
-    }.toMap
+      v
+    })
   }
 
   def queries: Map[String, Q] = Map(

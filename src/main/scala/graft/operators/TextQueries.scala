@@ -71,7 +71,6 @@ object TextQueries {
     // ≤ k·langs·partitions candidate rows instead of window-sorting
     // every distinct word.
     "q_text_topwords" -> ((s, d) => {
-      graft.plans.TopKPerGroupStrategy.register(s)
       val counts = documents(s, d)
         .select(col("lang"), explode(split(col("text"), " ")).as("w"))
         .groupBy("lang", "w").agg(count(lit(1)).as("n"))
@@ -284,7 +283,6 @@ object TextQueries {
     // divide are correctly rounded, so with identical left-to-right
     // association both engines still produce the same bits.
     "q_text_colloc" -> ((s, d) => {
-      graft.GraftExtensions.register(s)
       val toks = documents(s, d)
         .select(split(col("text"), " ").as("t"))
         .filter(size(col("t")) >= 2)
@@ -364,7 +362,6 @@ object TextQueries {
       // per-doc array materialization; measured 16% faster than the
       // codegen'd transform+explode route with an identical trigram
       // multiset
-      graft.GraftExtensions.register(s)
       // round 21: the corpus-sized aggregation keys on the PACKED
       // trigram long (bijective and ORDER-preserving vs the string —
       // TriPackGenExpr scaladoc), so the (lang, tri) exchange carries
@@ -411,7 +408,6 @@ object TextQueries {
       // distinct grams exactly: Σ_occurrences cnt = Σ_distinct c·cnt
       // (integer arithmetic, so the formulation change is invisible to
       // the oracle, which sums over occurrences).
-      graft.GraftExtensions.register(s)
       // round 21: trigrams ride as PACKED longs end-to-end — the
       // trigram string never reaches the output, and the pack is
       // bijective (TriPackGenExpr scaladoc), so both aggregations and
@@ -492,7 +488,6 @@ object TextQueries {
     }),
 
     "q_decontaminate" -> ((s, d) => {
-      graft.GraftExtensions.register(s)
       val toks = documents(s, d)
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("t"))
         .filter(size(col("t")) >= 3)
@@ -534,7 +529,6 @@ object TextQueries {
     // surface (dup_frac = 0) without a join back to the corpus.
     "q_text_dupspans" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.GraftExtensions.register(s)
       // round 21: the 5-gram windows stream through TokNgramsGenExpr
       // (≡ the transform/concat_ws chain — ExtensionsSpec pin)
       val t = documents(s, d)
@@ -590,7 +584,6 @@ object TextQueries {
     // (guarded: Spark sequence(1, 0) DESCENDS, so size < 2 maps to an
     // explicit empty array — DuckDB generate_series is empty there).
     "q_text_repetition" -> ((s, d) => {
-      graft.GraftExtensions.register(s)
       val ft = documents(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "), t => t =!= "").as("ft"))
       val ua = ft.select(col("doc_id"), explode(col("ft")).as("tok"))
@@ -715,7 +708,6 @@ object TextQueries {
       // point semantics, end-clip coincides for len 2 at n >= 2, the
       // guarded case) with no per-token array materialization through
       // the interpreted transform/sequence lambda.
-      graft.GraftExtensions.register(s)
       documents(s, d)
         .select(explode(split(col("text"), " ")).as("tok"))
         .filter(length(col("tok")) >= 2)
@@ -863,7 +855,6 @@ object TextQueries {
     // shuffles (both map-side-combined); top-10 rides TakeOrdered.
     "q_bpe_apply" -> ((s, d) => {
       import org.apache.spark.sql.graft.ColumnBridge
-      graft.GraftExtensions.register(s)
       val toks = documents(s, d).select(explode(split(col("text"), " ")).as("tok"))
       // round 21: pair expansion via graft_shingles(tok, 2) — the
       // q_bpe_pairs swap, same equivalence argument

@@ -607,7 +607,6 @@ object TimeWindowQueries {
     // string; the pattern probes are row-local over |users| rows into
     // one 1-row aggregate, reshaped by stack().
     "q_win_pattern" -> ((s, d) => {
-      graft.plans.TopKRewriteRule.register(s)
       import org.apache.spark.sql.expressions.Window
       val seqs = events(s, d)
         .select(col("user_id"), unix_micros(col("ts")).as("tus"),
@@ -651,7 +650,6 @@ object TimeWindowQueries {
     // burst-size count shares the same (user, type) partitioning.
     // Scale: ONE keyed shuffle; O(1) per-row window state.
     "q_win_debounce" -> ((s, d) => {
-      graft.plans.TopKRewriteRule.register(s)
       import org.apache.spark.sql.expressions.Window
       // 12 h suppression window, single-sourced with the streaming twin
       // (graft.streaming.DebounceStream) so the two forms can never

@@ -17,13 +17,7 @@ import org.apache.spark.sql.graft.ColumnBridge
   */
 class BpeEncodeEquivalenceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   private def columnForm(w: Column, merges: Seq[(String, String)]): Column =
     merges.foldLeft(concat(lit("  "), regexp_replace(w, "(.)", "$1  "))) { (acc, m) =>

@@ -12,12 +12,7 @@ import graft.functions.BpeTrainer
   */
 class BpeTrainerSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   private def words(ws: String*) = {
     import spark.implicits._

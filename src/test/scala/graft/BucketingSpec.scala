@@ -13,12 +13,7 @@ class BucketingSpec extends AnyFunSuite {
   // NOTE: ScalaTest suites share one JVM → one SparkSession; builder
   // configs after the first getOrCreate are silently ignored, so
   // runtime-settable confs are applied inside the test instead.
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   test("same-bucketing join plans as SortMergeJoin with no shuffle exchange") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -35,13 +35,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DeterminismAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DigestSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   /** The per-row XOR form the sweeps used before [[Digest]]: an XOR of
     * `xxhash64` over the string-cast columns, plus `count()`. */

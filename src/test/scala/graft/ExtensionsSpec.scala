@@ -9,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   test("graft_rand_string via SQL matches the generator column") {
     GraftExtensions.register(spark)
@@ -511,5 +505,37 @@ class ExtensionsSpec extends AnyFunSuite {
     val got = df.groupBy("k").agg(expr("graft_collect_sorted_set(v)").as("ps")).orderBy("k")
     assert(ref.schema == got.schema, s"schema: ${ref.schema} vs ${got.schema}")
     assert(ref.collect().toSeq == got.collect().toSeq)
+  }
+
+  test("SparkEntry.queries installs the engine posture on a fresh session") {
+    // newSession(): no temp functions, no extra strategies or rules —
+    // the state of a session no earlier query has built on
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = spark.newSession()
+    val sf = "/root/testdata/sf0.001"
+    assert(!fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_tok_ngrams")))
+    assert(!fresh.experimental.extraOptimizations.contains(graft.plans.TopKRewriteRule))
+    val plan = SparkEntry.queries("q_text_tfidf")(fresh, sf).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(plan.contains("TopKPerGroupFinal"),
+      s"the rn <= 3 cut must plan as the bounded heap on any session:\n$plan")
+    assert(SparkEntry.queries("q_text_colloc")(fresh, sf).collect().nonEmpty)
+  }
+
+  test("GraftExtensions.register twice replaces no function and adds the rule and strategy once") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val sentinel: Seq[Expression] => Expression = _ => Literal("sentinel")
+    registry.createOrReplaceTempFunction("graft_md5_60", sentinel, "scala_udf")
+    GraftExtensions.register(fresh)
+    GraftExtensions.register(fresh)
+    assert(registry.lookupFunctionBuilder(FunctionIdentifier("graft_md5_60")).exists(_ eq sentinel),
+      "register replaced an existing function")
+    assert(GraftExtensions.builders.forall { case (name, _) =>
+      registry.functionExists(FunctionIdentifier(name)) })
+    assert(fresh.experimental.extraOptimizations.count(_ == graft.plans.TopKRewriteRule) == 1)
+    assert(fresh.experimental.extraStrategies.count(_ == graft.plans.TopKPerGroupStrategy) == 1)
   }
 }

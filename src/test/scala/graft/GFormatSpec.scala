@@ -15,12 +15,7 @@ import graft.gen.{GFormat6Expr, GFormatImpl, SqloadGen}
   */
 class GFormatSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   private val pinned: Seq[(Double, String)] = Seq(
     (0.0, "0"),

@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraphSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   /** Brute-force reference counts over a canonical a<b edge set. */
   private def reference(edges: Set[(Long, Long)]): (Long, Long, Long, Long) = {

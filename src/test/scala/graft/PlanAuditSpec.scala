@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -86,14 +80,14 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("engine posture under the registered rewrite: lone rn filters rewrite, other windows keep Window exec") {
-    // Verify/Bench register TopKRewriteRule up front. With it on:
+    // SparkEntry.queries installs TopKRewriteRule on every session it
+    // builds on. With it on:
     //  - the pipeline's keep-first exact-dedup stage (lone row_number,
     //    rn = 1) plans as the operator in production,
     //  - q_window_rank / q_dedup_exact carry a SECOND window function
     //    (rank / count) so the rule correctly declines — they keep
     //    exercising Spark's window exec,
     //  - non-rank windows are untouched.
-    graft.plans.TopKRewriteRule.register(spark)
     assert(planOf("q_pipeline_e2e").contains("TopKPerGroupFinal"),
       "pipeline keep-first stage should plan as the operator")
     for (q <- Seq("q_window_rank", "q_dedup_exact", "q_window_running",
@@ -821,12 +815,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // heap (a stock window would re-sort the full trigram vocabulary
     // per language), and the whole build is one scan feeding two keyed
     // shuffles — the (lang, tri) count aggregate and the heap's lang
-    // exchange. The query registers only the graft_* functions itself
-    // (GraftExtensions.register is functions-only); the rewrite rule
-    // comes from the engine posture (Verify/Bench register it up
-    // front), so this test registers it explicitly rather than
-    // depending on suite ordering.
-    graft.plans.TopKRewriteRule.register(spark)
+    // exchange.
     val plan = planOf("q_text_ngram_lm")
     assert(plan.contains("TopKPerGroupFinal"),
       s"the rnk <= 10 cut must ride the bounded-heap operator:\n$plan")
@@ -878,7 +867,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // stock window re-sorts every doc's full vocabulary), and the
     // 1-row doc count joins in as a broadcast — the corpus-sized tf
     // and df tables shuffle on their keys, never broadcast.
-    graft.plans.TopKRewriteRule.register(spark)
     val plan = planOf("q_text_tfidf")
     assert(plan.contains("TopKPerGroupFinal"),
       s"the rn <= 3 cut must ride the bounded-heap TopKPerGroup operator:\n$plan")
@@ -886,5 +874,16 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the 1-row doc count must broadcast:\n$plan")
     assert(!plan.contains("CartesianProduct"),
       s"the scalar crossJoin must plan as a broadcast nested loop over 1 row, not a cartesian:\n$plan")
+  }
+
+  test("q_sql_q3 makes views for the tables its SQL names and no others") {
+    // each view costs a Parquet schema read at build time; Q3 joins
+    // customer, orders and lineitem, never nation
+    val fresh = spark.newSession()
+    SparkEntry.queries("q_sql_q3")(fresh, sf)
+    val sfx = sf.replaceAll("[^0-9A-Za-z]", "_")
+    for (t <- Seq("customer", "orders", "lineitem"))
+      assert(fresh.catalog.tableExists(s"graft_${t}_$sfx"), t)
+    assert(!fresh.catalog.tableExists(s"graft_nation_$sfx"))
   }
 }

@@ -21,12 +21,7 @@ class RuntimeOptSpec extends AnyFunSuite {
 
   // Suites share one JVM session — runtime confs are set per-test and
   // restored (builder configs after the first suite are ignored).
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   private def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

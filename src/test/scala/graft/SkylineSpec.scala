@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SkylineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.localSession(4)
 
   /** Trusted reference: the single global sequential sweep. */
   private def reference(pts: Seq[(Long, Double, Long)]): Seq[Long] = {

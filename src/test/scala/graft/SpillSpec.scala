@@ -61,13 +61,7 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val truth: Map[String, Digest] = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    val vanilla = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val vanilla = SparkEntry.localSession(4)
     val fps = SparkEntry.queries.keys.toSeq.sorted
       .map(n => n -> digest(vanilla, n)).toMap
     vanilla.stop()
