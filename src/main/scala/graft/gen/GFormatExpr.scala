@@ -1,7 +1,5 @@
 package graft.gen
 
-import java.util.Locale
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -17,12 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * byte-faithful, so this expression exists for the text-parity sink
   * (SqloadGen.writeCsvText).
   *
-  * %g semantics implemented exactly: round to 6 significant digits,
-  * pick scientific iff the rounded exponent X < -4 or X >= 6, strip
-  * trailing fraction zeros (and a bare trailing point), exponent as
-  * sign + minimum two digits. Floats widen to double first — the
-  * widening is exact, so rounding to 6 significant decimal digits
-  * agrees with C++'s float stream.
+  * %g semantics implemented exactly: round the exact binary value
+  * half-even to 6 significant digits (as glibc does), pick scientific
+  * iff the rounded exponent X < -4 or X >= 6, strip trailing fraction
+  * zeros (and a bare trailing point), exponent as sign + minimum two
+  * digits. Floats widen to double first — the widening is exact, so
+  * rounding to 6 significant decimal digits agrees with C++'s float
+  * stream.
   */
 case class GFormat6Expr(child: Expression) extends UnaryExpression {
 
@@ -52,53 +51,110 @@ case class GFormat6Expr(child: Expression) extends UnaryExpression {
 
 object GFormatImpl {
 
-  def g6(x: Double): UTF8String = UTF8String.fromString(g6s(x))
+  private val Pow10: Array[Long] = Array.iterate(1L, 19)(_ * 10)
+  private val Six = new java.math.MathContext(6, java.math.RoundingMode.HALF_EVEN)
+  private val Nan = UTF8String.fromString("nan")
+  private val Inf = UTF8String.fromString("inf")
+  private val NegInf = UTF8String.fromString("-inf")
+  private val Zero = UTF8String.fromString("0")
+  private val NegZero = UTF8String.fromString("-0")
 
-  /** `%g` with precision 6, matching glibc printf / C++ defaultfloat. */
-  def g6s(x: Double): String = {
-    if (java.lang.Double.isNaN(x)) return "nan"
-    if (x == java.lang.Double.POSITIVE_INFINITY) return "inf"
-    if (x == java.lang.Double.NEGATIVE_INFINITY) return "-inf"
-    if (x == 0.0) return if (1.0 / x < 0) "-0" else "0"
-    // %.5e rounds to 6 significant digits and exposes the post-rounding
-    // exponent — the exponent %g's style choice is defined over. Both
-    // output styles are then LAID OUT from these six digits directly
-    // (no second format-and-round pass): %g's fixed style is defined
-    // as precision P-1-X over the already-rounded value, so moving the
-    // decimal point through the rounded digit string is exact — and
-    // ~2× cheaper per value, which matters in the 10M-row CSV sink.
-    val sci = String.format(Locale.ROOT, "%.5e", java.lang.Double.valueOf(x))
-    val ei = sci.indexOf('e')
-    val exp = Integer.parseInt(sci.substring(ei + 1))
-    val neg = sci.charAt(0) == '-'
-    val ds = sci.indexOf('.')
-    // the six rounded significant digits, no sign, no point
-    val dig = sci.substring(if (neg) 1 else 0, ds) + sci.substring(ds + 1, ei)
-    val sb = new java.lang.StringBuilder(16)
-    if (neg) sb.append('-')
-    if (exp < -4 || exp >= 6) {
-      var last = 5
-      while (last > 0 && dig.charAt(last) == '0') last -= 1
-      sb.append(dig.charAt(0))
-      if (last > 0) sb.append('.').append(dig, 1, last + 1)
-      sb.append('e').append(if (exp < 0) '-' else '+')
-      val a = Math.abs(exp)
-      if (a < 10) sb.append('0')
-      sb.append(a)
-    } else if (exp >= 0) {
-      // point sits after digit position exp; strip trailing frac zeros
-      var last = 5
-      while (last > exp && dig.charAt(last) == '0') last -= 1
-      sb.append(dig, 0, exp + 1)
-      if (last > exp) sb.append('.').append(dig, exp + 1, last + 1)
+  /** `%g` with precision 6, matching glibc printf / C++ defaultfloat:
+    * the exact binary value rounded half-even to six significant
+    * digits, laid out as UTF-8 bytes.
+    */
+  def g6(x: Double): UTF8String = {
+    if (java.lang.Double.isNaN(x)) return Nan
+    if (x == java.lang.Double.POSITIVE_INFINITY) return Inf
+    if (x == java.lang.Double.NEGATIVE_INFINITY) return NegInf
+    if (x == 0.0) return if (1.0 / x < 0) NegZero else Zero
+    val a = Math.abs(x)
+    var q = 0L // the six rounded digits, 100000..999999
+    var e = 0  // decimal exponent of the first digit, after rounding
+    if (a >= 1e5 && a < 9.223372036854775807e18) {
+      // |x| = i + frac with frac exact; digits below the sixth are
+      // r + frac out of p, compared with p/2 exactly in integers.
+      val i = a.toLong
+      val frac = a - i
+      e = 5
+      while (e < 18 && i >= Pow10(e + 1)) e += 1
+      val p = Pow10(e - 5)
+      q = i / p
+      val r = i - q * p
+      val up =
+        if (p == 1) frac > 0.5 || (frac == 0.5 && (q & 1) == 1)
+        else { val h = p >> 1; r > h || (r == h && (frac > 0 || (q & 1) == 1)) }
+      if (up) {
+        q += 1
+        if (q == 1000000) { q = 100000; e += 1 }
+      }
     } else {
-      var last = 5
-      while (last > 0 && dig.charAt(last) == '0') last -= 1
-      sb.append("0.")
-      var i = exp + 1
-      while (i < 0) { sb.append('0'); i += 1 }
-      sb.append(dig, 0, last + 1)
+      // new BigDecimal(double) is the exact binary value
+      val r = new java.math.BigDecimal(a).round(Six)
+      q = r.unscaledValue.longValue * Pow10(6 - r.precision)
+      e = r.precision - r.scale - 1
     }
-    sb.toString
+    layout(x < 0, q, e)
+  }
+
+  /** `g6` as a String. */
+  def g6s(x: Double): String = g6(x).toString
+
+  /** Writes `%g`'s layout of the digits `q` (six of them) with first-digit
+    * exponent `e`: scientific iff e < -4 or e >= 6, trailing fraction
+    * zeros and a bare point stripped, exponent as sign + at least two
+    * digits. `%g`'s fixed style is precision 5-e over the already
+    * rounded value, so moving the point through the six digits is exact.
+    */
+  private def layout(neg: Boolean, q0: Long, e: Int): UTF8String = {
+    var q = q0
+    var nd = 6
+    while (q % 10 == 0) { q /= 10; nd -= 1 }
+    val s = if (neg) 1 else 0
+    val b =
+      if (e < -4 || e >= 6) {
+        val ea = Math.abs(e)
+        val ed = if (ea >= 100) 3 else 2
+        val m = if (nd > 1) nd + 1 else 1
+        val b = new Array[Byte](s + m + 2 + ed)
+        if (nd > 1) {
+          b(s) = ('0' + put(b, s + 2, nd - 1, q)).toByte
+          b(s + 1) = '.'.toByte
+        } else b(s) = ('0' + q).toByte
+        b(s + m) = 'e'.toByte
+        b(s + m + 1) = (if (e < 0) '-' else '+').toByte
+        put(b, s + m + 2, ed, ea)
+        b
+      } else if (e >= 0) {
+        val fd = nd - e - 1
+        val b = new Array[Byte](s + e + 1 + (if (fd > 0) fd + 1 else 0))
+        if (fd > 0) {
+          put(b, s, e + 1, put(b, s + e + 2, fd, q))
+          b(s + e + 1) = '.'.toByte
+        } else {
+          put(b, s, nd, q)
+          java.util.Arrays.fill(b, s + nd, b.length, '0'.toByte)
+        }
+        b
+      } else {
+        val b = new Array[Byte](s + 1 - e + nd)
+        b(s) = '0'.toByte
+        b(s + 1) = '.'.toByte
+        java.util.Arrays.fill(b, s + 2, s + 1 - e, '0'.toByte)
+        put(b, s + 1 - e, nd, q)
+        b
+      }
+    if (neg) b(0) = '-'.toByte
+    UTF8String.fromBytes(b)
+  }
+
+  /** Writes the low `n` decimal digits of `v` into `b(from until from + n)`
+    * and returns what is left of `v`.
+    */
+  private def put(b: Array[Byte], from: Int, n: Int, v: Long): Long = {
+    var q = v
+    var i = from + n - 1
+    while (i >= from) { b(i) = ('0' + q % 10).toByte; q /= 10; i -= 1 }
+    q
   }
 }

@@ -47,12 +47,13 @@ object SqloadGen {
 
   /** Byte-parity projection for the text CSV sink: float/double render
     * as C/C++ `%g` precision-6 text (GFormat6Expr — what the
-    * reference's `stringstream << x` emits, generate_csv.cpp:42-54)
-    * and decimals as their scale-padded plain string (BigDecimal keeps
-    * scale, matching the reference's zero-padded fraction,
-    * generate_csv.cpp:145). Other types already match the reference's
-    * text conventions through the plain CSV options. Row-local,
-    * codegen'd — the parity sink stays shuffle-free.
+    * reference's `stringstream << x` emits, generate_csv.cpp:42-54:
+    * the exact binary value rounded half-even to six digits, written
+    * straight to UTF-8 bytes) and decimals as their scale-padded plain
+    * string (BigDecimal keeps scale, matching the reference's
+    * zero-padded fraction, generate_csv.cpp:145). Other types already
+    * match the reference's text conventions through the plain CSV
+    * options. Row-local, codegen'd — the parity sink stays shuffle-free.
     */
   def textParity(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge

@@ -7,11 +7,14 @@ import graft.gen.{GFormat6Expr, GFormatImpl, SqloadGen}
 
 /** Pins GFormatImpl.g6s to C/C++ `%g` precision-6 semantics — the
   * reference's CSV float/double text convention (generate_csv.cpp:
-  * 42-54). Expected strings below were produced by C-printf-compatible
-  * `"%g" % x` formatting (glibc semantics), covering both styles, the
+  * 42-54). Expected strings below are what gcc's `printf("%g", x)`
+  * prints (glibc rounds the exact binary value half-even; Python's
+  * `"%g" % x` does not always agree), covering both styles, the
   * style-switch boundaries (rounding ACROSS 1e+06), trailing-zero
-  * stripping, signed zero, and the reference README's own sample
-  * values (-4.23e+08, -1.19068e+09).
+  * stripping, signed zero, half-even ties, and the reference README's
+  * own sample values (-4.23e+08, -1.19068e+09). The C fixture
+  * (`tools/gformat_fixture.py`) and the BigDecimal oracle sweep
+  * (GFormatOracle) cover the rest of the double range.
   */
 class GFormatSpec extends AnyFunSuite {
 
@@ -65,7 +68,15 @@ class GFormatSpec extends AnyFunSuite {
     (-4.2078142733664745e-07, "-4.20781e-07"),
     (8137177.106428495, "8.13718e+06"),
     (-3.830363517961313e-06, "-3.83036e-06"),
-    (-79388857.51128173, "-7.93889e+07"))
+    (-79388857.51128173, "-7.93889e+07"),
+    // half-even ties of the exact binary value, as glibc rounds them
+    (1000005.0, "1e+06"),
+    (1234565000.0, "1.23456e+09"),
+    (123456.5, "123456"),
+    (-55.47105, "-55.471"),
+    (0.1234565, "0.123456"),
+    (-714.0065, "-714.006"),
+    (-6874725000.0, "-6.87472e+09"))
 
   test("g6s matches C printf %g on the pinned table") {
     pinned.foreach { case (x, want) =>
@@ -86,6 +97,27 @@ class GFormatSpec extends AnyFunSuite {
       val t = GFormatImpl.g6s(x)
       assert(GFormatImpl.g6s(t.toDouble) == t, s"for input $x")
     }
+  }
+
+  test("g6 and the oracle match gcc printf %g byte for byte on the C fixture") {
+    val in = getClass.getResourceAsStream("/gformat_fixture.tsv")
+    assert(in != null, "gformat_fixture.tsv is not on the test classpath")
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    assert(lines.size > 5000)
+    val bad = lines.filter { l =>
+      val Array(hex, want) = l.split('\t')
+      val x = java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(hex, 16))
+      !java.util.Arrays.equals(GFormatImpl.g6(x).getBytes, want.getBytes("UTF-8")) ||
+        GFormatOracle.g6(x) != want
+    }
+    assert(bad.isEmpty, s"${bad.size} mismatches, first: ${bad.take(5).mkString("; ")}")
+  }
+
+  test("g6 agrees with the BigDecimal half-even oracle on 2M mixed doubles") {
+    val bad = GFormatSpec.sweep(2000000, seed = 5L)
+    assert(bad.isEmpty, s"first mismatches (bits, got, oracle): ${bad.mkString("; ")}")
   }
 
   test("GFormat6Expr agrees with g6s through codegen on generated doubles") {
@@ -109,5 +141,57 @@ class GFormatSpec extends AnyFunSuite {
       df.select(ColumnBridge.column(
         GFormat6Expr(ColumnBridge.expression(col("id"))))).collect()
     }
+  }
+}
+
+object GFormatSpec {
+
+  /** Compares GFormatImpl.g6 with GFormatOracle on `n` doubles drawn in
+    * equal shares from the generator's ±2^31 column, 7-digit decimals
+    * ending in 5 at exponents -306..294, integer ties d5·10^k (exact
+    * below 2^53) and q + 0.5, finite random bit patterns and floats
+    * widened to double.
+    * Four threads draw a quarter each. Returns up to five mismatches
+    * per thread.
+    */
+  def sweep(n: Int, seed: Long): Seq[String] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val parts = (0 until 4).map(t => Future(sweepPart(n / 4, seed * 4 + t)))
+    parts.flatMap(Await.result(_, scala.concurrent.duration.Duration.Inf))
+  }
+
+  private def sweepPart(n: Int, seed: Long): Seq[String] = {
+    val r = new java.util.SplittableRandom(seed)
+    def finite(bits: => Double): Double = {
+      var x = bits
+      while (x.isNaN || x.isInfinite) x = bits
+      x
+    }
+    val bad = Seq.newBuilder[String]
+    var found = 0
+    var i = 0
+    while (i < n && found < 5) {
+      val x = i % 5 match {
+        case 0 => ((r.nextLong() >>> 11) * (1.0 / (1L << 53)) * 2.0 - 1.0) * 2147483648.0
+        case 1 =>
+          val d = (100000 + r.nextInt(900000)) * 10L + 5
+          val s = s"${d}e${r.nextInt(601) - 306}".toDouble
+          if (r.nextBoolean()) -s else s
+        case 2 =>
+          if (r.nextBoolean()) ((100000 + r.nextInt(900000)) * 10L + 5).toDouble * math.pow(10, r.nextInt(10))
+          else (100000 + r.nextInt(900000)) + 0.5
+        case 3 => finite(java.lang.Double.longBitsToDouble(r.nextLong()))
+        case _ => finite(java.lang.Float.intBitsToFloat(r.nextInt()).toDouble)
+      }
+      val got = GFormatImpl.g6s(x)
+      val want = GFormatOracle.g6(x)
+      if (got != want) {
+        bad += f"${java.lang.Double.doubleToRawLongBits(x)}%016x $got $want"
+        found += 1
+      }
+      i += 1
+    }
+    bad.result()
   }
 }

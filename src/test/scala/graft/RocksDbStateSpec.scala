@@ -106,7 +106,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = withRocksDb {
       runAppend(streaming.LocfStream.fills(spark, sf), "r_locf")
     }.select("event_id", "user_id", "tus", "was_missing", "v_filled")
-    val batch = operators.TimeWindowQueries.queries("q_impute_locf")(spark, sf)
+    val batch = SparkEntry.queries("q_impute_locf")(spark, sf)
       .select("event_id", "user_id", "tus", "was_missing", "v_filled")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -141,7 +141,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = withRocksDb {
       runAppend(streaming.DebounceStream.survivorsOf(src), "r_debounce")
     }.select(cols.head, cols.tail: _*)
-    val batch = operators.TimeWindowQueries.queries("q_win_debounce")(spark, sf)
+    val batch = SparkEntry.queries("q_win_debounce")(spark, sf)
       .select(cols.head, cols.tail: _*)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -200,7 +200,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = withRocksDb {
       runAppend(streaming.PitStream.features(spark, sf), "r_pit")
     }.select(cols.head, cols.tail: _*)
-    val batch = operators.TimeWindowQueries.queries("q_join_pit")(spark, sf)
+    val batch = SparkEntry.queries("q_join_pit")(spark, sf)
       .select(cols.head, cols.tail: _*)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -243,7 +243,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = credits.groupBy(col("touch_type"))
       .agg(count(lit(1)).as("n_purchases"),
         sum(col("value").cast(Tables.Dec2)).cast(Tables.Dec382).as("total_value"))
-    val batch = operators.TimeWindowQueries.queries("q_attribution")(spark, sf)
+    val batch = SparkEntry.queries("q_attribution")(spark, sf)
     assert(credits.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -289,7 +289,7 @@ class RocksDbStateSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
       .withColumn("p", col("n").cast("double")
         / sum(col("n")).over(Window.partitionBy("from_type")))
-    val batch = operators.TimeWindowQueries.queries("q_win_transitions")(spark, sf)
+    val batch = SparkEntry.queries("q_win_transitions")(spark, sf)
       .select("from_type", "to_type", "n", "p")
     assert(pairs.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -333,7 +333,7 @@ class RocksDbStateSpec extends AnyFunSuite {
       runUpdate(streaming.EwmaStream.ewma(spark, sf), "r_ewma")
     }.select(col("user_id"), col("n_events").cast("int").as("n_events"),
       col("ewma"))
-    val batch = operators.TimeWindowQueries.queries("q_win_ewma")(spark, sf)
+    val batch = SparkEntry.queries("q_win_ewma")(spark, sf)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -344,7 +344,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = withRocksDb {
       runAppend(streaming.CusumStream.stats(spark, sf, n, sumCents), "r_cusum")
     }.select("event_id", "user_id", "tus", "cusum", "alarm")
-    val batch = operators.TimeWindowQueries.queries("q_win_cusum")(spark, sf)
+    val batch = SparkEntry.queries("q_win_cusum")(spark, sf)
       .select("event_id", "user_id", "tus", "cusum", "alarm")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -355,7 +355,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = withRocksDb {
       runAppend(streaming.RollMedianStream.medians(spark, sf), "r_rollmedian")
     }.select("event_id", "user_id", "n_frame", "roll_median")
-    val batch = operators.TimeWindowQueries.queries("q_win_rollmedian")(spark, sf)
+    val batch = SparkEntry.queries("q_win_rollmedian")(spark, sf)
       .select("event_id", "user_id", "n_frame", "roll_median")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -413,7 +413,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val bars = withRocksDb {
       runComplete(streaming.EventsStreaming.ohlcBars(spark, sf), "r_ohlc")
     }
-    val barsBatch = operators.TimeWindowQueries.queries("q_win_bars")(spark, sf)
+    val barsBatch = SparkEntry.queries("q_win_bars")(spark, sf)
       .select("event_type", "ws_us", "open", "close", "high", "low", "n", "total")
     assert(bars.count() > 0)
     assert(bars.exceptAll(barsBatch).count() == 0)
@@ -422,7 +422,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val sliding = withRocksDb {
       runComplete(streaming.EventsStreaming.slidingTotals(spark, sf), "r_sliding")
     }
-    val slidingBatch = operators.TimeWindowQueries.queries("q_win_sliding")(spark, sf)
+    val slidingBatch = SparkEntry.queries("q_win_sliding")(spark, sf)
       .select("ws_us", "n")
     assert(sliding.count() > 0)
     assert(sliding.exceptAll(slidingBatch).count() == 0)
@@ -441,7 +441,7 @@ class RocksDbStateSpec extends AnyFunSuite {
           .agg(count(lit(1)).as("n_users"))
           .select(lit(label).as("stage"), col("n_users"))
       }.reduce(_ unionAll _)
-    val funnelBatch = operators.TimeWindowQueries.queries("q_win_funnel")(spark, sf)
+    val funnelBatch = SparkEntry.queries("q_win_funnel")(spark, sf)
     assert(perUser.count() > 0)
     assert(funnelStreamed.exceptAll(funnelBatch).count() == 0)
     assert(funnelBatch.exceptAll(funnelStreamed).count() == 0)
@@ -456,7 +456,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val driftStreamed = counts.crossJoin(broadcast(tot))
       .select(col("event_type"), col("n_a"), col("n_b"),
         ra.as("rate_a"), rb.as("rate_b"), abs(ra - rb).as("abs_drift"))
-    val driftBatch = operators.TimeWindowQueries.queries("q_drift")(spark, sf)
+    val driftBatch = SparkEntry.queries("q_drift")(spark, sf)
     assert(counts.count() > 0)
     assert(driftStreamed.exceptAll(driftBatch).count() == 0)
     assert(driftBatch.exceptAll(driftStreamed).count() == 0)
@@ -491,7 +491,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val survivors = withRocksDb {
       runStateless(streaming.IncrementalDedupStream.survivors(spark, sf), "r_incdedup")
     }
-    val dedupBatch = operators.DedupQueries.queries("q_dedup_incremental")(spark, sf)
+    val dedupBatch = SparkEntry.queries("q_dedup_incremental")(spark, sf)
     assert(survivors.count() > 0)
     assert(survivors.exceptAll(dedupBatch).count() == 0)
     assert(dedupBatch.exceptAll(survivors).count() == 0)
@@ -521,7 +521,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val streamed = withRocksDb {
       runAppend(streaming.Sessionize.sessionsOfStream(src), "r_sessionize")
     }.select(cols.head, cols.tail: _*)
-    val batch = operators.TimeWindowQueries.queries("q_session_state")(spark, sf)
+    val batch = SparkEntry.queries("q_session_state")(spark, sf)
       .select(cols.head, cols.tail: _*)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)

@@ -154,12 +154,12 @@ class RuntimeOptSpec extends AnyFunSuite {
     assume(spark.sparkContext.getCheckpointDir.isEmpty,
       "another suite already set a checkpoint dir on the shared context")
     val sf = "/root/testdata/sf0.001"
-    val localRows = operators.DedupQueries.queries("q_dedup_cluster")(spark, sf)
+    val localRows = SparkEntry.queries("q_dedup_cluster")(spark, sf)
       .collect().map(_.toString).sorted.toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_e2e").toFile
     try {
       spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
-      val reliableRows = operators.DedupQueries.queries("q_dedup_cluster")(spark, sf)
+      val reliableRows = SparkEntry.queries("q_dedup_cluster")(spark, sf)
         .collect().map(_.toString).sorted.toSeq
       assert(reliableRows === localRows)
     } finally {

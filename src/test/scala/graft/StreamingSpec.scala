@@ -33,7 +33,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming tumbling counts == batch tumbling counts") {
     val streamed = EventsStreaming.runToCompletion(spark,
       EventsStreaming.tumblingCounts(spark, sf), "t_tumbling")
-    val batch = operators.TimeWindowQueries.queries("q_win_tumbling")(spark, sf)
+    val batch = SparkEntry.queries("q_win_tumbling")(spark, sf)
       .select("ws_us", "event_type", "n")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -43,7 +43,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming session windows == batch session windows") {
     val streamed = EventsStreaming.runToCompletion(spark,
       EventsStreaming.sessionCounts(spark, sf), "t_session")
-    val batch = operators.TimeWindowQueries.queries("q_win_session")(spark, sf)
+    val batch = SparkEntry.queries("q_win_session")(spark, sf)
       .select("user_id", "start_us", "end_us", "n")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -53,7 +53,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming OHLC bars == batch OHLC bars") {
     val streamed = EventsStreaming.runToCompletion(spark,
       EventsStreaming.ohlcBars(spark, sf), "t_ohlc")
-    val batch = operators.TimeWindowQueries.queries("q_win_bars")(spark, sf)
+    val batch = SparkEntry.queries("q_win_bars")(spark, sf)
       .select("event_type", "ws_us", "open", "close", "high", "low", "n", "total")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -105,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
       streaming.EwmaStream.ewma(spark, sf), "t_ewma")
       .select(col("user_id"), col("n_events").cast("int").as("n_events"),
         col("ewma"))
-    val batch = operators.TimeWindowQueries.queries("q_win_ewma")(spark, sf)
+    val batch = SparkEntry.queries("q_win_ewma")(spark, sf)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -123,7 +123,7 @@ class StreamingSpec extends AnyFunSuite {
           .agg(count(lit(1)).as("n_users"))
           .select(lit(label).as("stage"), col("n_users"))
       }.reduce(_ unionAll _)
-    val batch = operators.TimeWindowQueries.queries("q_win_funnel")(spark, sf)
+    val batch = SparkEntry.queries("q_win_funnel")(spark, sf)
     assert(perUser.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -132,7 +132,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming sliding counts == batch sliding counts") {
     val streamed = EventsStreaming.runToCompletion(spark,
       EventsStreaming.slidingTotals(spark, sf), "t_sliding")
-    val batch = operators.TimeWindowQueries.queries("q_win_sliding")(spark, sf)
+    val batch = SparkEntry.queries("q_win_sliding")(spark, sf)
       .select("ws_us", "n")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -150,7 +150,7 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
       .withColumn("p", col("n").cast("double")
         / sum(col("n")).over(Window.partitionBy("from_type")))
-    val batch = operators.TimeWindowQueries.queries("q_win_transitions")(spark, sf)
+    val batch = SparkEntry.queries("q_win_transitions")(spark, sf)
       .select("from_type", "to_type", "n", "p")
     assert(pairs.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -184,7 +184,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = counts.crossJoin(broadcast(tot))
       .select(col("event_type"), col("n_a"), col("n_b"),
         ra.as("rate_a"), rb.as("rate_b"), abs(ra - rb).as("abs_drift"))
-    val batch = operators.TimeWindowQueries.queries("q_drift")(spark, sf)
+    val batch = SparkEntry.queries("q_drift")(spark, sf)
     assert(counts.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -196,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
       streaming.PitStream.features(spark, sf), "t_pit")
       .select("event_id", "user_id", "purchase_us",
         "f_last_view_value", "f_last_click_value", "f_n_signups")
-    val batch = operators.TimeWindowQueries.queries("q_join_pit")(spark, sf)
+    val batch = SparkEntry.queries("q_join_pit")(spark, sf)
       .select("event_id", "user_id", "purchase_us",
         "f_last_view_value", "f_last_click_value", "f_n_signups")
     assert(streamed.count() > 0)
@@ -213,7 +213,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = credits.groupBy(col("touch_type"))
       .agg(count(lit(1)).as("n_purchases"),
         sum(col("value").cast(Tables.Dec2)).cast(Tables.Dec382).as("total_value"))
-    val batch = operators.TimeWindowQueries.queries("q_attribution")(spark, sf)
+    val batch = SparkEntry.queries("q_attribution")(spark, sf)
     assert(credits.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -223,7 +223,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = EventsStreaming.runAppendToCompletion(spark,
       streaming.RollMedianStream.medians(spark, sf), "t_rollmedian")
       .select("event_id", "user_id", "n_frame", "roll_median")
-    val batch = operators.TimeWindowQueries.queries("q_win_rollmedian")(spark, sf)
+    val batch = SparkEntry.queries("q_win_rollmedian")(spark, sf)
       .select("event_id", "user_id", "n_frame", "roll_median")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -233,7 +233,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-static anti-join incremental dedup == batch incremental dedup") {
     val streamed = EventsStreaming.runAppendToCompletion(spark,
       streaming.IncrementalDedupStream.survivors(spark, sf), "t_incdedup")
-    val batch = operators.DedupQueries.queries("q_dedup_incremental")(spark, sf)
+    val batch = SparkEntry.queries("q_dedup_incremental")(spark, sf)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -244,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = EventsStreaming.runAppendToCompletion(spark,
       streaming.CusumStream.stats(spark, sf, n, sumCents), "t_cusum")
       .select("event_id", "user_id", "tus", "cusum", "alarm")
-    val batch = operators.TimeWindowQueries.queries("q_win_cusum")(spark, sf)
+    val batch = SparkEntry.queries("q_win_cusum")(spark, sf)
       .select("event_id", "user_id", "tus", "cusum", "alarm")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -255,7 +255,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = EventsStreaming.runAppendToCompletion(spark,
       streaming.LocfStream.fills(spark, sf), "t_locf")
       .select("event_id", "user_id", "tus", "was_missing", "v_filled")
-    val batch = operators.TimeWindowQueries.queries("q_impute_locf")(spark, sf)
+    val batch = SparkEntry.queries("q_impute_locf")(spark, sf)
       .select("event_id", "user_id", "tus", "was_missing", "v_filled")
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -295,7 +295,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = EventsStreaming.runAppendToCompletion(spark,
       streaming.DebounceStream.survivorsOf(src), "t_debounce")
       .select(cols.head, cols.tail: _*)
-    val batch = operators.TimeWindowQueries.queries("q_win_debounce")(spark, sf)
+    val batch = SparkEntry.queries("q_win_debounce")(spark, sf)
       .select(cols.head, cols.tail: _*)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
@@ -334,7 +334,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = EventsStreaming.runAppendToCompletion(spark,
       streaming.Sessionize.sessionsOfStream(src), "t_sessionize")
       .select(cols.head, cols.tail: _*)
-    val batch = operators.TimeWindowQueries.queries("q_session_state")(spark, sf)
+    val batch = SparkEntry.queries("q_session_state")(spark, sf)
       .select(cols.head, cols.tail: _*)
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
