@@ -116,8 +116,9 @@ object Bench {
 
     // Generator throughput: flagship 7-column spec, 10M rows, noop sink
     // + end-to-end CSV sink (the reference's actual operation: format +
-    // write, through the BYTE-parity %g projection so the claim vs
-    // BASELINE.md is apples-to-apples down to the output bytes).
+    // write, through SqloadGen.writeCsvText, the writer that ships, so
+    // the claim vs BASELINE.md is apples-to-apples down to the output
+    // bytes).
     //
     // Hybrid reps like the queries (round-13 protocol): THREE reps of
     // each feeder, INTERLEAVED (gen, csv, gen, csv, ...) so each
@@ -141,10 +142,9 @@ object Bench {
     }
     def csvOnce(): Double = {
       val c0 = System.nanoTime()
-      gen.SqloadGen.textParity(
-          gen.SqloadGen.table(spark, genSpec, genRows, numPartitions = cpus))
-        .write.mode("overwrite").option("header", "false").option("emptyValue", "")
-        .csv(csvDir.getAbsolutePath)
+      gen.SqloadGen.writeCsvText(
+        gen.SqloadGen.table(spark, genSpec, genRows, numPartitions = cpus),
+        csvDir.getAbsolutePath)
       (System.nanoTime() - c0) / 1e9
     }
     gen.SqloadGen.table(spark, genSpec, 100000, numPartitions = cpus)

@@ -10,11 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `SqloadGen.table(spark, spec, rows, seed)`.
   *
   * Scale posture: the plan is Range → Project → WriteFiles — narrow,
-  * shuffle-free, whole-stage-codegen'd. Each task generates and writes its
-  * own id range independently, so 100 TB output is a matter of task count.
-  * `numPartitions` controls parallelism; for partitioned-DB bulk load
-  * (OceanBase-style), `writeCsvPartitioned` range-partitions on the key
-  * column so each output file maps to one target partition.
+  * shuffle-free, whole-stage-codegen'd, one stage. Each task generates
+  * its own id range, renders each row once into one CSV line
+  * (CsvLineExpr) and writes the lines through the `text` writer, so
+  * 100 TB output is a matter of task count. `numPartitions` controls
+  * parallelism; with `key` first, each task's file holds one contiguous
+  * key range.
   */
 object SqloadGen {
 
@@ -33,27 +34,13 @@ object SqloadGen {
     }: _*)
   }
 
-  /** Header-less, unquoted, comma-separated CSV — the reference's sink
-    * conventions (generate_csv.cpp:164,192-196,243). The generator
-    * charsets exclude ',' and '"', so unquoted output is faithful.
-    */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("header", "false")
-      .option("emptyValue", "")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .option("dateFormat", "yyyy-MM-dd")
-      .csv(path)
-
-  /** Byte-parity projection for the text CSV sink: float/double render
-    * as C/C++ `%g` precision-6 text (GFormat6Expr — what the
-    * reference's `stringstream << x` emits, generate_csv.cpp:42-54:
-    * the exact binary value rounded half-even to six digits, written
-    * straight to UTF-8 bytes) and decimals as their scale-padded plain
-    * string (BigDecimal keeps scale, matching the reference's
-    * zero-padded fraction, generate_csv.cpp:145). Other types already
-    * match the reference's text conventions through the plain CSV
-    * options. Row-local, codegen'd — the parity sink stays shuffle-free.
+  /** The typed view of the bulk-load CSV text, one column per field:
+    * float/double as C `%g` precision-6 strings (GFormat6Expr) and
+    * decimals as their scale-padded plain strings; every other column
+    * as it is. It is no longer the write path (`writeCsvText` renders
+    * whole rows); it is an independent statement of what each field's
+    * text is, which the CSV datasource or a string cast turns into the
+    * same bytes. Row-local and codegen'd.
     */
   def textParity(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -69,19 +56,16 @@ object SqloadGen {
     }.toSeq: _*)
   }
 
-  /** writeCsv with the reference's float/double/decimal TEXT
-    * conventions — byte-faithful output, not just domain-faithful.
+  /** Header-less, unquoted, comma-separated CSV with the reference's
+    * text conventions (generate_csv.cpp:42-54,145,163-245), byte for
+    * byte: each row rendered once into one line (CsvLineExpr), written
+    * with the `text` writer into `part-*.csv` files.
     */
-  def writeCsvText(df: DataFrame, path: String): Unit =
-    writeCsv(textParity(df), path)
-
-  /** Bulk-load layout for a range-partitioned target table: sort-range
-    * shuffle on the first column (the `key` column by convention) into
-    * `buckets` output files, each covering a contiguous key range.
-    */
-  def writeCsvPartitioned(df: DataFrame, path: String, buckets: Int): Unit = {
-    val keyCol = df.columns.head
-    writeCsv(df.repartitionByRange(buckets, df.col(keyCol)), path)
+  def writeCsvText(df: DataFrame, path: String): Unit = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val line = CsvLineExpr(df.columns.toSeq.map(c => ColumnBridge.expression(df.col(c))))
+    df.select(ColumnBridge.column(line).as("value"))
+      .write.mode("overwrite").format(classOf[CsvTextFormat].getName).save(path)
   }
 
   def writeParquet(df: DataFrame, path: String): Unit =

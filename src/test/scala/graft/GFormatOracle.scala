@@ -13,7 +13,7 @@ object GFormatOracle {
   private val Six = new MathContext(6, RoundingMode.HALF_EVEN)
 
   def g6(x: Double): String =
-    if (x.isNaN) "nan"
+    if (x.isNaN) if (java.lang.Double.doubleToRawLongBits(x) < 0) "-nan" else "nan"
     else if (x.isInfinite) if (x > 0) "inf" else "-inf"
     else if (x == 0.0) if (1.0 / x < 0) "-0" else "0"
     else {

@@ -90,6 +90,22 @@ class GFormatSpec extends AnyFunSuite {
     assert(GFormatImpl.g6s(Double.NegativeInfinity) == "-inf")
   }
 
+  test("a NaN with its sign bit set prints -nan, as glibc prints it") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.DoubleType
+    val negNan = java.lang.Double.longBitsToDouble(0xfff8000000000000L)
+    val nan = java.lang.Double.longBitsToDouble(0x7ff8000000000000L)
+    assert(GFormatImpl.g6s(negNan) == "-nan")
+    assert(GFormatImpl.g6s(nan) == "nan")
+    // through GFormat6Expr's generated code, over a row that keeps the bits
+    val proj = GenerateUnsafeProjection.generate(
+      Seq(GFormat6Expr(BoundReference(0, DoubleType, nullable = false))))
+    assert(proj(InternalRow(negNan)).getUTF8String(0).toString == "-nan")
+    assert(proj(InternalRow(nan)).getUTF8String(0).toString == "nan")
+  }
+
   test("parse(g6s(x)) re-formats to the same text (6 <= DBL_DIG identity)") {
     val rnd = new scala.util.Random(11)
     (0 until 5000).foreach { _ =>

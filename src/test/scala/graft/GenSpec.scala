@@ -142,15 +142,18 @@ class GenSpec extends AnyFunSuite {
   }
 
   test("CSV round-trip: write then re-read with the declared schema") {
-    val out = "/tmp/graft_test_csv"
-    val df = SqloadGen.table(spark, "key,int,varchar(10),date", 1000, seed = 3)
-    SqloadGen.writeCsv(df, out)
-    val back = spark.read
-      .schema(graft.gen.GenExprs.schemaFor(graft.gen.TypeSpecParser.parse("key,int,varchar(10),date")))
-      .option("header", "false")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .csv(out)
-    assert(back.count() == 1000)
-    assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_test_csv").toFile
+    val out = dir.getPath
+    try {
+      val df = SqloadGen.table(spark, "key,int,varchar(10),date", 1000, seed = 3)
+      CsvOracle.writeCsv(df, out)
+      val back = spark.read
+        .schema(graft.gen.GenExprs.schemaFor(graft.gen.TypeSpecParser.parse("key,int,varchar(10),date")))
+        .option("header", "false")
+        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
+        .csv(out)
+      assert(back.count() == 1000)
+      assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }
