@@ -2,14 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables._
 
 /** Event-time windowing over the events table, batch form: tumbling,
   * sliding (hopping), and session windows via Spark's native window /
-  * session_window expressions. The streaming tier
-  * (graft.streaming.EventsStreaming) reuses the same aggregation bodies
-  * under readStream + watermark; these batch variants are the
-  * oracle-checkable contract.
+  * session_window expressions.
   *
   * Window starts are emitted as epoch microseconds (BIGINT) — Spark
   * unix_micros ≡ DuckDB epoch_us — sidestepping timestamp-tz ambiguity.
@@ -17,9 +15,8 @@ import graft.Tables._
   */
 object TimeWindowQueries {
 
-  /** Split boundary for the distribution-drift monitor — shared with
-    * the streaming form (graft.streaming.DriftStream) so the two can
-    * never silently count different halves.
+  /** Split boundary for the distribution-drift monitor, shared by
+    * q_drift, q_stats_ks and their oracles.
     */
   val DriftSplit = "2024-01-16 00:00:00"
 
@@ -30,6 +27,23 @@ object TimeWindowQueries {
     * per-user skew. Mirrored verbatim in the DuckDB oracle.
     */
   val MaxSeqLen = 512
+
+  /** Inactivity gap of every session query (q_win_session,
+    * q_session_state, q_join_overlap) and of their oracles: a session
+    * breaks when the next event is 10 minutes or more after the last.
+    */
+  val SessionGapUs: Long = 10L * 60 * 1000000
+
+  /** Spark's session_window extends a session with any event whose
+    * window starts at or before the session's end, so a gap of exactly
+    * SessionGapUs would merge. Windows 1 µs shorter break at a gap of
+    * SessionGapUs or more, as q_session_state and the oracles do; the
+    * session end is `w.end + 1`.
+    */
+  private def sessionWindow = session_window(col("ts"), s"${SessionGapUs - 1} microseconds")
+
+  /** Burst gap of q_win_debounce and its oracle: 12 hours. */
+  val DebounceGapUs: Long = 12L * 60 * 60 * 1000000
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -60,22 +74,19 @@ object TimeWindowQueries {
     // Custom-state sessionization (flatMapGroupsWithState) — identical
     // semantics to q_win_session via a different operator; shares its
     // oracle SQL.
-    "q_session_state" -> ((s, d) => graft.streaming.Sessionize.sessions(s, d)),
+    "q_session_state" -> ((s, d) => sessions(s, d)),
 
-    // Session windows with a 10-minute inactivity gap per user.
-    // Spark merges events while gap < 10 min; session end = last + gap.
-    // Scale: one shuffle on user_id; state is bounded per user.
+    // Session windows with a 10-minute inactivity gap per user
+    // (sessionWindow); session end = last + gap. Scale: one shuffle on
+    // user_id; state is bounded per user.
     "q_win_session" -> ((s, d) =>
       events(s, d)
-        // gap duration single-sourced from Sessionize.GapUs (shared with
-        // q_session_state and the common oracle)
-        .groupBy(session_window(col("ts"),
-          s"${graft.streaming.Sessionize.GapUs / 60000000L} minutes").as("w"), col("user_id"))
+        .groupBy(sessionWindow.as("w"), col("user_id"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(Dec2)).cast(Dec382).as("total"))
         .select(col("user_id"),
           unix_micros(col("w.start")).as("start_us"),
-          unix_micros(col("w.end")).as("end_us"),
+          (unix_micros(col("w.end")) + 1).as("end_us"),
           col("n"), col("total"))
         .orderBy("user_id", "start_us")),
 
@@ -115,9 +126,7 @@ object TimeWindowQueries {
     // folded left-to-right with a HOF; DuckDB's list_reduce runs the
     // SAME fold in the SAME order, so the IEEE doubles agree bitwise.
     // Scale: per-key state = that key's history (bounded by per-user
-    // event counts); the unbounded-stream form of this recurrence is
-    // mapGroupsWithState carrying one double of state — the batch
-    // query pins the semantics the streaming operator must match.
+    // event counts).
     "q_win_ewma" -> ((s, d) =>
       events(s, d)
         .select(col("user_id"), unix_micros(col("ts")).as("tus"),
@@ -188,11 +197,10 @@ object TimeWindowQueries {
     // so at 100 TB the join cost is |sessions| regardless of grid size.
     "q_join_overlap" -> ((s, d) => {
       val sess = events(s, d)
-        .groupBy(session_window(col("ts"),
-          s"${graft.streaming.Sessionize.GapUs / 60000000L} minutes").as("w"), col("user_id"))
+        .groupBy(sessionWindow.as("w"), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"),
-          unix_micros(col("w.start")).as("s_us"), unix_micros(col("w.end")).as("e_us"))
+          unix_micros(col("w.start")).as("s_us"), (unix_micros(col("w.end")) + 1).as("e_us"))
       val wins = events(s, d)
         .agg(min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi"))
         .select(explode(sequence(col("lo"), col("hi"))).as("day"))
@@ -651,10 +659,6 @@ object TimeWindowQueries {
     // Scale: ONE keyed shuffle; O(1) per-row window state.
     "q_win_debounce" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      // 12 h suppression window, single-sourced with the streaming twin
-      // (graft.streaming.DebounceStream) so the two forms can never
-      // silently debounce at different gaps
-      val gapUs = graft.streaming.DebounceStream.GapUs
       val wo = Window.partitionBy("user_id", "event_type")
         .orderBy("tus", "event_id")
       val flagged = events(s, d)
@@ -662,7 +666,7 @@ object TimeWindowQueries {
           unix_micros(col("ts")).as("tus"))
         .withColumn("prev", lag(col("tus"), 1).over(wo))
         .withColumn("brk",
-          when(col("prev").isNull || col("tus") - col("prev") >= gapUs, 1L)
+          when(col("prev").isNull || col("tus") - col("prev") >= DebounceGapUs, 1L)
             .otherwise(0L))
         .withColumn("sid", sum(col("brk")).over(
           wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1004,10 +1008,10 @@ object TimeWindowQueries {
     // sessionize pattern at a 12 h gap; keep-first per burst + the
     // burst size from the same grouping
     "q_win_debounce" ->
-      """WITH flagged AS (
+      s"""WITH flagged AS (
         |  SELECT event_id, user_id, event_type, epoch_us(ts) AS tus,
         |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 43200000000
+        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= $DebounceGapUs
         |         THEN 1 ELSE 0 END AS brk
         |  FROM events
         |  WINDOW w AS (PARTITION BY user_id, event_type ORDER BY epoch_us(ts), event_id)
@@ -1034,7 +1038,7 @@ object TimeWindowQueries {
     s"""WITH flagged AS (
       |  SELECT user_id, ts,
       |    CASE WHEN lag(ts) OVER w IS NULL
-      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= ${graft.streaming.Sessionize.GapUs}
+      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= $SessionGapUs
       |         THEN 1 ELSE 0 END AS brk
       |  FROM events
       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
@@ -1044,7 +1048,7 @@ object TimeWindowQueries {
       |  FROM flagged
       |), sess AS (
       |  SELECT user_id, min(epoch_us(ts)) AS s_us,
-      |    max(epoch_us(ts)) + ${graft.streaming.Sessionize.GapUs} AS e_us
+      |    max(epoch_us(ts)) + $SessionGapUs AS e_us
       |  FROM numbered GROUP BY user_id, sid
       |), b AS (SELECT min(CAST(ts AS DATE)) AS lo, max(CAST(ts AS DATE)) AS hi FROM events),
       |w AS (
@@ -1061,7 +1065,7 @@ object TimeWindowQueries {
       s"""WITH flagged AS (
         |  SELECT user_id, ts, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= ${graft.streaming.Sessionize.GapUs}
+        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= $SessionGapUs
         |         THEN 1 ELSE 0 END AS brk
         |  FROM events
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
@@ -1072,9 +1076,62 @@ object TimeWindowQueries {
         |)
         |SELECT user_id,
         |  min(epoch_us(ts)) AS start_us,
-        |  max(epoch_us(ts)) + ${graft.streaming.Sessionize.GapUs} AS end_us,
+        |  max(epoch_us(ts)) + $SessionGapUs AS end_us,
         |  count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS total
         |FROM numbered GROUP BY user_id, sid
         |ORDER BY user_id, start_us""".stripMargin
+
+  // package-private, not private: Spark's generated encoder code calls
+  // the constructors and accessors, which `private` would hide
+  private[operators] case class EventIn(user_id: Long, ts_us: Long, cents: Long)
+  private[operators] case class SessionAcc(start_us: Long, last_us: Long, n: Long, cents: Long)
+  private[operators] case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
+                                           n: Long, total_cents: Long)
+
+  /** One user's sessions: each group arrives complete, so the fold
+    * runs once over the events sorted by ts_us and flushes the open
+    * session at the end. An event less than a gap after the last one
+    * extends the session; equal timestamps need no tie-break, since
+    * they land in one session either way and cents addition commutes.
+    */
+  private def sessionsOf(userId: Long, events: Iterator[EventIn],
+                         state: GroupState[SessionAcc]): Iterator[SessionOut] = {
+    val sorted = events.toArray.sortBy(_.ts_us)
+    val out = Vector.newBuilder[SessionOut]
+    def close(a: SessionAcc) =
+      SessionOut(userId, a.start_us, a.last_us + SessionGapUs, a.n, a.cents)
+    var acc = SessionAcc(sorted.head.ts_us, sorted.head.ts_us, 1, sorted.head.cents)
+    sorted.iterator.drop(1).foreach { e =>
+      if (e.ts_us - acc.last_us < SessionGapUs)
+        acc = SessionAcc(acc.start_us, e.ts_us, acc.n + 1, acc.cents + e.cents)
+      else {
+        out += close(acc)
+        acc = SessionAcc(e.ts_us, e.ts_us, 1, e.cents)
+      }
+    }
+    out += close(acc)
+    out.result().iterator
+  }
+
+  /** q_session_state: sessionization through the typed
+    * flatMapGroupsWithState operator, with the same answer as the
+    * declarative q_win_session (session end = last event + gap).
+    * Money is accumulated in exact integer cents (inputs are on the
+    * 0.01 grid) and converted to DECIMAL at the boundary. Scale: one
+    * shuffle on user_id.
+    */
+  private def sessions(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    events(spark, sfDir)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        round(col("value") * 100).cast("long").as("cents"))
+      .as[EventIn]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(sessionsOf)
+      .toDF()
+      .select(col("user_id"), col("start_us"), col("end_us"), col("n"),
+        (col("total_cents").cast(Dec382) / lit(100)).cast(Dec382).as("total"))
+      .orderBy("user_id", "start_us")
+  }
 }

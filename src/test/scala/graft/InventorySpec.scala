@@ -75,6 +75,50 @@ class InventorySpec extends AnyFunSuite {
     assert(covered == docs, s"canonical groups cover $covered of $docs rows")
   }
 
+  test("q_session_state == q_win_session on the testdata and at the 10-minute gap boundary") {
+    // the two sessionizers share one oracle; the boundary rows pin where
+    // a session breaks: at a gap of exactly SessionGapUs, measured from
+    // the session's last event
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    import spark.implicits._
+    def digests(dir: String): Seq[Digest] =
+      Seq("q_session_state", "q_win_session").map(q => Digest.of(SparkEntry.queries(q)(spark, dir)))
+    for (dir <- Seq(sf, s"${new java.io.File(sf).getParent}/sf0.01")) {
+      val Seq(a, b) = digests(dir)
+      assert(a == b, s"$dir: q_session_state $a != q_win_session $b")
+    }
+    val g = operators.TimeWindowQueries.SessionGapUs
+    val t0 = 1704067200000000L // 2024-01-01 00:00:00 UTC
+    val events = Seq(
+      (1L, t0), (1L, t0 + g),                            // exactly one gap: splits
+      (2L, t0), (2L, t0 + g - 1),                        // 1 µs less: merges
+      (3L, t0), (3L, t0), (3L, t0),                      // equal timestamps: one session
+      (4L, t0), (4L, t0 + g - 1), (4L, t0 + 2 * g - 2))  // a chain of sub-gap steps: one session
+    val dir = java.nio.file.Files.createTempDirectory("graft_sessions").toFile
+    try {
+      events.zipWithIndex.map { case ((u, us), i) => (i.toLong, us, u, "view", 1.25, "{}") }
+        .toDF("event_id", "us", "user_id", "event_type", "value", "props")
+        .select(col("event_id"), timestamp_micros(col("us")).as("ts"), col("user_id"),
+          col("event_type"), col("value"), col("props"))
+        .write.parquet(s"$dir/events.parquet")
+      val Seq(a, b) = digests(dir.getPath)
+      assert(a == b, s"boundary rows: q_session_state $a != q_win_session $b")
+      val got = SparkEntry.queries("q_session_state")(spark, dir.getPath)
+        .select("user_id", "start_us", "end_us", "n").as[(Long, Long, Long, Long)].collect().toSeq
+      assert(got == Seq(
+        (1L, t0, t0 + g, 1L), (1L, t0 + g, t0 + 2 * g, 1L),
+        (2L, t0, t0 + 2 * g - 1, 2L),
+        (3L, t0, t0 + g, 3L),
+        (4L, t0, t0 + 3 * g - 2, 3L)))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(rm)
+        f.delete()
+      }
+      rm(dir)
+    }
+  }
+
   test("no query output has array/map/struct columns after Verify.sanitize") {
     // The driver's pandas comparator crashes on array cells (unhashable
     // numpy.ndarray) and renders decimals differently from DuckDB floats.
