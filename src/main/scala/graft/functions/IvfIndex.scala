@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -66,40 +66,6 @@ object IvfIndex {
     */
   val BroadcastMaxCids: Long = 100000L
 
-  /** Sidecar file names inside a cell-partitioned inverted store.
-    * Underscore-prefixed on purpose: Spark's file listing skips `_`/`.`
-    * paths, so the sidecar rides INSIDE the store directory without
-    * ever appearing in a data scan — it moves, copies, and snapshots
-    * with the index as one unit.
-    */
-  val MetaFileName: String = "_graft_index.json"
-  val CentsDirName: String = "_graft_centroids"
-  private val MetaFormat = "graft-ivf-v1"
-
-  /** The index's serving/monitoring contract as ONE value (round 20;
-    * VERDICT r19 #1): before this, the contract was loose scalars the
-    * caller had to carry and match — centroids, the drift floor τ, the
-    * calibQ τ was read at, (k, groupSize, nprobe, probeCells, dim),
-    * fileBudget — and a mismatched (floor, calibQ) pair silently
-    * skewed [[driftStats]]'s est_f (under-alarming if the floor was
-    * read at a lower quantile than the one est_f assumes). Persisted
-    * as [[MetaFileName]] next to the data by [[writeIndexMeta]] /
-    * [[buildIndex]] and read back by the path-only overloads of
-    * [[searchTopKAt]], [[driftStats]], and [[maintain]], which makes
-    * the mismatch impossible: the floor and its calibQ travel
-    * together, with the store.
-    *
-    * `centroidHash` pins the meta to the centroid table stored at
-    * [[CentsDirName]] (a commutative bit_xor of per-row xxhash64 — see
-    * [[centroidChecksum]]): a sidecar left stale by an out-of-band
-    * centroid rewrite is REJECTED at read time instead of silently
-    * routing against the wrong geometry.
-    */
-  case class IndexMeta(k: Long, groupSize: Int, nprobe: Int,
-                       probeCells: Int, dim: Int,
-                       floor: Double, calibQ: Double,
-                       fileBudget: Int, centroidHash: Long)
-
   private def dotD(x: Column, y: Column): Column =
     ColumnBridge.column(graft.gen.DotProductExpr(
       ColumnBridge.expression(x), ColumnBridge.expression(y)))
@@ -161,40 +127,9 @@ object IvfIndex {
                     groupSize: Int = 8, nprobe: Int = 2,
                     dim: Int = 64, kHint: Long = -1L,
                     broadcastMaxCids: Long = BroadcastMaxCids): DataFrame = {
-    val k = if (kHint >= 0L) kHint else cents.count()
-    // stage 1 ALWAYS broadcasts its g-struct routing array, so g is
-    // bounded by the absolute ceiling (not the overridable stage-2
-    // bound, which tests shrink to force the shuffle regime). Ceil
-    // division: groupMeansArr emits ⌈k/groupSize⌉ groups when k is not
-    // divisible (round-16 ADVICE — floor was permissive at the boundary).
-    val g = (k + groupSize.max(1) - 1) / groupSize.max(1)
-    require(g <= BroadcastMaxCids,
-      s"stage-1 routing array would hold $g group means " +
-        s"(> $BroadcastMaxCids): raise groupSize (≈ √k keeps both levels bounded)")
-    val gma = groupMeansArr(cents, groupSize, dim)
-    // stage 1: row-local top-nprobe groups — ascending sort on
-    // struct(-score, gid) == (score DESC, gid ASC), sliced in place
-    val probed = e.crossJoin(gma)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(slice(array_sort(transform(col("gma"), g => struct(
-          (-(dotD(col("embedding"), g.getField("gemb"))
-            / (col("nrm") * g.getField("gnrm")))).as("nscore"),
-          g.getField("gid").as("gid")))), 1, nprobe)).as("p"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("p").getField("gid").as("gid"))
     // stage 2: argmax over the probed groups' centroids only — highest
     // cosine wins, ties to the LOWEST cid via max(struct(score, -cid)).
-    // Small k: broadcast the centroid table. Past broadcastMaxCids:
-    // cell-keyed (gid) shuffle-hash join — the probed corpus exchanges
-    // once on gid (it was about to shuffle for the argmax groupBy
-    // anyway) and the k-row table exchanges once instead of being
-    // copied to every task. The shuffle_hash hint keeps the planner
-    // from sort-merge-joining a build side that fits per-partition.
-    val centsByGid = cents.withColumn("gid", expr(s"cid div $groupSize"))
-    val joined =
-      if (k <= broadcastMaxCids) probed.join(broadcast(centsByGid), Seq("gid"))
-      else probed.join(centsByGid.hint("shuffle_hash"), Seq("gid"))
-    joined
+    probedCentroids(e, cents, groupSize, nprobe, dim, kHint, broadcastMaxCids)
       .select(col("vec_id"), col("embedding"), col("nrm"),
         struct((dotD(col("embedding"), col("cemb")) / (col("nrm") * col("cnrm"))).as("cscore"),
           (-col("cid")).as("ncid")).as("cand"))
@@ -210,12 +145,7 @@ object IvfIndex {
     * already point large-k deployments here). Takes a PREBUILT inverted
     * file — the (vec_id, embedding, nrm, cell) output of
     * [[assignIndexed]] — so the index is built once and amortized
-    * across query batches; at 100 TB the deployment form is the
-    * assigned corpus written `partitionBy("cell")` to parquet
-    * ([[writeInverted]]), where [[searchTopKAt]] turns the probe into
-    * a static partition filter and each query batch reads ONLY its
-    * probed cells' files (measured: 174/800 files at |Q|=100,
-    * result-identical — SCALE.md §"Semantic dedup" round-17 (c)).
+    * across query batches.
     *
     * Query routing is the same two-level pass as assignment, kept
     * top-`probeCells` CELLS per query instead of argmax: stage 1 scores
@@ -228,10 +158,8 @@ object IvfIndex {
     * the [[graft.plans.TopKPerGroup]] bounded-heap operator (k-row heap
     * per query per partition, shuffle carries ≤ topK·queries·partitions
     * pre-filtered rows — never a full sort, never a whole-partition
-    * window). Queries are broadcast into the candidate join by default
-    * (`broadcastQueries` — a query batch is small next to the corpus);
-    * flip it off for offline mega-batches and the join exchanges on
-    * cell instead.
+    * window). The probed queries are broadcast into the candidate join
+    * (a query batch is small next to the corpus).
     *
     * WHEN TO TRUST THIS INDEX AT ALL — the silhouette gate, calibrated
     * (round 18; SCALE.md §"Semantic dedup" round-18 (b)): IVF routing
@@ -268,519 +196,35 @@ object IvfIndex {
                  topK: Int, groupSize: Int = 8, nprobe: Int = 2,
                  probeCells: Int = 2, dim: Int = 64, kHint: Long = -1L,
                  broadcastMaxCids: Long = BroadcastMaxCids,
-                 broadcastQueries: Boolean = true,
                  excludeSelf: Boolean = false): DataFrame = {
-    val k = searchGate(topK, nprobe, probeCells, groupSize, kHint, cents)
-    val pc = probedCellsOf(queries, cents, groupSize, nprobe, probeCells,
-      dim, k, broadcastMaxCids)
-    rankCandidates(pc, inverted, topK, broadcastQueries, excludeSelf)
-  }
-
-  /** Probed-cell cap for [[searchTopKAt]]'s static partition prune: the
-    * distinct probed cells collect to the driver to become the pruning
-    * IN-filter, so the list must stay literal-sized. Past it the batch
-    * is touching most of the index anyway — the full-scan
-    * [[searchTopK]] over the same files is the right plan there.
-    *
-    * THE BOUNDARY IS MEASURED, NOT A CLIFF (round 18, on a 12,500-cell
-    * layout — SCALE.md §"Semantic dedup" round-18): the IN-list plan's
-    * wall tracks the files actually read essentially proportionally
-    * all the way to 10⁴ literals (0.20 s at 100 cells, 0.55 s at 10³,
-    * 3.56 s at 10⁴, vs 4.56 s full scan) —
-    * analysis/planning of a 10⁴-literal isin adds nothing visible, and
-    * the collect itself is 10⁴ longs ≈ 80 KB. So the default exists to
-    * bound DRIVER list size, and a deployment with more cells can raise
-    * it via the `pruneMaxCells` parameter with measured headroom. The
-    * tempting driver-collect-free alternative — the q_join_dpp dynamic-
-    * pruning shape, joining the scan to the broadcast probe list — was
-    * measured NOT to prune on this layout (12,500/12,500 files read at
-    * every batch size): Spark's DPP inserts the runtime partition
-    * filter only when the build side carries a selective FILTER
-    * predicate it can see, and a derived probe-cell list presents
-    * none. The static IN-list is the right design; past the cap the
-    * honest fallback remains [[searchTopK]] over a full read, which at
-    * ≥ 80% probed cells costs within ~25% of the pruned plan anyway.
-    */
-  val PruneMaxCells: Int = 10000
-
-  /** [[searchTopK]] over an inverted file STORED as a cell-partitioned
-    * parquet directory (the [[writeInverted]] layout) — the 100 TB
-    * deployment form: the query batch's probed cells become a static
-    * partition filter, so the candidate read LISTS AND SCANS ONLY the
-    * probed cells' files instead of the whole index (file pruning at
-    * the source, measured in SCALE.md §"Semantic dedup" round-17 (c):
-    * 174/800 files at |Q|=100, result-identical — the IO-volume win
-    * that pays when |Q|·probeCells ≪ k with GB-scale cells, the
-    * small-batch/large-k serving shape; IvfIndexSpec pins result
-    * identity with the in-memory searchTopK and that the scan's
-    * partition filter engages). The probe pass runs TWICE — eagerly for
-    * the cell collect here and again inside the lazy result's candidate
-    * join. It is deliberately NOT checkpointed: a serving session calls
-    * this per batch, and a per-call eager checkpoint leaves residue the
-    * caller cannot release (local blocks pinned until driver GC, or
-    * `rdd-<id>` dirs under a reliable checkpoint dir — the exact
-    * unbounded-latency cleanup [[graft.functions.GraphPass.release]]
-    * exists to avoid; round-17 ADVICE). The double execution is sound
-    * because the probe is bit-deterministic (ascending folds, total tie
-    * orders — the object-doc contract), and |Q|-sized work is the cheap
-    * end of the plan; it does require BOTH input plans to be
-    * deterministic — `queries` AND `cents` (a non-deterministic
-    * centroid frame would route the join-side probe to cells absent
-    * from the collected IN-list and silently drop candidates; every
-    * in-repo caller passes a parquet read + filter or a checkpointed
-    * fit table). The contract has BEST-EFFORT enforcement (round 19,
-    * widened round 20): both plans are walked for non-deterministic
-    * expressions (`rand()`, `uuid()`, `shuffle()`, …) AND for
-    * un-ordered `limit` nodes (row-SET non-determinism), and the call
-    * fails loudly instead of routing wrong — materialize
-    * (checkpoint / write out) such a batch before searching. Residual
-    * gap: an RDD-backed source whose row set varies across executions
-    * passes both checks (see [[requireDeterministic]]).
-    *
-    * The distinct-cell collect is BOUNDED by construction:
-    * ≤ min(|Q|·probeCells, k) values, required ≤ [[PruneMaxCells]].
-    */
-  def searchTopKAt(queries: DataFrame, invertedPath: String, cents: DataFrame,
-                   topK: Int, groupSize: Int = 8, nprobe: Int = 2,
-                   probeCells: Int = 2, dim: Int = 64, kHint: Long = -1L,
-                   broadcastMaxCids: Long = BroadcastMaxCids,
-                   broadcastQueries: Boolean = true,
-                   excludeSelf: Boolean = false,
-                   pruneMaxCells: Int = PruneMaxCells): DataFrame = {
-    val spark = queries.sparkSession
-    val k = searchGate(topK, nprobe, probeCells, groupSize, kHint, cents)
-    requireDeterministic(queries, "queries")
-    requireDeterministic(cents, "cents")
-    val pc = probedCellsOf(queries, cents, groupSize, nprobe,
-      probeCells, dim, k, broadcastMaxCids)
-    // bounded collect (see scaladoc): ≤ min(|Q|·probeCells, k) longs
-    val cells = pc.select(col("cell")).distinct()
-      .limit(pruneMaxCells + 1).collect().map(_.getLong(0))
-    require(cells.length <= pruneMaxCells,
-      s"batch probes > $pruneMaxCells distinct cells — not selective enough " +
-        "for a static partition prune; use searchTopK over a full read instead " +
-        "(or raise pruneMaxCells — the IN-list plan is measured proportional " +
-        "through 10^4 literals, see PruneMaxCells)")
-    // partition-column inference may narrow cell to int — cast back so
-    // the probe equi-join key types match the in-memory form exactly
-    val inverted = spark.read.parquet(invertedPath)
-      .filter(col("cell").isin(cells: _*))
-      .withColumn("cell", col("cell").cast("long"))
-    rankCandidates(pc, inverted, topK, broadcastQueries, excludeSelf)
-  }
-
-  /** Write an inverted file ([[assignIndexed]] output) cell-partitioned
-    * for [[searchTopKAt]]. The repartition on cell keeps the file count
-    * at ~one per cell — without it EVERY write task opens a file in
-    * every cell directory it sees rows for (tasks × cells files, which
-    * at k=800/32 tasks is 25k tiny files and at deployment k is a
-    * namenode incident).
-    */
-  def writeInverted(inverted: DataFrame, path: String): Unit =
-    inverted.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** Commutative content checksum of a (cid, cemb, cnrm) centroid
-    * table: bit_xor of per-row xxhash64 — order- and layout-independent
-    * (XOR commutes), so the same rows hash the same however the table
-    * is partitioned. One k-row aggregate; k is bounded by the stage-1
-    * gate, so this never touches the corpus.
-    */
-  def centroidChecksum(cents: DataFrame): Long = {
-    val r = cents.select(col("cid"), col("cemb"), col("cnrm"))
-      .agg(expr("bit_xor(xxhash64(cid, cemb, cnrm))")).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  private def fsOf(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Persist the serving/monitoring contract next to the data (see
-    * [[IndexMeta]]): the centroid table lands at `<path>/_graft_centroids`
-    * (parquet, one file — k rows), the scalars at
-    * `<path>/_graft_index.json`. `floor`/`calibQ` are stored as raw IEEE
-    * bit patterns alongside their readable values, so the round-trip is
-    * bit-exact — the floor a monitor reads back IS the floor the
-    * calibration computed, to the last ulp. Returns the meta with
-    * `centroidHash` computed from `cents`.
-    */
-  def writeIndexMeta(spark: SparkSession, path: String, cents: DataFrame,
-                     k: Long, groupSize: Int, nprobe: Int, probeCells: Int,
-                     dim: Int, floor: Double, calibQ: Double,
-                     fileBudget: Int): IndexMeta = {
-    val meta = IndexMeta(k, groupSize, nprobe, probeCells, dim, floor, calibQ,
-      fileBudget, centroidChecksum(cents))
-    cents.select(col("cid"), col("cemb"), col("cnrm"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/$CentsDirName")
-    val json =
-      s"""{"format":"$MetaFormat","k":${meta.k},"group_size":${meta.groupSize},""" +
-      s""""nprobe":${meta.nprobe},"probe_cells":${meta.probeCells},"dim":${meta.dim},""" +
-      s""""floor":${meta.floor},"floor_bits":${java.lang.Double.doubleToLongBits(meta.floor)},""" +
-      s""""calib_q":${meta.calibQ},"calib_q_bits":${java.lang.Double.doubleToLongBits(meta.calibQ)},""" +
-      s""""file_budget":${meta.fileBudget},"centroid_hash":${meta.centroidHash}}"""
-    val (fs, _) = fsOf(spark, path)
-    val mp = new org.apache.hadoop.fs.Path(s"$path/$MetaFileName")
-    // write-then-rename so a reader never sees a HALF-WRITTEN sidecar:
-    // the visible file flips in one metadata op (a crash mid-write
-    // leaves only the .tmp, and readMeta's named missing-sidecar /
-    // corrupt-field errors cover the residue). The delete→rename pair
-    // is the same metadata-op window the maintain swap documents.
-    val mpTmp = new org.apache.hadoop.fs.Path(s"$path/$MetaFileName.tmp")
-    val out = fs.create(mpTmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(mp, false)
-    require(fs.rename(mpTmp, mp),
-      s"writeIndexMeta: could not move the sidecar into place at $mp")
-    meta
-  }
-
-  /** Read the [[IndexMeta]] sidecar; a store without one (pre-sidecar
-    * layouts, or a bare [[writeInverted]]) fails with the build remedy
-    * rather than a generic missing-path error.
-    */
-  def readMeta(spark: SparkSession, path: String): IndexMeta = {
-    val (fs, _) = fsOf(spark, path)
-    val mp = new org.apache.hadoop.fs.Path(s"$path/$MetaFileName")
-    require(fs.exists(mp),
-      s"no index metadata at $path/$MetaFileName — this store was written " +
-        "without its serving contract; build it with IvfIndex.buildIndex " +
-        "(or writeInverted + writeIndexMeta), or pass the centroids and " +
-        "calibration explicitly to the full-argument entry points")
-    val in = fs.open(mp)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    def long(field: String): Long =
-      s""""$field":(-?\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"index metadata at $path/$MetaFileName is missing field `$field` — " +
-            "rewrite the sidecar with writeIndexMeta"))
-    require(json.contains(s""""format":"$MetaFormat""""),
-      s"index metadata at $path/$MetaFileName is not $MetaFormat — " +
-        "written by a different tool or version; rewrite it with writeIndexMeta")
-    IndexMeta(long("k"), long("group_size").toInt, long("nprobe").toInt,
-      long("probe_cells").toInt, long("dim").toInt,
-      java.lang.Double.longBitsToDouble(long("floor_bits")),
-      java.lang.Double.longBitsToDouble(long("calib_q_bits")),
-      long("file_budget").toInt, long("centroid_hash"))
-  }
-
-  /** The stored centroid table, VERIFIED against the sidecar's
-    * checksum: an out-of-band rewrite of `_graft_centroids` that didn't
-    * refresh the json (or vice versa) fails loudly here instead of
-    * silently routing searches and skewing est_f against mismatched
-    * geometry — the exact silent-wrong path the sidecar exists to
-    * close. The verify is one k-row aggregate per call; k is bounded
-    * by the stage-1 gate, so the cost is noise next to any search.
-    */
-  def readCentroids(spark: SparkSession, path: String, meta: IndexMeta): DataFrame = {
-    val cents = spark.read.parquet(s"$path/$CentsDirName")
-      .select(col("cid"), col("cemb"), col("cnrm"))
-    val got = centroidChecksum(cents)
-    require(got == meta.centroidHash,
-      s"stale index metadata at $path: stored centroids hash to $got but the " +
-        s"sidecar records ${meta.centroidHash} — the centroid table and the " +
-        "calibration were written at different times; re-run writeIndexMeta " +
-        "(or buildIndex) so the floor/calibQ/centroids travel as one unit")
-    cents
-  }
-
-  /** Fit-to-store in one verb: assign `e` against `cents`, write the
-    * cell-partitioned inverted file, calibrate the drift floor on
-    * `calibSample` (held-out IN-distribution vectors — see
-    * [[routeFloor]]'s sampling caveats), and persist the whole serving
-    * contract as the [[IndexMeta]] sidecar. After this, the path alone
-    * is the index: `searchTopKAt(queries, path, topK)`,
-    * `driftStats(spark, path, batch)`, and `maintain(spark, path)`
-    * all read their parameters from the store itself.
-    */
-  def buildIndex(e: DataFrame, cents: DataFrame, path: String,
-                 calibSample: DataFrame, calibQ: Double = 0.10,
-                 groupSize: Int = 8, nprobe: Int = 2, probeCells: Int = 2,
-                 dim: Int = 64, kHint: Long = -1L, fileBudget: Int = -1,
-                 broadcastMaxCids: Long = BroadcastMaxCids): IndexMeta = {
-    val spark = e.sparkSession
-    val k = if (kHint >= 0L) kHint else cents.count()
-    writeInverted(assignIndexed(e, cents, groupSize, nprobe, dim, k,
-      broadcastMaxCids), path)
-    val floor = routeFloor(calibSample, cents, calibQ, groupSize, nprobe,
-      dim, k, broadcastMaxCids)
-    // default budget = 8 append generations over ~one-file-per-cell —
-    // the measured round-18 file-count law (files ≈ cells·(1+gens))
-    val budget = if (fileBudget > 0) fileBudget
-      else (spark.read.parquet(path).inputFiles.length * 8).max(1)
-    writeIndexMeta(spark, path, cents, k, groupSize, nprobe, probeCells,
-      dim, floor, calibQ, budget)
-  }
-
-  /** [[searchTopKAt]] with every parameter read from the store's own
-    * sidecar — the serving form that cannot mis-carry the contract.
-    * No-default overloads (Scala allows defaults on only one
-    * alternative): the 3-arg form serves at the calibrated
-    * (nprobe, probeCells); the 5-arg form is the WIDEN-PROBES verb —
-    * the measured cheap drift mitigation (stale-index recall
-    * 0.786 → 0.961 at (8,8), ~1.4× wall — [[appendInverted]]) as an
-    * explicit override of just the probe budget.
-    */
-  def searchTopKAt(queries: DataFrame, path: String, topK: Int): DataFrame = {
-    val m = readMeta(queries.sparkSession, path)
-    searchTopKAt(queries, path, topK, m.nprobe, m.probeCells)
-  }
-
-  def searchTopKAt(queries: DataFrame, path: String, topK: Int,
-                   nprobe: Int, probeCells: Int): DataFrame =
-    searchTopKAt(queries, path, topK, nprobe, probeCells, excludeSelf = false)
-
-  /** The widen-probes form plus the excludeSelf flag — the floor-free
-    * recall-audit shape (corpus-drawn queries carry a guaranteed
-    * rank-1 self-hit that floors recall@k at 1/k; see [[searchTopK]]).
-    */
-  def searchTopKAt(queries: DataFrame, path: String, topK: Int,
-                   nprobe: Int, probeCells: Int,
-                   excludeSelf: Boolean): DataFrame = {
-    val spark = queries.sparkSession
-    val m = readMeta(spark, path)
-    val cents = readCentroids(spark, path, m)
-    searchTopKAt(queries, path, cents, topK, m.groupSize, nprobe,
-      probeCells, m.dim, m.k, BroadcastMaxCids, broadcastQueries = true,
-      excludeSelf = excludeSelf)
-  }
-
-  /** [[driftStats]] with floor, calibQ, and routing parameters read
-    * from the store's sidecar — closes the loose-scalar mismatch
-    * (VERDICT r19 #1): the floor judged against is BY CONSTRUCTION the
-    * one calibrated at build time, at the calibQ est_f assumes.
-    */
-  def driftStats(spark: SparkSession, path: String, queries: DataFrame): DataFrame = {
-    val m = readMeta(spark, path)
-    val cents = readCentroids(spark, path, m)
-    driftStats(queries, cents, m.floor, m.calibQ, m.groupSize, m.nprobe,
-      m.dim, m.k)
-  }
-
-  /** [[maintain]] with the file budget read from the store's sidecar. */
-  def maintain(spark: SparkSession, path: String): Boolean =
-    maintain(spark, path, readMeta(spark, path).fileBudget)
-
-  /** Read a cell-partitioned inverted store, tolerating a concurrent
-    * [[maintain]] swap (round 20; VERDICT r19 #2): the two-rename swap
-    * has a window where the store path is briefly missing while
-    * `<path>.maintain.old` (and possibly `.maintain.tmp`) exists. A
-    * plain `spark.read.parquet` there throws a generic missing-path
-    * error; this helper detects the swap markers and retries briefly
-    * (default ≤ 5 s — the swap itself is two metadata renames,
-    * milliseconds on HDFS), then fails with the recovery step by name
-    * if the window never closes (a maintain that DIED mid-swap — run
-    * maintain(spark, path) on the ingest owner to auto-restore, or
-    * rename `<path>.maintain.old` back by hand). A missing path with
-    * NO swap markers fails immediately — that is not a swap, it is a
-    * wrong path.
-    */
-  def readInverted(spark: SparkSession, path: String,
-                   attempts: Int = 20, waitMs: Long = 250L): DataFrame = {
-    val (fs, target) = fsOf(spark, path)
-    val old = new org.apache.hadoop.fs.Path(path + ".maintain.old")
-    val tmp = new org.apache.hadoop.fs.Path(path + ".maintain.tmp")
-    var tried = 0
-    while (!fs.exists(target)) {
-      val midSwap = fs.exists(old) || fs.exists(tmp)
-      tried += 1
-      // a swap that closes between the two probes leaves no markers and
-      // the store back in place: probe the store again before failing
-      if (!midSwap && !fs.exists(target))
-        throw new IllegalStateException(
-          s"inverted store not found at $path (and no maintain-swap markers " +
-            "present — this is a missing store, not a swap in progress)")
-      if (midSwap) {
-        if (tried >= attempts)
-          throw new IllegalStateException(
-            s"inverted store missing at $path with $path.maintain.old present " +
-              s"after $attempts checks — a maintain died between its two renames; " +
-              "the original store is intact at the .maintain.old path: run " +
-              "IvfIndex.maintain(spark, path) from the ingest owner to " +
-              "auto-restore it, or rename the directory back by hand")
-        Thread.sleep(waitMs)
-      }
-    }
-    spark.read.parquet(path).withColumn("cell", col("cell").cast("long"))
-  }
-
-  /** Incrementally add new vectors to an existing cell-partitioned
-    * inverted file — the continuous-ingest half of the index lifecycle
-    * (a training-data corpus grows daily; rebuilding a 100 TB index
-    * per batch is not a plan). The batch is assigned against the SAME
-    * frozen centroid table the index was built with and appended
-    * partition-wise: new files land ONLY in the touched cells'
-    * directories, existing files are never rewritten, and readers see
-    * the append atomically per file. Because cell membership is a pure
-    * function of (vector, centroids), a search over base+appended is
-    * IDENTICAL to a search over a full rebuild of the union
-    * (IvfIndexSpec pins it) — the classic IVF add posture. Centroid
-    * drift is the caller's trade, exactly as in production IVF: appends
-    * against stale centroids degrade routing recall, never correctness
-    * of the probed-cell search itself.
-    *
-    * THE DRIFT COST IS MEASURED (round 18 — SCALE.md §"Semantic
-    * dedup" round-18 (a)): appending
-    * distribution-SHIFTED batches (new clusters in new locations) at
-    * 10/25/50% of the corpus against frozen k=800 centroids, floor-free
-    * recall@10 for drifted-population queries reads a FLAT **0.786 at
-    * every fraction** vs 0.947–0.990 after a refit (base-population
-    * queries hold 0.962 untouched throughout). The loss is
-    * per-POPULATION, not cumulative — a shifted cluster lands whole in
-    * one far stale cell, so each drifted query pays a fixed ~0.18
-    * routing penalty however much shifted data has accumulated. The
-    * refit-cadence rule that follows: corpus recall ≈
-    * (1−f)·0.96 + f·0.79 where f is the out-of-distribution share of
-    * the query mix, so refit when f exceeds your recall budget — e.g.
-    * keep recall ≥ 0.95 ⇒ refit by f ≈ 6%; a 0.90 SLO tolerates
-    * f ≈ 35%. AND f IS OBSERVABLE (round 19): [[driftStats]] scores
-    * each query batch's stage-1 routing (no corpus access — the best-
-    * probe cosine collapses for exactly the OOD population) against a
-    * [[routeFloor]] calibrated at fit time; its est_f is a measured
-    * lower bound on f — watch est_f, widen probes when it crosses your
-    * budget, refit when the probe premium stops being acceptable
-    * (measured: est_f tracks true f
-    * monotonically at f = 0/10/25/50% with the in-distribution control
-    * at ≈ 0; SCALE.md §"Semantic dedup" round-19). In-distribution appends (the common ingest) are MEASURED
-    * free, not assumed: a 25% batch of new members of existing
-    * clusters reads 0.965 recall under the stale centroids vs 0.960
-    * after a refit — no drift, no refit needed. And because the
-    * penalty is pure routing loss, the CHEAP mitigation is a wider
-    * probe budget at serving time: on the stale index the drifted
-    * population recovers 0.786 → 0.912 → 0.961 at (nprobe, probeCells)
-    * (4,4) / (8,8) — matching the refit's 0.947 at ~1.4× search wall
-    * and zero rebuild. Widen probes first; refit when the probe
-    * premium stops being acceptable. One honest refit caveat,
-    * measured at f = 50%: the fresh fit reallocates centroids toward
-    * the now-large new region (drift 0.990, base 0.926) — refitting
-    * trades a little base recall for the new population's.
-    *
-    * SIZE YOUR BATCHES: hive-style partitioning writes ≥ one file per
-    * TOUCHED cell per append, regardless of rows — a small scattered
-    * batch is the worst case (measured: a 2k-row batch over 800 cells
-    * appended 710 ~3-row files and cost 9.9 s vs 4.6 s for a full
-    * 202k-row rebuild, while a 100k-row batch appended in 3.6 s vs
-    * 5.6 s for its union rebuild — both ends of the curve in
-    * SCALE.md §"Semantic dedup" round-17 (c)).
-    * Accumulate micro-batches upstream until rows ≳ touched-cells ×
-    * target-rows-per-file before appending, and compact (periodic
-    * [[writeInverted]] — the q_sink_compaction posture) when append
-    * generations pile up; the append wins exactly when the alternative
-    * is re-assigning and rewriting an index that dwarfs the batch.
-    *
-    * `e`: (vec_id, embedding, nrm > 0) — the [[assignIndexed]] input
-    * shape. Same size gates as assignment apply.
-    */
-  def appendInverted(e: DataFrame, cents: DataFrame, path: String,
-                     groupSize: Int = 8, nprobe: Int = 2,
-                     dim: Int = 64, kHint: Long = -1L,
-                     broadcastMaxCids: Long = BroadcastMaxCids): Unit =
-    assignIndexed(e, cents, groupSize, nprobe, dim, kHint, broadcastMaxCids)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-
-  /** Compact a cell-partitioned inverted store when append generations
-    * have pushed its file count past `fileBudget` — the round-18
-    * compaction RULE (files ≈ cells × (1 + generations), measured:
-    * 8 scattered 25k-row appends grew 800 → 7,200 files and one
-    * [[writeInverted]] rewrite restored 800 in 5.55 s — SCALE.md
-    * §"Semantic dedup" round-18 (d)) turned into a VERB (round 19):
-    * read the store, count files, and if over budget rewrite to ~one
-    * file per cell via a temp directory + rename swap. Under budget the
-    * store is left byte-untouched and the call returns false.
-    *
-    * Safety: the rewrite lands in `<path>.maintain.tmp` and is
-    * row-count-verified against the original BEFORE the original is
-    * touched — a failed or short rewrite can never destroy index data.
-    * The swap is two filesystem renames (atomic metadata ops on HDFS;
-    * emulated on object stores), so a reader listing the directory
-    * between them sees a missing path rather than mixed generations —
-    * run maintain from the ingest owner, between appends, exactly like
-    * the appends themselves (single-writer posture); concurrent READERS
-    * should go through [[readInverted]], which detects the swap markers
-    * and retries across the window instead of failing on the missing
-    * path. CRASH RECOVERY is built in (round 20; round-19 ADVICE): a
-    * maintain that died between its two renames leaves the store only
-    * at `<path>.maintain.old` — the next maintain call detects that
-    * state at entry and restores it before doing anything else, so the
-    * store is never more than one maintain call away from readable.
-    * The [[IndexMeta]] sidecar (and stored centroids), when present,
-    * are carried through the rewrite byte-for-byte — compaction moves
-    * data bytes, never the serving contract.
-    *
-    * Cadence: pick fileBudget ≈ cells × G for the G append generations
-    * you are willing to carry; the measured file-count law makes the
-    * trigger arithmetic, and the price is one read + write of the
-    * store (the safety pre-count rides the rewrite job as an observe()
-    * metric — round 20) plus one verify read of the compacted output.
-    */
-  def maintain(spark: SparkSession, path: String, fileBudget: Int): Boolean = {
-    require(fileBudget > 0, s"need fileBudget > 0, got $fileBudget")
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".maintain.tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".maintain.old")
-    if (!fs.exists(target) && fs.exists(old)) {
-      // a previous maintain died between its renames: the original
-      // (always-complete) store is at .maintain.old — restore it first.
-      // tmp may hold a complete rewrite, but the verified-original is
-      // the conservative restore source; the rewrite re-runs below.
-      System.err.println(s"[ivf-maintain] $path missing with ${old} present — " +
-        "restoring the store from the interrupted swap")
-      require(fs.rename(old, target),
-        s"maintain: could not restore $path from $old — restore it by hand " +
-          s"(rename $old back) before retrying")
-      fs.delete(tmp, true)
-    }
-    val before = spark.read.parquet(path)
-      .withColumn("cell", col("cell").cast("long"))
-    val filesBefore = before.inputFiles.length
-    if (filesBefore <= fileBudget) return false
-    fs.delete(tmp, true); fs.delete(old, true)
-    // the source row count rides the rewrite job itself (round 20; the
-    // r19 verdict's remaining maintain nit): an observe() metric on the
-    // read side of the write makes the safety pre-count free instead of
-    // a separate full pass — at a 100 TB store that pass WAS a third of
-    // maintain's cost. The verify read of tmp below stays a real read:
-    // it proves the rewrite's bytes are durable and parseable, which no
-    // write-side metric can.
-    val obs = org.apache.spark.sql.Observation(s"ivf_maintain_${System.nanoTime()}")
-    writeInverted(before.observe(obs, count(lit(1)).as("rows")), tmp.toString)
-    val rowsBefore = obs.get("rows").asInstanceOf[Long]
-    // verify the rewrite BEFORE touching the original: a lost-rows
-    // compaction must abort with the store intact
-    val rowsAfter = spark.read.parquet(tmp.toString).count()
-    if (rowsAfter != rowsBefore) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(s"maintain rewrite holds $rowsAfter rows, " +
-        s"store holds $rowsBefore — aborted, store untouched")
-    }
-    // the serving contract travels with the store: copy the sidecar
-    // (scalars + stored centroids) into the rewrite before the swap
-    for (name <- Seq(MetaFileName, CentsDirName)) {
-      val src = new org.apache.hadoop.fs.Path(s"$path/$name")
-      if (fs.exists(src))
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-          new org.apache.hadoop.fs.Path(s"${tmp.toString}/$name"),
-          false, spark.sparkContext.hadoopConfiguration)
-    }
-    require(fs.rename(target, old), s"maintain: could not move $path aside")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(old, target) // restore; the store was never lost
-      throw new IllegalStateException(
-        s"maintain: swap into $path failed; original restored")
-    }
-    fs.delete(old, true)
-    true
+    require(topK > 0 && nprobe > 0 && probeCells > 0,
+      s"need topK/nprobe/probeCells > 0, got $topK/$nprobe/$probeCells")
+    // stage 2: per query its top-probeCells cells, as (q_id, qe, qn, cell)
+    val pc = probedCentroids(queries, cents, groupSize, nprobe, dim, kHint,
+      broadcastMaxCids)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("nrm").as("qn"),
+        struct(
+          (-(dotD(col("embedding"), col("cemb")) / (col("nrm") * col("cnrm")))).as("nscore"),
+          col("cid").as("cid")).as("cand"))
+      .groupBy("q_id")
+      .agg(first(col("qe")).as("qe"), first(col("qn")).as("qn"),
+        slice(array_sort(collect_list(col("cand"))), 1, probeCells).as("cells"))
+      .select(col("q_id"), col("qe"), col("qn"),
+        explode(col("cells")).as("pc"))
+      .select(col("q_id"), col("qe"), col("qn"), col("pc").getField("cid").as("cell"))
+    // candidate join + exact-cosine rank through the bounded-heap top-k
+    // (this library path need not go through SparkEntry.queries, so it
+    // installs the strategy itself; the install is idempotent)
+    graft.plans.TopKPerGroupStrategy.register(queries.sparkSession)
+    val scoredAll = broadcast(pc).join(inverted, Seq("cell"))
+      .select(col("q_id"), col("vec_id").as("cand_id"),
+        (dotD(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("cos"))
+    val scored =
+      if (excludeSelf) scoredAll.filter(col("q_id") =!= col("cand_id"))
+      else scoredAll
+    graft.plans.TopKPerGroup(scored, Seq("q_id"),
+      Seq(("cos", false), ("cand_id", true)), topK, rnName = "rnk")
+      .select(col("q_id"), col("cand_id"), col("cos"), col("rnk"))
   }
 
   /** Per-query ROUTING SCORE — the drift detector's raw signal
@@ -802,58 +246,24 @@ object IvfIndex {
                   groupSize: Int = 8, nprobe: Int = 2,
                   dim: Int = 64, kHint: Long = -1L,
                   broadcastMaxCids: Long = BroadcastMaxCids): DataFrame = {
-    val k = if (kHint >= 0L) kHint else cents.count()
-    val g = (k + groupSize.max(1) - 1) / groupSize.max(1)
-    require(g <= BroadcastMaxCids,
-      s"stage-1 routing array would hold $g group means " +
-        s"(> $BroadcastMaxCids): raise groupSize (≈ √k keeps both levels bounded)")
-    val gma = groupMeansArr(cents, groupSize, dim)
-    val probed = queries.crossJoin(gma)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("nrm").as("qn"),
-        explode(slice(array_sort(transform(col("gma"), gg => struct(
-          (-(dotD(col("embedding"), gg.getField("gemb"))
-            / (col("nrm") * gg.getField("gnrm")))).as("nscore"),
-          gg.getField("gid").as("gid")))), 1, nprobe)).as("p"))
-      .select(col("q_id"), col("qe"), col("qn"), col("p").getField("gid").as("gid"))
-    val centsByGid = cents.withColumn("gid", expr(s"cid div $groupSize"))
-    val joined =
-      if (k <= broadcastMaxCids) probed.join(broadcast(centsByGid), Seq("gid"))
-      else probed.join(centsByGid.hint("shuffle_hash"), Seq("gid"))
-    joined
-      .select(col("q_id"),
-        (dotD(col("qe"), col("cemb")) / (col("qn") * col("cnrm"))).as("s"))
+    probedCentroids(queries, cents, groupSize, nprobe, dim, kHint, broadcastMaxCids)
+      .select(col("vec_id").as("q_id"),
+        (dotD(col("embedding"), col("cemb")) / (col("nrm") * col("cnrm"))).as("s"))
       .groupBy("q_id").agg(max(col("s")).as("route_score"))
   }
 
-  /** Calibrate the drift floor τ: the `calibQ`-quantile of
-    * [[routeScores]] over an IN-DISTRIBUTION base sample (held-out
-    * corpus vectors, scored against the same centroids the index
-    * serves with) — computed once at fit/refit time and carried as a
-    * scalar next to the centroid table. The collect is ONE double
-    * (a 1-row aggregate), bounded by construction.
-    */
-  def routeFloor(baseSample: DataFrame, cents: DataFrame,
-                 calibQ: Double = 0.10,
-                 groupSize: Int = 8, nprobe: Int = 2,
-                 dim: Int = 64, kHint: Long = -1L,
-                 broadcastMaxCids: Long = BroadcastMaxCids): Double = {
-    require(calibQ > 0 && calibQ < 1, s"need 0 < calibQ < 1, got $calibQ")
-    routeScores(baseSample, cents, groupSize, nprobe, dim, kHint, broadcastMaxCids)
-      .agg(percentile_approx(col("route_score"), lit(calibQ), lit(100000)).as("f"))
-      .head().getDouble(0)
-  }
-
-  /** The DRIFT MONITOR (round 19; VERDICT r18 #1) — turns the
-    * refit-cadence rule's f (the out-of-distribution share of the query
-    * mix, recall ≈ (1−f)·0.96 + f·0.79, see [[appendInverted]]) from an
-    * unobservable into a per-batch statistic. Returns ONE row over the
-    * batch's [[routeScores]]:
+  /** The DRIFT MONITOR (round 19; VERDICT r18 #1) — turns f, the
+    * out-of-distribution share of the query mix (a shifted cluster has
+    * no centroid of its own, so its queries lose recall to routing),
+    * from an unobservable into a per-batch statistic. Returns ONE row
+    * over the batch's [[routeScores]]:
     *
     *   n_queries, mean_score, p10_score, p50_score — the score
     *     distribution (quantiles via percentile_approx, an aggregate —
     *     no sort, no collect);
-    *   below_frac — fraction of queries scoring under the calibrated
-    *     floor τ ([[routeFloor]] at quantile `calibQ` on a base sample);
+    *   below_frac — fraction of queries scoring under the floor τ, the
+    *     `calibQ`-quantile of [[routeScores]] over an IN-DISTRIBUTION
+    *     base sample scored against the same centroids;
     *   est_f — the implied OOD share: below_frac ≈ (1−f)·calibQ + f·β
     *     where β = P(an OOD query scores < τ), so with β = 1,
     *     est_f = max(0, (below_frac − calibQ) / (1 − calibQ)) is a
@@ -865,27 +275,16 @@ object IvfIndex {
     *     — monotone and conservative (β ≈ 0.73–0.91: about ¾ of OOD
     *     queries collapse below the corpus-p10 floor) — while the
     *     in-distribution control (25% fresh members of existing
-    *     clusters) reads 0.00. Read thresholds off that table, not off
-    *     f literally: a 0.95 recall SLO (refit by f ≈ 6–10%) alarms
-    *     around est_f ≈ 0.06. Calibration caveats, measured: (1) route
-    *     scores are CLUSTER-correlated, so the [[routeFloor]] sample
+    *     clusters) reads 0.00. Calibration caveats, measured: (1) route
+    *     scores are CLUSTER-correlated, so the floor's base sample
     *     must span enough clusters — a 20-cluster sample misread the
     *     in-distribution below_frac as 0.21; 80 clusters read 0.09.
     *     (2) Floor and thresholds are K-SPECIFIC, like the silhouette
     *     gate's bands: at k=80 the same mixes read est_f
     *     0.00/0.00/0.15/0.31 — more conservative, and self-consistently
     *     so, because the drift penalty itself nearly vanishes at coarse
-    *     k (stale recall 0.992→0.972; big cells catch the shifted
-    *     clusters' neighbors). Calibrate at the k you serve with —
-    *     [[routeFloor]] on a base sample, then [[driftStats]] on
-    *     batches of known mix at that k.
-    *
-    * Deployment loop: score every query batch (query-stream cost — no
-    * corpus access); when est_f crosses the probe-widening threshold,
-    * widen (nprobe, probeCells) (measured: (8,8) recovers 0.961 on a
-    * stale index at ~1.4× search wall); when the probe premium stops
-    * being acceptable, refit — the full playbook with every number is
-    * README §"Index operations".
+    *     k (big cells catch the shifted clusters' neighbors). Calibrate
+    *     the floor at the k you serve with.
     */
   def driftStats(queries: DataFrame, cents: DataFrame, floor: Double,
                  calibQ: Double = 0.10,
@@ -912,115 +311,50 @@ object IvfIndex {
           .otherwise(lit(null).cast("double")))
   }
 
-  /** Fail fast when a plan that [[searchTopKAt]] will execute TWICE
-    * carries non-determinism — re-execution could probe different cells
-    * than the collected IN-list and silently drop candidates (round 19
-    * / round-18 ADVICE). Two checks on the analyzed plan (pre-optimizer,
-    * so nothing is hidden by rewrites): non-deterministic EXPRESSIONS
-    * (rand()/uuid()/shuffle()/…), and un-ordered GlobalLimit nodes —
-    * a `limit(n)` without an `orderBy` selects arbitrary rows per
-    * execution on multi-partition input, row-SET non-determinism the
-    * expression walk cannot see (round-19 ADVICE).
-    *
-    * BEST-EFFORT enforcement, not a proof: residual gaps remain — an
-    * RDD-backed source whose row set varies across executions passes
-    * both checks, and conversely a non-deterministic PASSENGER column
-    * that column pruning would drop before the probe is still rejected
-    * (the walk runs pre-pruning, the conservative side). The remedy in
-    * every case is the same: materialize the batch (checkpoint or write
-    * it out) and search over the materialized table.
+  /** The one routing path of every consumer: stage 1 keeps each row's
+    * top-`nprobe` groups row-locally — ascending sort on
+    * struct(-score, gid) == (score DESC, gid ASC), sliced in place —
+    * and stage 2 joins the probed groups' centroids. Output: one row
+    * per (vector, probed centroid) as (gid, vec_id, embedding, nrm,
+    * cid, cemb, cnrm); each consumer folds its own stage-2 score.
     */
-  private def requireDeterministic(df: DataFrame, what: String): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Sort}
-    val analyzed = df.queryExecution.analyzed
-    val nondet = analyzed.collect {
-      case p if p.expressions.exists(!_.deterministic) => p.nodeName
-    }
-    require(nondet.isEmpty,
-      s"searchTopKAt executes its probe pass twice, so the `$what` plan must be " +
-        s"deterministic; non-deterministic expressions found in: ${nondet.mkString(", ")} " +
-        "(rand()/uuid()/shuffle()/…) — materialize the batch first " +
-        "(checkpoint or write it out) and search over the materialized table")
-    val unorderedLimits = analyzed.collect {
-      case gl: GlobalLimit
-        if gl.child.collectFirst { case s: Sort if s.global => s }.isEmpty => gl.nodeName
-    }
-    require(unorderedLimits.isEmpty,
-      s"searchTopKAt executes its probe pass twice, so the `$what` plan must be " +
-        "deterministic; it carries a limit without an ordering, which selects " +
-        "arbitrary rows per execution on multi-partition input — add an orderBy " +
-        "before the limit, or materialize the batch first (checkpoint or write " +
-        "it out) and search over the materialized table")
-  }
-
-  /** Shared argument gate for the search entry points; returns k. */
-  private def searchGate(topK: Int, nprobe: Int, probeCells: Int,
-                         groupSize: Int, kHint: Long, cents: DataFrame): Long = {
-    require(topK > 0 && nprobe > 0 && probeCells > 0,
-      s"need topK/nprobe/probeCells > 0, got $topK/$nprobe/$probeCells")
+  private def probedCentroids(e: DataFrame, cents: DataFrame,
+                              groupSize: Int, nprobe: Int, dim: Int,
+                              kHint: Long, broadcastMaxCids: Long): DataFrame = {
     val k = if (kHint >= 0L) kHint else cents.count()
-    // ceil division, as in assignIndexed (round-16 ADVICE)
+    // stage 1 ALWAYS broadcasts its g-struct routing array, so g is
+    // bounded by the absolute ceiling (not the overridable stage-2
+    // bound, which tests shrink to force the shuffle regime). Ceil
+    // division: groupMeansArr emits ⌈k/groupSize⌉ groups when k is not
+    // divisible (round-16 ADVICE — floor was permissive at the boundary).
     val g = (k + groupSize.max(1) - 1) / groupSize.max(1)
     require(g <= BroadcastMaxCids,
       s"stage-1 routing array would hold $g group means " +
         s"(> $BroadcastMaxCids): raise groupSize (≈ √k keeps both levels bounded)")
-    k
-  }
-
-  /** Stages 1+2 of the retrieval probe — per query its top-`probeCells`
-    * cells, as (q_id, qe, qn, cell). Stage 1 is the row-local broadcast
-    * group-means routing; stage 2 ranks the probed groups' centroids
-    * with a map-side-combined collect_list bounded at nprobe·groupSize
-    * rows per query (sorted + sliced in place — window-free,
-    * order-independent by array_sort), under the same centroid-side
-    * size gate as assignment.
-    */
-  private def probedCellsOf(queries: DataFrame, cents: DataFrame,
-                            groupSize: Int, nprobe: Int, probeCells: Int,
-                            dim: Int, k: Long, broadcastMaxCids: Long): DataFrame = {
-    val gma = groupMeansArr(cents, groupSize, dim)
-    val probed = queries.crossJoin(gma)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("nrm").as("qn"),
+    val probed = e.crossJoin(groupMeansArr(cents, groupSize, dim))
+      .select(col("vec_id"), col("embedding"), col("nrm"),
         explode(slice(array_sort(transform(col("gma"), g => struct(
           (-(dotD(col("embedding"), g.getField("gemb"))
             / (col("nrm") * g.getField("gnrm")))).as("nscore"),
           g.getField("gid").as("gid")))), 1, nprobe)).as("p"))
-      .select(col("q_id"), col("qe"), col("qn"), col("p").getField("gid").as("gid"))
-    val centsByGid = cents.withColumn("gid", expr(s"cid div $groupSize"))
-    val cjoined =
-      if (k <= broadcastMaxCids) probed.join(broadcast(centsByGid), Seq("gid"))
-      else probed.join(centsByGid.hint("shuffle_hash"), Seq("gid"))
-    cjoined
-      .select(col("q_id"), col("qe"), col("qn"), struct(
-        (-(dotD(col("qe"), col("cemb")) / (col("qn") * col("cnrm")))).as("nscore"),
-        col("cid").as("cid")).as("cand"))
-      .groupBy("q_id")
-      .agg(first(col("qe")).as("qe"), first(col("qn")).as("qn"),
-        slice(array_sort(collect_list(col("cand"))), 1, probeCells).as("cells"))
-      .select(col("q_id"), col("qe"), col("qn"),
-        explode(col("cells")).as("pc"))
-      .select(col("q_id"), col("qe"), col("qn"), col("pc").getField("cid").as("cell"))
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        col("p").getField("gid").as("gid"))
+    joinCentroids(probed, cents.withColumn("gid", expr(s"cid div $groupSize")),
+      "gid", k, broadcastMaxCids)
   }
 
-  /** Candidate join + exact-cosine rank through the bounded-heap top-k
-    * (this library path need not go through SparkEntry.queries, so it
-    * installs the strategy itself; the install is idempotent).
+  /** Equi-join `side` to a k-row centroid table on `key`. Small k:
+    * broadcast the table. Past broadcastMaxCids: key-partitioned
+    * shuffle-hash join — `side` exchanges once on the key (it was about
+    * to shuffle for the consumer's groupBy anyway) and the k-row table
+    * exchanges once instead of being copied to every task. The
+    * shuffle_hash hint keeps the planner from sort-merge-joining a
+    * build side that fits per-partition.
     */
-  private def rankCandidates(probedCells: DataFrame, inverted: DataFrame,
-                             topK: Int, broadcastQueries: Boolean,
-                             excludeSelf: Boolean): DataFrame = {
-    graft.plans.TopKPerGroupStrategy.register(probedCells.sparkSession)
-    val qside = if (broadcastQueries) broadcast(probedCells) else probedCells
-    val scoredAll = qside.join(inverted, Seq("cell"))
-      .select(col("q_id"), col("vec_id").as("cand_id"),
-        (dotD(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("cos"))
-    val scored =
-      if (excludeSelf) scoredAll.filter(col("q_id") =!= col("cand_id"))
-      else scoredAll
-    graft.plans.TopKPerGroup(scored, Seq("q_id"),
-      Seq(("cos", false), ("cand_id", true)), topK, rnName = "rnk")
-      .select(col("q_id"), col("cand_id"), col("cos"), col("rnk"))
-  }
+  private def joinCentroids(side: DataFrame, table: DataFrame, key: String,
+                            k: Long, broadcastMaxCids: Long): DataFrame =
+    if (k <= broadcastMaxCids) side.join(broadcast(table), Seq(key))
+    else side.join(table.hint("shuffle_hash"), Seq(key))
 
   /** Spherical k-means fit for LARGE k — the centroid trainer whose
     * per-iteration assignment is the two-level pass above, so k is never
@@ -1103,10 +437,7 @@ object IvfIndex {
         col("cemb").as("acemb"), col("cnrm").as("acnrm"))
       val assigned = assignIndexed(e, centDf, groupSize, nprobe, dim,
         kHint = k, broadcastMaxCids = broadcastMaxCids)
-      val joined =
-        if (k <= broadcastMaxCids) assigned.join(broadcast(acemb), Seq("cell"))
-        else assigned.join(acemb.hint("shuffle_hash"), Seq("cell"))
-      joined
+      joinCentroids(assigned, acemb, "cell", k, broadcastMaxCids)
         .select(col("cell"),
           (dotD(col("embedding"), col("acemb")) / (col("nrm") * col("acnrm"))).as("cos"),
           posexplode(col("embedding")).as(Seq("dimIdx", "x")))

@@ -125,8 +125,8 @@ object RelationalQueries {
     // ObjectHashAggregate pathway (ExtensionsSpec pins equality incl.
     // nulls/dups/all-null groups); the win is the per-row boxed-set
     // insert (measured 0.82 → 0.60 s on this subtree at sf0.1). Built
-    // as an expression, not by name: GraphPass reaches this helper on
-    // sessions that never went through SparkEntry.queries.
+    // as an expression, not by name: PlanAuditSpec and GraphSpec reach
+    // this helper on sessions that never went through SparkEntry.queries.
     lineitem(s, d)
       .groupBy(col("l_orderkey").as("o"))
       .agg(ColumnBridge.column(graft.gen.LongSetAgg(
@@ -184,9 +184,7 @@ object RelationalQueries {
     * edge table (round 15): the gated entries compose them with a
     * per-query `coPurchaseEdges` derivation exactly as before
     * (plan-identical — the refactor moves code, not semantics), and
-    * `graft.functions.GraphPass` feeds all five from ONE shared
-    * checkpointed edge table (the derive-once form, 2.9× faster for the
-    * five-query pass at 100×).
+    * GraphSpec drives them on hand-counted edge lists.
     * `graphCounts` (triangles) was already in this form.
     */
   private[graft] def pagerankOf(edges: DataFrame): DataFrame = {

@@ -126,4 +126,33 @@ class GraphSpec extends AnyFunSuite {
       s"basket derivation diverged: only-old=${(old -- neu).take(5)} only-new=${(neu -- old).take(5)}")
     assert(old.nonEmpty, "sf0.001 co-purchase graph unexpectedly empty")
   }
+
+  test("the graph bodies work on an arbitrary canonical edge list, not just co-purchase") {
+    // graphCounts, degdistOf, pagerankOf and kcoreOf take any (a < b)
+    // edge DataFrame, not just co-purchase.
+    // A 5-vertex graph with one triangle (1-2-3), a tail (3-4), and an
+    // isolated edge (4-5 would attach; use 0-4): verify the
+    // hand-countable invariants so the bodies are pinned beyond the
+    // gated derivation they ship with.
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (0L, 4L))
+      .toDF("a", "b")
+    val tri = operators.RelationalQueries.graphCounts(edges).collect().head
+    assert(tri.getLong(tri.fieldIndex("n_vertices")) == 5)
+    assert(tri.getLong(tri.fieldIndex("n_edges")) == 5)
+    assert(tri.getLong(tri.fieldIndex("n_triangles")) == 1)
+    val deg = operators.RelationalQueries.degdistOf(edges).collect()
+    assert(deg.map(_.getLong(deg.head.fieldIndex("n_vertices"))).sum == 5)
+    // pagerank ranks all 5 vertices; vertex 3 (degree 3) outranks
+    // vertex 0 (degree 1)
+    val pr = operators.RelationalQueries.pagerankOf(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(pr.size == 5)
+    assert(pr(3L) > pr(0L))
+    // 2-core peeling: round 1 keeps exactly the triangle (vertices
+    // 1,2,3 have degree >= 2 only after 0,4's removal settles)
+    val kc = operators.RelationalQueries.kcoreOf(edges).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(kc.last == (3L, 3L, 3L), s"expected the triangle as the 2-core, got ${kc.toSeq}")
+  }
 }

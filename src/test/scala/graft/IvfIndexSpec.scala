@@ -393,173 +393,24 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("searchTopK is identical across join regimes and partition layouts") {
-    // the size gate and the broadcastQueries knob move exchange
-    // strategies, never rows; and the heap merge is deterministic under
-    // the (cos DESC, cand_id ASC) total order, so re-layout of the
-    // inverted file cannot move results either.
+    // the size gate moves exchange strategies, never rows; and the heap
+    // merge is deterministic under the (cos DESC, cand_id ASC) total
+    // order, so re-layout of the inverted file cannot move results either.
     val inverted = functions.IvfIndex.assignIndexed(corpus, cents32,
       groupSize = 8, nprobe = 2, kHint = 32)
     val queries = corpus.filter(col("vec_id") < 10)
-    def run(inv: DataFrame, bMax: Long, bq: Boolean) =
+    def run(inv: DataFrame, bMax: Long) =
       functions.IvfIndex.searchTopK(queries, inv, cents32,
         topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32,
-        broadcastMaxCids = bMax, broadcastQueries = bq)
+        broadcastMaxCids = bMax)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .sortBy(t => (t._1, t._4)).toSeq
-    val base = run(inverted, functions.IvfIndex.BroadcastMaxCids, bq = true)
-    assert(base == run(inverted, 1L, bq = true),
+    val base = run(inverted, functions.IvfIndex.BroadcastMaxCids)
+    assert(base == run(inverted, 1L),
       "forced centroid shuffle-join regime moved search results")
-    assert(base == run(inverted, functions.IvfIndex.BroadcastMaxCids, bq = false),
-      "non-broadcast query join moved search results")
     assert(base == run(inverted.repartition(13, col("vec_id")),
-      functions.IvfIndex.BroadcastMaxCids, bq = true),
+      functions.IvfIndex.BroadcastMaxCids),
       "inverted-file re-layout moved search results")
-  }
-
-  test("searchTopKAt prunes the cell-partitioned read and matches searchTopK exactly") {
-    // the 100 TB retrieval deployment form (round-17; VERDICT r16 #2):
-    // writeInverted lays the index out partitionBy(cell), searchTopKAt
-    // turns the batch's probed cells into a static partition filter —
-    // the scan must read ONLY the probed cells' files (pinned via the
-    // FileSourceScan numFiles metric) and return bit-identical rows to
-    // the in-memory searchTopK over the same inverted table.
-    val inverted = functions.IvfIndex.assignIndexed(corpus, cents32,
-      groupSize = 8, nprobe = 2, kHint = 32)
-    val queries = corpus.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_inv").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(inverted, path)
-      val filesTotal = spark.read.parquet(path).inputFiles.length
-      val pruned = functions.IvfIndex.searchTopKAt(queries, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-      val gotRows = pruned.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4))
-      val base = functions.IvfIndex.searchTopK(queries, inverted, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4))
-      assert(gotRows.toSeq == base.toSeq,
-        "pruned-read search must be bit-identical to the in-memory search")
-      // the probed-cell set is < k, so files read < files total; pull
-      // the count from the executed scan's own metric, not a re-derived
-      // read, so the pin covers searchTopKAt's actual plan. AQE hides
-      // the final tree behind AdaptiveSparkPlanExec/QueryStageExec
-      // leaves, so walk through them explicitly.
-      def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-        val here = p match {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-          case _ => Nil
-        }
-        val inner = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scansOf(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            scansOf(q.plan)
-          case _ => Nil
-        }
-        here ++ inner ++ (p.children ++ p.subqueries).flatMap(scansOf)
-      }
-      val scans = scansOf(pruned.queryExecution.executedPlan)
-      assert(scans.nonEmpty, "expected a parquet scan in the pruned plan")
-      val filesRead = scans.map(_.metrics("numFiles").value).max
-      assert(filesRead > 0 && filesRead < filesTotal,
-        s"expected a pruned read, got $filesRead of $filesTotal files")
-      val plan = pruned.queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-        s"probed cells must reach the scan as partition filters:\n$plan")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("searchTopKAt's pruneMaxCells gate refuses unselective batches and can be raised") {
-    // the boundary is a parameter (round 18 — the measured IN-list
-    // boundary, see PruneMaxCells scaladoc): forced tiny it must refuse
-    // with the documented fallback guidance; raised back above the
-    // batch's probed-cell count the same call must return the identical
-    // result — the gate only guards the driver collect, never the plan
-    val inverted = functions.IvfIndex.assignIndexed(corpus, cents32,
-      groupSize = 8, nprobe = 2, kHint = 32)
-    val queries = corpus.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_gate").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(inverted, path)
-      def at(bound: Int) = functions.IvfIndex.searchTopKAt(queries, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32,
-        pruneMaxCells = bound)
-      val ex = intercept[IllegalArgumentException] { at(1).collect() }
-      assert(ex.getMessage.contains("searchTopK over a full read"),
-        s"refusal must name the fallback: ${ex.getMessage}")
-      val defaulted = functions.IvfIndex.searchTopKAt(queries, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4))
-      val raised = at(32).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4))
-      assert(raised.toSeq == defaulted.toSeq,
-        "a raised bound must not change the result")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("appendInverted: incremental adds are search-identical to a full rebuild") {
-    // the continuous-ingest contract: write the index from the first
-    // half of the corpus, append the second half in TWO batches against
-    // the same frozen centroids, and searchTopKAt over the grown index
-    // must equal searchTopK over a single-shot assignment of the whole
-    // corpus — bit for bit, because cell membership is a pure function
-    // of (vector, centroids) and the heap order is total. Also pins the
-    // append layout: existing base files are never rewritten.
-    val half1 = corpus.filter(col("vec_id") % 2 === 0)
-    val half2a = corpus.filter(col("vec_id") % 4 === 1)
-    val half2b = corpus.filter(col("vec_id") % 4 === 3)
-    val queries = corpus.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_append").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(
-        functions.IvfIndex.assignIndexed(half1, cents32,
-          groupSize = 8, nprobe = 2, kHint = 32), path)
-      val baseFiles = spark.read.parquet(path).inputFiles.toSet
-      functions.IvfIndex.appendInverted(half2a, cents32, path, kHint = 32)
-      functions.IvfIndex.appendInverted(half2b, cents32, path, kHint = 32)
-      val grownFiles = spark.read.parquet(path).inputFiles.toSet
-      assert(baseFiles.subsetOf(grownFiles),
-        "append must never rewrite or drop the base files")
-      assert(grownFiles.size > baseFiles.size, "append must add files")
-      val got = functions.IvfIndex.searchTopKAt(queries, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4))
-      val rebuilt = functions.IvfIndex.searchTopK(queries,
-        functions.IvfIndex.assignIndexed(corpus, cents32,
-          groupSize = 8, nprobe = 2, kHint = 32),
-        cents32, topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4))
-      assert(got.length == rebuilt.length && got.toSeq == rebuilt.toSeq,
-        "search over the incrementally-grown index must equal the full rebuild")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
   }
 
   test("forced distributed fit: no driver collect of the centroid matrix, bit-identical") {
@@ -638,9 +489,11 @@ class IvfIndexSpec extends AnyFunSuite {
     val cents = toDf((0 until 8).map(i =>
       (i.toLong, (0 until dim).map(d => if (d / 8 == i) 1f else 0f).toSeq)))
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
-    val floor = functions.IvfIndex.routeFloor(
+    val floor = functions.IvfIndex.routeScores(
       base.filter(col("vec_id") % 2 === 0), cents,
-      calibQ = 0.10, groupSize = 2, nprobe = 2, kHint = 8)
+      groupSize = 2, nprobe = 2, kHint = 8)
+      .agg(percentile_approx(col("route_score"), lit(0.10), lit(100000)))
+      .head().getDouble(0)
     assert(floor > 0.9, s"in-block members must route near 1, floor=$floor")
     val inq = base.filter(col("vec_id") % 2 === 1) // held-out 80
     val ood = toDf(oodRows)
@@ -657,235 +510,6 @@ class IvfIndexSpec extends AnyFunSuite {
       s"pure-OOD mix must read below_frac = est_f = 1, got $b100/$f100")
     assert(math.abs(f50 - 0.5) < 0.2, s"50% mix must read est_f ≈ 0.5, got $f50")
     assert(f0 < f50 && f50 < f100, "est_f must order monotonically with the OOD share")
-  }
-
-  test("maintain compacts an over-budget store search-identically; under-budget is untouched") {
-    // the compaction VERB (round 19; VERDICT r18 #2): the round-18 curve
-    // gave the file-count law and the price — maintain() executes it.
-    // Pins: a store within budget returns false with the file set
-    // byte-identical; an over-budget store compacts to ≈ one file per
-    // cell with every row preserved and searchTopKAt bit-identical.
-    val queries = corpus.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_maintain").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(
-        functions.IvfIndex.assignIndexed(corpus.filter(col("vec_id") % 2 === 0),
-          cents32, groupSize = 8, nprobe = 2, kHint = 32), path)
-      functions.IvfIndex.appendInverted(
-        corpus.filter(col("vec_id") % 4 === 1), cents32, path, kHint = 32)
-      functions.IvfIndex.appendInverted(
-        corpus.filter(col("vec_id") % 4 === 3), cents32, path, kHint = 32)
-      val filesGrown = spark.read.parquet(path).inputFiles.length
-      val rowsGrown = spark.read.parquet(path).count()
-      val cells = spark.read.parquet(path).select("cell").distinct().count()
-      assert(filesGrown > cells, "fixture must carry append generations to compact")
-      def search(): Seq[(Long, Long, Double, Int)] =
-        functions.IvfIndex.searchTopKAt(queries, path, cents32,
-          topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-          .sortBy(t => (t._1, t._4)).toSeq
-      val before = search()
-      val untouched = spark.read.parquet(path).inputFiles.toSet
-      assert(!functions.IvfIndex.maintain(spark, path, fileBudget = filesGrown),
-        "a store within budget must not be compacted")
-      assert(spark.read.parquet(path).inputFiles.toSet == untouched,
-        "a within-budget maintain must leave the file set byte-identical")
-      assert(functions.IvfIndex.maintain(spark, path, fileBudget = cells.toInt),
-        "an over-budget store must be compacted")
-      val filesAfter = spark.read.parquet(path).inputFiles.length
-      assert(filesAfter <= cells && filesAfter < filesGrown,
-        s"compaction must restore ≈ one file per cell: $filesGrown -> $filesAfter vs $cells cells")
-      assert(spark.read.parquet(path).count() == rowsGrown,
-        "compaction must preserve every row")
-      assert(search() == before, "maintain must never move search results")
-      assert(!new java.io.File(path + ".maintain.tmp").exists() &&
-        !new java.io.File(path + ".maintain.old").exists(),
-        "maintain must clean up its working directories")
-      // lifecycle continuity: ingest keeps working on the swapped-in
-      // store — an append AFTER a maintain must land partition-wise and
-      // the result must still equal a single-shot rebuild of everything
-      val late = corpus.filter(col("vec_id") % 2 === 0)
-        .withColumn("vec_id", col("vec_id") + lit(1000000L))
-      functions.IvfIndex.appendInverted(late, cents32, path, kHint = 32)
-      val rebuilt = functions.IvfIndex.searchTopK(queries,
-        functions.IvfIndex.assignIndexed(corpus.unionAll(late), cents32,
-          groupSize = 8, nprobe = 2, kHint = 32),
-        cents32, topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      assert(search() == rebuilt,
-        "append after maintain must equal a single-shot rebuild of the union")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("sidecar round-trip: buildIndex persists the serving contract and path-only verbs reproduce explicit-args results") {
-    // the round-20 contract (VERDICT r19 #1): the index's serving and
-    // monitoring parameters — centroids, floor, calibQ, routing shape,
-    // file budget — persist WITH the store, and the path-only
-    // overloads of searchTopKAt/driftStats/maintain read them back, so
-    // a mismatched (floor, calibQ) pair is impossible by construction.
-    val queries = corpus.filter(col("vec_id") < 10)
-    val calib = corpus.filter(col("vec_id") >= 42 && col("vec_id") < 142)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_meta").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      val meta = functions.IvfIndex.buildIndex(corpus, cents32, path, calib,
-        calibQ = 0.10, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32,
-        fileBudget = 999)
-      // round-trip: the meta read back is bit-identical to the one written
-      val back = functions.IvfIndex.readMeta(spark, path)
-      assert(back == meta, s"sidecar round-trip drifted: wrote $meta read $back")
-      assert(java.lang.Double.doubleToLongBits(back.floor) ==
-        java.lang.Double.doubleToLongBits(meta.floor),
-        "floor must round-trip to the exact IEEE bits")
-      // the stored centroids verify and match the fit table row-for-row
-      val cback = functions.IvfIndex.readCentroids(spark, path, back)
-      assert(cback.orderBy("cid").collect().map(r =>
-          (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq ==
-        cents32.orderBy("cid").collect().map(r =>
-          (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq,
-        "stored centroids must equal the table the index was built with")
-      // explicit-floor equality: the sidecar floor IS routeFloor's output
-      val explicitFloor = functions.IvfIndex.routeFloor(calib, cents32,
-        calibQ = 0.10, kHint = 32)
-      assert(meta.floor == explicitFloor,
-        "buildIndex must persist exactly the routeFloor calibration")
-      // overload ≡ explicit args: search
-      def rows(df: DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      val viaMeta = rows(functions.IvfIndex.searchTopKAt(queries, path, 5))
-      val viaArgs = rows(functions.IvfIndex.searchTopKAt(queries, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32))
-      assert(viaMeta == viaArgs,
-        "path-only searchTopKAt must equal the explicit-argument form")
-      // the widen-probes overload ≡ explicit widened args
-      val viaMetaWide = rows(functions.IvfIndex.searchTopKAt(queries, path, 5, 4, 4))
-      val viaArgsWide = rows(functions.IvfIndex.searchTopKAt(queries, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 4, probeCells = 4, kHint = 32))
-      assert(viaMetaWide == viaArgsWide,
-        "widen-probes searchTopKAt must equal the explicit-argument form")
-      // overload ≡ explicit args: monitor — the exact pair the sidecar
-      // exists to keep matched
-      val sMeta = functions.IvfIndex.driftStats(spark, path, queries).head()
-      val sArgs = functions.IvfIndex.driftStats(queries, cents32, meta.floor,
-        calibQ = meta.calibQ, kHint = 32).head()
-      assert(sMeta == sArgs,
-        "path-only driftStats must equal the explicit (floor, calibQ) form")
-      // overload: maintain reads its budget from the sidecar (999 ≥
-      // current files ⇒ no-op false)
-      assert(!functions.IvfIndex.maintain(spark, path),
-        "a store within its sidecar budget must not compact")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("a stale or missing sidecar is rejected with a named error, never silently served") {
-    // the one remaining silent-wrong path of round 19: a floor judged
-    // at a calibQ it wasn't read at, or centroids swapped out from
-    // under the calibration. With the sidecar, both states are LOUD:
-    // missing sidecar names the build remedy; a centroid table that no
-    // longer matches the recorded checksum names the stale-metadata
-    // condition.
-    val queries = corpus.filter(col("vec_id") < 10)
-    val calib = corpus.filter(col("vec_id") >= 42 && col("vec_id") < 142)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_stale").toFile
-    try {
-      val bare = new java.io.File(dir, "bare").getAbsolutePath
-      functions.IvfIndex.writeInverted(
-        functions.IvfIndex.assignIndexed(corpus, cents32,
-          groupSize = 8, nprobe = 2, kHint = 32), bare)
-      val exMissing = intercept[IllegalArgumentException] {
-        functions.IvfIndex.searchTopKAt(queries, bare, 5)
-      }
-      assert(exMissing.getMessage.contains("no index metadata"),
-        s"missing sidecar must name the condition: ${exMissing.getMessage}")
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.buildIndex(corpus, cents32, path, calib, kHint = 32)
-      // out-of-band centroid rewrite: drop one centroid without
-      // refreshing the json — the checksum must catch it
-      val tampered = cents32.filter(col("cid") =!= 7)
-      tampered.repartition(1).write.mode("overwrite")
-        .parquet(s"$path/${functions.IvfIndex.CentsDirName}")
-      val exStale = intercept[IllegalArgumentException] {
-        functions.IvfIndex.driftStats(spark, path, queries).head()
-      }
-      assert(exStale.getMessage.contains("stale index metadata"),
-        s"mismatched centroids must read as stale metadata: ${exStale.getMessage}")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("a corrupted or wrong-format sidecar fails with a named remedy, and no .tmp residue survives a write") {
-    // crash-surface completeness for the sidecar itself: a truncated
-    // json (crash mid-write would leave one only as .tmp, but a disk
-    // corruption can produce one in place) names the missing field and
-    // the rewrite remedy; a wrong-format file names the format; and a
-    // successful writeIndexMeta leaves no .tmp behind (the write lands
-    // via write-then-rename, so readers never see a partial sidecar).
-    val calib = corpus.filter(col("vec_id") >= 42 && col("vec_id") < 142)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_corrupt").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.buildIndex(corpus, cents32, path, calib, kHint = 32)
-      assert(!new java.io.File(path,
-        functions.IvfIndex.MetaFileName + ".tmp").exists(),
-        "writeIndexMeta must leave no .tmp residue")
-      val mp = new java.io.File(path, functions.IvfIndex.MetaFileName)
-      val good = new String(java.nio.file.Files.readAllBytes(mp.toPath), "UTF-8")
-      // out-of-band writes must also drop Hadoop's local-FS checksum
-      // side file, or ChecksumFileSystem rejects the read before the
-      // parse-level errors under test can engage (itself a nice
-      // property — on the local FS, byte-level tampering is caught
-      // one layer below readMeta)
-      def dropCrc(): Unit =
-        new java.io.File(path, "." + functions.IvfIndex.MetaFileName + ".crc").delete()
-      // truncate: keep the format header, drop later fields
-      java.nio.file.Files.write(mp.toPath,
-        good.substring(0, good.indexOf("\"nprobe\"")).getBytes("UTF-8"))
-      dropCrc()
-      val exTrunc = intercept[IllegalArgumentException] {
-        functions.IvfIndex.readMeta(spark, path)
-      }
-      assert(exTrunc.getMessage.contains("missing field") &&
-        exTrunc.getMessage.contains("writeIndexMeta"),
-        s"truncated sidecar must name the field and remedy: ${exTrunc.getMessage}")
-      java.nio.file.Files.write(mp.toPath,
-        """{"format":"not-graft","k":1}""".getBytes("UTF-8"))
-      dropCrc()
-      val exFmt = intercept[IllegalArgumentException] {
-        functions.IvfIndex.readMeta(spark, path)
-      }
-      assert(exFmt.getMessage.contains("graft-ivf-v1"),
-        s"wrong-format sidecar must name the expected format: ${exFmt.getMessage}")
-      // and a rewrite heals it: the full contract round-trips again
-      java.nio.file.Files.write(mp.toPath, good.getBytes("UTF-8"))
-      dropCrc()
-      assert(functions.IvfIndex.readMeta(spark, path).k == 32L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
   }
 
   test("driftStats on an empty batch reports n_queries = 0 with null est_f, not a healthy 0.0") {
@@ -906,179 +530,5 @@ class IvfIndexSpec extends AnyFunSuite {
       cents32, floor = 0.5, calibQ = 0.10, kHint = 32).head()
     assert(ok.getAs[Long]("n_queries") == 10L)
     assert(!ok.isNullAt(ok.fieldIndex("est_f")))
-  }
-
-  test("searchTopKAt rejects an un-ordered limit (row-set non-determinism) but accepts an ordered one") {
-    // round-19 ADVICE: the expression walk cannot see row-SET
-    // non-determinism — limit(n) without an ordering selects arbitrary
-    // rows per execution on multi-partition input, and the probe pass
-    // runs twice. An orderBy+limit is a deterministic top-n and must
-    // still pass.
-    val inverted = functions.IvfIndex.assignIndexed(corpus, cents32,
-      groupSize = 8, nprobe = 2, kHint = 32)
-    val queries = corpus.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_lim").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(inverted, path)
-      def at(q: DataFrame) = functions.IvfIndex.searchTopKAt(q, path, cents32,
-        topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-      val ex = intercept[IllegalArgumentException] {
-        at(queries.limit(5))
-      }
-      assert(ex.getMessage.contains("limit without an ordering"),
-        s"un-ordered limit must be rejected by name: ${ex.getMessage}")
-      assert(at(queries.orderBy("vec_id").limit(5)).count() == 25,
-        "an ordered limit is deterministic and must pass the gate")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("maintain auto-restores an interrupted swap, and readInverted retries across a mid-swap window") {
-    // round-20 fencing (VERDICT r19 #2 + round-19 ADVICE): a maintain
-    // that dies between its two renames leaves the store only at
-    // <path>.maintain.old. (a) The NEXT maintain call detects that
-    // state at entry and restores it before proceeding. (b) A reader
-    // going through readInverted sees the swap markers and retries
-    // instead of failing on the missing path. (c) A missing path with
-    // NO markers fails immediately — wrong path, not a swap.
-    val dir = java.nio.file.Files.createTempDirectory("ivf_swap").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(
-        functions.IvfIndex.assignIndexed(corpus, cents32,
-          groupSize = 8, nprobe = 2, kHint = 32), path)
-      val rowsBefore = spark.read.parquet(path).count()
-      val filesBefore = spark.read.parquet(path).inputFiles.toSet
-      // simulate the death-between-renames state
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(path + ".maintain.old")))
-      // (a) maintain at entry restores, then proceeds normally (budget
-      // generous ⇒ no-op false, file set untouched)
-      assert(!functions.IvfIndex.maintain(spark, path, fileBudget = 10000))
-      assert(spark.read.parquet(path).count() == rowsBefore,
-        "auto-restore must bring back every row")
-      assert(spark.read.parquet(path).inputFiles.toSet == filesBefore,
-        "auto-restore + within-budget maintain must leave files untouched")
-      assert(!new java.io.File(path + ".maintain.old").exists(),
-        "the restored swap must leave no marker behind")
-      // (b) reader retry: put the store mid-swap again, restore it from
-      // another thread after ~0.5 s — readInverted must ride it out
-      assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(path + ".maintain.old")))
-      val restorer = new Thread(() => {
-        Thread.sleep(500)
-        fs.rename(new org.apache.hadoop.fs.Path(path + ".maintain.old"),
-          new org.apache.hadoop.fs.Path(path))
-      })
-      restorer.start()
-      val got = functions.IvfIndex.readInverted(spark, path).count()
-      restorer.join()
-      assert(got == rowsBefore, "reader must see the full store after the swap closes")
-      // (c) a genuinely-missing path (no markers) fails immediately by name
-      val exMissing = intercept[IllegalStateException] {
-        functions.IvfIndex.readInverted(spark,
-          new java.io.File(dir, "nope").getAbsolutePath)
-      }
-      assert(exMissing.getMessage.contains("no maintain-swap markers"),
-        s"missing store must not be read as a swap: ${exMissing.getMessage}")
-      // and a swap that NEVER closes names the recovery step
-      assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(path + ".maintain.old")))
-      val exStuck = intercept[IllegalStateException] {
-        functions.IvfIndex.readInverted(spark, path, attempts = 2, waitMs = 50L)
-      }
-      assert(exStuck.getMessage.contains("maintain(spark, path)"),
-        s"a stuck swap must name the recovery verb: ${exStuck.getMessage}")
-      assert(fs.rename(new org.apache.hadoop.fs.Path(path + ".maintain.old"),
-        new org.apache.hadoop.fs.Path(path)))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("maintain carries the sidecar through compaction byte-for-byte") {
-    // the serving contract must survive the rewrite: compact an
-    // over-budget store built with buildIndex and pin that the meta
-    // (floor bits included) and stored centroids read back identical,
-    // and that the path-only search still serves.
-    val queries = corpus.filter(col("vec_id") < 10)
-    val calib = corpus.filter(col("vec_id") >= 42 && col("vec_id") < 142)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_keep").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      val meta = functions.IvfIndex.buildIndex(
-        corpus.filter(col("vec_id") % 2 === 0), cents32, path, calib, kHint = 32)
-      functions.IvfIndex.appendInverted(
-        corpus.filter(col("vec_id") % 2 === 1), cents32, path, kHint = 32)
-      val before = functions.IvfIndex.searchTopKAt(queries, path, 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      val cells = spark.read.parquet(path).select("cell").distinct().count()
-      assert(functions.IvfIndex.maintain(spark, path, fileBudget = cells.toInt),
-        "the appended store must be over a one-file-per-cell budget")
-      assert(functions.IvfIndex.readMeta(spark, path) == meta,
-        "compaction must carry the sidecar unchanged")
-      val after = functions.IvfIndex.searchTopKAt(queries, path, 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      assert(after == before, "path-only search must be identical across maintain")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
-  }
-
-  test("searchTopKAt rejects non-deterministic query or centroid plans with a named error") {
-    // the probe-determinism contract, ENFORCED (round 19; round-18
-    // ADVICE): searchTopKAt executes its probe pass twice, so a
-    // rand()-filtered batch could probe different cells on re-execution
-    // and silently drop candidates — it must fail loudly instead, for
-    // BOTH inputs, and the gate must not fire on honest plans.
-    val inverted = functions.IvfIndex.assignIndexed(corpus, cents32,
-      groupSize = 8, nprobe = 2, kHint = 32)
-    val queries = corpus.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_det").toFile
-    try {
-      val path = new java.io.File(dir, "inverted").getAbsolutePath
-      functions.IvfIndex.writeInverted(inverted, path)
-      def at(q: DataFrame, c: DataFrame) =
-        functions.IvfIndex.searchTopKAt(q, path, c,
-          topK = 5, groupSize = 8, nprobe = 2, probeCells = 2, kHint = 32)
-      // rand() < 2.0 is always true — the REJECTION is purely about the
-      // expression being non-deterministic, not about the rows it keeps
-      val exQ = intercept[IllegalArgumentException] {
-        at(queries.filter(rand() < 2.0), cents32)
-      }
-      assert(exQ.getMessage.contains("`queries` plan must be deterministic"),
-        s"rejection must name the offending input: ${exQ.getMessage}")
-      val exC = intercept[IllegalArgumentException] {
-        at(queries, cents32.filter(rand() < 2.0))
-      }
-      assert(exC.getMessage.contains("`cents` plan must be deterministic"),
-        s"rejection must name the offending input: ${exC.getMessage}")
-      assert(at(queries, cents32).count() == 50,
-        "the gate must not fire on deterministic plans")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
   }
 }
