@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Multi-iteration BPE tokenizer training — the driver loop that
   * composes the gated single iteration (`q_bpe_apply`: count → pick →
-  * merge → recount) N times, exactly as [[KMeans]] loops its gated
+  * merge → recount) N times, exactly as [[IvfIndex.fit]] loops its
   * Lloyd step.
   *
   * Representation: every word is a doubled-space symbol sequence
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per iteration: ONE map-side-combined pair-count shuffle
   * over the corpus; the winning pair is a driver-side top-1 pull (two
-  * strings — the KMeans-centroid posture: driver state is the merge
+  * strings — the IvfIndex.fit centroid posture: driver state is the merge
   * table only, never corpus rows); the merge itself is row-local.
   * After N iterations the merge table is the tokenizer artifact and
   * the encoded corpus is the tokenized output. At 100 TB one does not

@@ -61,8 +61,8 @@ object IvfIndex {
     * floats + cid + cnrm + row overhead) ≈ 26-40 MB — the last size a
     * per-executor full copy is cheaper than exchanging the table.
     * Above it assignIndexed switches the stage-2 join to shuffle-hash
-    * on the group id, and fit switches its centroid update to the
-    * distributed (driver-collect-free) path.
+    * on the group id, and fit's per-iteration centroid join does the
+    * same (fit's driver-collect-free update is gated by `collectMaxK`).
     */
   val BroadcastMaxCids: Long = 100000L
 
@@ -214,8 +214,8 @@ object IvfIndex {
       .select(col("q_id"), col("qe"), col("qn"), col("pc").getField("cid").as("cell"))
     // candidate join + exact-cosine rank through the bounded-heap top-k
     // (this library path need not go through SparkEntry.queries, so it
-    // installs the strategy itself; the install is idempotent)
-    graft.plans.TopKPerGroupStrategy.register(queries.sparkSession)
+    // installs the TopK strategy and rule itself; the install is idempotent)
+    graft.plans.TopKRewriteRule.register(queries.sparkSession)
     val scoredAll = broadcast(pc).join(inverted, Seq("cell"))
       .select(col("q_id"), col("vec_id").as("cand_id"),
         (dotD(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("cos"))
@@ -244,9 +244,8 @@ object IvfIndex {
     */
   def routeScores(queries: DataFrame, cents: DataFrame,
                   groupSize: Int = 8, nprobe: Int = 2,
-                  dim: Int = 64, kHint: Long = -1L,
-                  broadcastMaxCids: Long = BroadcastMaxCids): DataFrame = {
-    probedCentroids(queries, cents, groupSize, nprobe, dim, kHint, broadcastMaxCids)
+                  dim: Int = 64, kHint: Long = -1L): DataFrame = {
+    probedCentroids(queries, cents, groupSize, nprobe, dim, kHint, BroadcastMaxCids)
       .select(col("vec_id").as("q_id"),
         (dotD(col("embedding"), col("cemb")) / (col("nrm") * col("cnrm"))).as("s"))
       .groupBy("q_id").agg(max(col("s")).as("route_score"))
@@ -289,15 +288,14 @@ object IvfIndex {
   def driftStats(queries: DataFrame, cents: DataFrame, floor: Double,
                  calibQ: Double = 0.10,
                  groupSize: Int = 8, nprobe: Int = 2,
-                 dim: Int = 64, kHint: Long = -1L,
-                 broadcastMaxCids: Long = BroadcastMaxCids): DataFrame = {
+                 dim: Int = 64, kHint: Long = -1L): DataFrame = {
     require(calibQ > 0 && calibQ < 1, s"need 0 < calibQ < 1, got $calibQ")
     // empty-batch guard (round-19 ADVICE): with zero queries below_frac
     // is null and greatest(0.0, null) would read est_f = 0.0 — a monitor
     // silently reporting "no drift" when an upstream bug feeds it zero
     // queries. est_f is gated on n_queries > 0 so an empty batch reads
     // (n_queries = 0, est_f = null) — distinguishable from healthy.
-    routeScores(queries, cents, groupSize, nprobe, dim, kHint, broadcastMaxCids)
+    routeScores(queries, cents, groupSize, nprobe, dim, kHint)
       .agg(
         count(lit(1)).as("n_queries"),
         avg(col("route_score")).as("mean_score"),
@@ -358,8 +356,8 @@ object IvfIndex {
 
   /** Spherical k-means fit for LARGE k — the centroid trainer whose
     * per-iteration assignment is the two-level pass above, so k is never
-    * a k-wide literal expression tree (graft.functions.KMeans's
-    * `nearest` materializes k struct branches per row: exact and ideal
+    * a k-wide literal expression tree (a flat argmin over k centroid
+    * literals materializes k struct branches per row: exact and ideal
     * for k ≤ ~32, hopeless at k=800 where codegen falls back
     * interpreted). Objective is the cosine the IVF consumers use:
     * assignment = argmax dot(v,c)/(|v||c|), update = per-cell member
@@ -369,8 +367,8 @@ object IvfIndex {
     *
     * Determinism: init = the k smallest-id vectors (no RNG); per-cell
     * per-dimension means are DECIMAL-exact partial aggregates (the
-    * KMeans.fit rule — order-independent fold, one double conversion),
-    * so the fit is bit-stable across partitionings.
+    * SCALE.md cross-engine float policy — order-independent fold, one
+    * double conversion), so the fit is bit-stable across partitionings.
     *
     * Driver state (round 16 — size-gated like stage 2): up to
     * `collectMaxK` the per-iteration (cell, dim) stats collect to the
@@ -392,7 +390,7 @@ object IvfIndex {
     * float-quantized once at the END of the fit, matching the
     * groupMeansArr convention — and the objective is the MEAN
     * assignment cosine under the centroids each iteration STARTED from
-    * (the spherical-k-means analogue of KMeans.fit's WCSS; Dhillon &
+    * (the spherical-k-means analogue of Lloyd's WCSS; Dhillon &
     * Modha 2001 — non-decreasing up to THREE slack sources: the
     * per-iteration float32 centroid quantization and empty-cell
     * carryover, both ≪ 1e-6 here, and — whenever nprobe < g — the
@@ -403,13 +401,12 @@ object IvfIndex {
     * slack (round-16 ADVICE; IvfIndexSpec's monotonicity check
     * therefore runs at nprobe = g, where the assignment is exact). The
     * objective rides the same single corpus pass as the mean update
-    * (the KMeans d2-on-dim0 trick), summed in decimal so it is
+    * (carried on dim 0 of each vector), summed in decimal so it is
     * bit-stable too.
     */
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
           groupSize: Int = 8, nprobe: Int = 2, dim: Int = 64,
-          collectMaxK: Int = 10000,
-          broadcastMaxCids: Long = BroadcastMaxCids): (DataFrame, Array[Double]) = {
+          collectMaxK: Int = 10000): (DataFrame, Array[Double]) = {
     require(k > 0 && iters >= 0, s"need k > 0 and iters >= 0, got k=$k iters=$iters")
     val spark = df.sparkSession
     import spark.implicits._
@@ -435,9 +432,8 @@ object IvfIndex {
     def statsOf(centDf: DataFrame): DataFrame = {
       val acemb = centDf.select(col("cid").as("cell"),
         col("cemb").as("acemb"), col("cnrm").as("acnrm"))
-      val assigned = assignIndexed(e, centDf, groupSize, nprobe, dim,
-        kHint = k, broadcastMaxCids = broadcastMaxCids)
-      joinCentroids(assigned, acemb, "cell", k, broadcastMaxCids)
+      val assigned = assignIndexed(e, centDf, groupSize, nprobe, dim, kHint = k)
+      joinCentroids(assigned, acemb, "cell", k, BroadcastMaxCids)
         .select(col("cell"),
           (dotD(col("embedding"), col("acemb")) / (col("nrm") * col("acnrm"))).as("cos"),
           posexplode(col("embedding")).as(Seq("dimIdx", "x")))

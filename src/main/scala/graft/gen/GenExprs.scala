@@ -121,8 +121,7 @@ object GenExprs {
   /** The generator expression for one column, over the `id` column of a
     * `spark.range`. Domains mirror generate_csv.cpp:197-241 exactly.
     */
-  def exprFor(spec: ColSpec, colIdx: Int, seed: Long,
-              nowEpoch: Long = DefaultNowEpoch): Column = {
+  def exprFor(spec: ColSpec, colIdx: Int, seed: Long): Column = {
     val id = col("id")
     def draw(k: Int) = h(id, seed, colIdx, k)
     val c = spec.token match {
@@ -161,7 +160,7 @@ object GenExprs {
             + uniformLong(draw(5), 0L, 59L) * lit(60L)
             + uniformLong(draw(6), 0L, 59L))
       case "timestamp" =>                                 // epoch uniform [1, now] UTC (:124-132)
-        timestamp_seconds(uniformLong(draw(0), 1L, nowEpoch))
+        timestamp_seconds(uniformLong(draw(0), 1L, DefaultNowEpoch))
       case "time" =>
         format_string("%02d:%02d:%02d",
           uniformLong(draw(1), 0L, 23L), uniformLong(draw(2), 0L, 59L),

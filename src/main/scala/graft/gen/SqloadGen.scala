@@ -23,14 +23,13 @@ object SqloadGen {
     * (spec, rows, seed) and invariant under `numPartitions`.
     */
   def table(spark: SparkSession, spec: String, rows: Long, seed: Long = 42L,
-            numPartitions: Int = 0,
-            nowEpoch: Long = GenExprs.DefaultNowEpoch): DataFrame = {
+            numPartitions: Int = 0): DataFrame = {
     val specs = TypeSpecParser.parse(spec)
     val base =
       if (numPartitions > 0) spark.range(0L, rows, 1L, numPartitions)
       else spark.range(rows)
     base.select(specs.zipWithIndex.map { case (s, i) =>
-      GenExprs.exprFor(s, i, seed, nowEpoch)
+      GenExprs.exprFor(s, i, seed)
     }: _*)
   }
 

@@ -19,6 +19,15 @@ object GenQueries {
 
   private val GenRows = 1000L
 
+  /** One row (n, f): the measured row count and the exact sum of
+    * XXH64 over every column. A sum, unlike an XOR fold, sees how often
+    * each row occurs (a duplicated pair does not cancel out); the
+    * decimal(38,0) cast keeps it exact, so ANSI mode cannot overflow it.
+    */
+  private[graft] def fingerprint(df: DataFrame): DataFrame =
+    df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h"))
+      .agg(count(lit(1)).as("n"), sum(col("h").cast("decimal(38,0)")).as("f"))
+
   /** The composed bit permutation rkey applies to g = id+1:
     * rotr1 then segregate4 (generate_csv.cpp:149-161,201-204).
     * Pure-Long mirror used to derive the output-bit → input-bit table
@@ -132,8 +141,8 @@ object GenQueries {
     // check (a) every Spark type survived the round trip — parquet
     // carries the schema, unlike CSV's type erasure — and (b) the
     // values are byte-identical to a fresh in-memory generation of the
-    // same (spec, rows, seed): the xor-fold fingerprint of the
-    // re-read equals the direct one. One boolean row, literal oracle.
+    // same (spec, rows, seed): the fingerprint (row count and hash
+    // sum) of the re-read equals the direct one. One row, literal oracle.
     "q_gen_parquet" -> ((s, _) => {
       val spec = "key,rkey,int(11),varchar(13),double,date,datetime,decimal(10,2)"
       val dir = new java.io.File(
@@ -152,31 +161,26 @@ object GenQueries {
         case None    => s.conf.unset(key)
       }
       val back = s.read.parquet(dir.getAbsolutePath)
-      def fp(x: org.apache.spark.sql.DataFrame) =
-        x.select(xxhash64(x.columns.toIndexedSeq.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)").as("f"))
       // name+type comparison: parquet re-read relaxes nullability on
       // generated (never-null) columns, which is not type erasure
       val schemaOk = back.schema.map(f => (f.name, f.dataType)) ==
         df.schema.map(f => (f.name, f.dataType))
-      fp(back).crossJoin(fp(df).withColumnRenamed("f", "f2"))
+      fingerprint(back).crossJoin(fingerprint(df).toDF("n2", "f2"))
         .select(lit(schemaOk).as("schema_preserved"),
-          (col("f") === col("f2")).as("values_identical"),
-          lit(GenRows).as("n"))
+          (col("n") === col("n2") && col("f") === col("f2")).as("values_identical"),
+          col("n"))
     }),
 
     // Determinism contract: the same (spec, rows, seed) generated with
-    // 1 partition and 16 partitions is byte-identical. Output is the
-    // xor-fold fingerprint of each run — equal longs, oracle-literal.
+    // 1 partition and 16 partitions is byte-identical: the two runs'
+    // fingerprints (row count and hash sum) are equal, oracle-literal.
     "q_gen_determinism" -> ((s, _) => {
-      def fp(parts: Int) =
+      def fp(parts: Int) = fingerprint(
         SqloadGen.table(s, "key,int,varchar(8),double,datetime", GenRows,
-            seed = 7, numPartitions = parts)
-          .select(xxhash64(col("c0"), col("c1"), col("c2"), col("c3"), col("c4")).as("h"))
-          .agg(expr("bit_xor(h)").as("f"))
-      fp(1).crossJoin(fp(16).withColumnRenamed("f", "f2"))
-        .select((col("f") === col("f2")).as("partition_invariant"),
-          lit(GenRows).as("n"))
+          seed = 7, numPartitions = parts))
+      fp(1).crossJoin(fp(16).toDF("n2", "f2"))
+        .select((col("n") === col("n2") && col("f") === col("f2")).as("partition_invariant"),
+          col("n"))
     }),
   )
 

@@ -243,10 +243,10 @@ object SimilarityQueries {
     // row expansion, no shuffle, no window: assignment cost is O(n·k)
     // inside the scan stage, which is the shape that survives 100 TB.
     // Centroids are 8 fixed corpus vectors (vec_id 10..17); at 100 TB
-    // they'd come from an offline k-means fit (graft.functions.KMeans
-    // for small k; graft.functions.IvfIndex.fit for large k — its
-    // per-iteration assignment is the two-level indexed pass, so k
-    // never becomes a k-wide expression tree). The QUERY side routes
+    // they'd come from an offline k-means fit (IvfIndex.fit, gated by
+    // q_dedup_semantic_indexed — its per-iteration assignment is the
+    // two-level indexed pass, so k never becomes a k-wide expression
+    // tree). The QUERY side routes
     // through the shipped retrieval half, IvfIndex.searchTopK
     // (round 17; VERDICT r16 #1 — this gate is its DuckDB oracle):
     // two-level probe routing (groupSize = 4 ⇒ g = 2 groups, and
@@ -568,11 +568,11 @@ object SimilarityQueries {
     // Lloyd iterations (assign → update → assign → update), entirely
     // plan-side: centroids travel between rounds as a broadcast 1-row
     // sorted array (the q_sim_ivf convention), never a driver collect —
-    // unlike the deployment utility graft.functions.KMeans, which runs
-    // the standard driver-broadcast loop (KMeansSpec pins it); this
-    // query pins the per-ITERATION distributed plan both share: one
-    // corpus scan for row-local argmin assignment (squared Euclidean,
-    // tie → lowest cid via array_min on struct(dist, cid)) + one
+    // unlike IvfIndex.fit, which collects each round's (cell, dim) stats
+    // to the driver up to collectMaxK; this query pins the per-ITERATION
+    // distributed plan: one corpus scan for row-local argmin assignment
+    // (squared Euclidean, tie → lowest cid via array_min on
+    // struct(dist, cid)) + one
     // cell-keyed shuffle for the centroid update. Determinism contract
     // (the q_embed_centroid pattern): per-cell vectors fold in vec_id
     // order, per-dimension sums fold ascending, distances fold

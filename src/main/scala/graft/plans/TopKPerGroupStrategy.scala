@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
@@ -16,13 +15,4 @@ object TopKPerGroupStrategy extends SparkStrategy {
         TopKPerGroupPartialExec(g, o, k, planLater(child))) :: Nil
     case _ => Nil
   }
-
-  /** Runtime registration on an existing session (the public
-    * experimental-strategies hook; config path is GraftExtensions).
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
 }

@@ -62,20 +62,11 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
       }
   }
 
-  /** Conf kill-switch (default on): lets a session measure the pure
-    * window plan (a baseline case, differential tests)
-    * without unregistering the rule — registration is session-global
-    * and queries are optimized lazily, so a flag read at optimization
-    * time is the only reliable scoping.
-    */
-  val EnabledKey = "spark.graft.topk.rewrite"
-
   /** Above this k the rewrite declines: the heaps hold k rows per group
     * per partition IN MEMORY and never spill, so an "effectively
     * unlimited" top-k (rn <= 100_000_000) is safer on the stock window
-    * plan, which sorts and spills. Tunable per workload.
+    * plan, which sorts and spills.
     */
-  val MaxKKey = "spark.graft.topk.maxK"
   val DefaultMaxK = 1000000
 
   /** Per-task cap on rows retained across all heaps (≥ group count —
@@ -92,19 +83,14 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
     try conf.getConfString(MaxRetainedKey, DefaultMaxRetained.toString).toInt
     catch { case _: NumberFormatException => DefaultMaxRetained }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(EnabledKey, "true") != "true") plan else rewrite(plan)
-
-  private def rewrite(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, w @ RowNumberWindow(rnAlias, part, order, child)) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val rnId = rnAlias.exprId
       val hit = conjuncts.iterator.map(c => c -> limitFromConjunct(c, rnId))
         .collectFirst { case (c, Some(k)) => (c, k) }
-      val maxK = try conf.getConfString(MaxKKey, DefaultMaxK.toString).toInt
-                 catch { case _: NumberFormatException => DefaultMaxK }
       hit match {
-        case Some((matched, k)) if k > 0 && k <= maxK =>
+        case Some((matched, k)) if k > 0 && k <= DefaultMaxK =>
           // InferWindowGroupLimit's bound is subsumed by the partial heaps
           val realChild = child match {
             case WindowGroupLimit(_, _, _, limit, gchild) if limit >= k => gchild
@@ -118,15 +104,15 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
       }
   }
 
-
-  /** Runtime registration on an existing session; the config path is
+  /** Runtime install on an existing session, idempotent: the rule and
+    * the strategy that plans the operator it emits. The config path is
     * `spark.sql.extensions=graft.GraftExtensions`.
     */
   def register(spark: SparkSession): Unit = {
-    TopKPerGroupStrategy.register(spark) // rewritten plans must be plannable
-    if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewriteRule
-    }
+    val exp = spark.experimental
+    if (!exp.extraStrategies.contains(TopKPerGroupStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ TopKPerGroupStrategy
+    if (!exp.extraOptimizations.contains(TopKRewriteRule))
+      exp.extraOptimizations = exp.extraOptimizations :+ TopKRewriteRule
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.SqloadGen
 
@@ -134,6 +134,24 @@ class GenSpec extends AnyFunSuite {
         .select(concat_ws("|", col("c0"), col("c1"), col("c2"), col("c3"), col("c4")))
         .collect().map(_.getString(0)).toSeq
     assert(rows(1) == rows(16))
+  }
+
+  test("generator fingerprint sees a duplicated row pair that the XOR fold cancels") {
+    import spark.implicits._
+    val one = Seq("a").toDF("c0")
+    val three = Seq("a", "b", "b").toDF("c0")
+    // the bit_xor(xxhash64) fold q_gen_parquet and q_gen_determinism used
+    def xor(df: DataFrame) =
+      df.select(xxhash64(col("c0")).as("h")).agg(expr("bit_xor(h)")).head().getLong(0)
+    assert(xor(one) == xor(three))
+    def fp(df: DataFrame) = {
+      val r = graft.operators.GenQueries.fingerprint(df).head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    val (n1, f1) = fp(one)
+    val (n3, f3) = fp(three)
+    assert(n1 == 1L && n3 == 3L)
+    assert(f1 != f3)
   }
 
   test("different seeds ⇒ different data") {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the product surface: routing correctness against the flat argmax,
   * probe-constraint honesty (an indexed cell is always one of the
   * vector's probed groups), and bit-stability of the large-k fit across
-  * partition layouts (the KMeans decimal-sum rule).
+  * partition layouts (the decimal-sum rule of SCALE.md).
   */
 class IvfIndexSpec extends AnyFunSuite {
 

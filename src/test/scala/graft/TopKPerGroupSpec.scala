@@ -16,31 +16,31 @@ class TopKPerGroupSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("matches row_number window formulation on orders") {
-    graft.plans.TopKPerGroupStrategy.register(spark)
-    // another suite may have session-registered TopKRewriteRule; the
-    // differential needs the REAL window plan on one side, so disable
-    // the rewrite while the window formulation executes
-    spark.conf.set(graft.plans.TopKRewriteRule.EnabledKey, "false")
-    try {
-      val base = Tables.orders(spark, sf)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      val viaOp = graft.plans.TopKPerGroup(base,
-        Seq("o_custkey"), Seq("o_totalprice" -> false, "o_orderkey" -> true), 3)
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val viaWindow = base
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-      assert(viaWindow.queryExecution.executedPlan.toString.contains("Window"),
-        "differential baseline must be the real window plan")
-      assert(viaOp.count() == viaWindow.count())
-      assert(viaOp.exceptAll(viaWindow).count() == 0)
-      assert(viaWindow.exceptAll(viaOp).count() == 0)
-    } finally spark.conf.set(graft.plans.TopKRewriteRule.EnabledKey, "true")
+    graft.plans.TopKRewriteRule.register(spark)
+    // the differential needs the REAL window plan on one side: build it
+    // in a fresh session, which has no graft rule or strategy installed
+    val fresh = spark.newSession()
+    def base(s: SparkSession) = Tables.orders(s, sf)
+      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
+    val viaOp = graft.plans.TopKPerGroup(base(spark),
+      Seq("o_custkey"), Seq("o_totalprice" -> false, "o_orderkey" -> true), 3)
+    val w = Window.partitionBy("o_custkey")
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    val viaWindow = base(fresh)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+    assert(viaWindow.queryExecution.executedPlan.toString.contains("Window"),
+      "differential baseline must be the real window plan")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_custkey", "o_orderkey", "o_totalprice", "rn")
+        .collect().map(_.toString).sorted.toSeq
+    val got = rows(viaOp)
+    assert(got.nonEmpty)
+    assert(got == rows(viaWindow))
   }
 
   test("plan shape: partial heap below the exchange, final heap above") {
-    graft.plans.TopKPerGroupStrategy.register(spark)
+    graft.plans.TopKRewriteRule.register(spark)
     val df = graft.plans.TopKPerGroup(
       Tables.orders(spark, sf).select(col("o_custkey"), col("o_orderkey")),
       Seq("o_custkey"), Seq("o_orderkey" -> true), 2)
@@ -55,7 +55,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
   }
 
   test("plan shape: pre-clustered child needs NO exchange; downstream keyed agg reuses the partitioning") {
-    graft.plans.TopKPerGroupStrategy.register(spark)
+    graft.plans.TopKRewriteRule.register(spark)
     // child repartitioned on the group key: the partial/final stages are
     // per-partition transforms and MUST propagate that partitioning, so
     // (a) no exchange appears between partial and final, and (b) a
@@ -74,7 +74,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
   }
 
   test("randomized differential: operator == pure-Scala model over seeded datasets") {
-    graft.plans.TopKPerGroupStrategy.register(spark)
+    graft.plans.TopKRewriteRule.register(spark)
     import spark.implicits._
     for (seed <- 1 to 8) {
       val rnd = new scala.util.Random(seed)
@@ -97,7 +97,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
   }
 
   test("edge cases: k=1, groups smaller than k, duplicate order values") {
-    graft.plans.TopKPerGroupStrategy.register(spark)
+    graft.plans.TopKRewriteRule.register(spark)
     import spark.implicits._
     val df = Seq(
       ("a", 1L, 10.0), ("a", 2L, 10.0), ("a", 3L, 5.0),
@@ -166,7 +166,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
     assert(or.count() == 2) // (x,1) via rn=1; (y,3) via both disjuncts
   }
 
-  test("rewrite rule: k above spark.graft.topk.maxK declines to the window plan") {
+  test("rewrite rule: k above DefaultMaxK declines to the window plan") {
     graft.plans.TopKRewriteRule.register(spark)
     import spark.implicits._
     val df = Seq(("x", 1L), ("x", 2L), ("y", 3L)).toDF("g", "id")
@@ -176,13 +176,8 @@ class TopKPerGroupSpec extends AnyFunSuite {
     // an "effectively unlimited" top-k must stay on the spilling window
     // plan — the heaps hold k rows per group per partition in memory
     assert(!planned(graft.plans.TopKRewriteRule.DefaultMaxK + 1).contains("TopKPerGroup"))
+    assert(planned(graft.plans.TopKRewriteRule.DefaultMaxK).contains("TopKPerGroup"))
     assert(planned(3).contains("TopKPerGroup"))
-    // the threshold is tunable per workload
-    spark.conf.set(graft.plans.TopKRewriteRule.MaxKKey, "2")
-    try {
-      assert(!planned(3).contains("TopKPerGroup"))
-      assert(planned(2).contains("TopKPerGroup"))
-    } finally spark.conf.unset(graft.plans.TopKRewriteRule.MaxKKey)
   }
 
   test("rewrite rule: rank/dense_rank windows are NOT rewritten") {
@@ -200,7 +195,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
     // regression: the final exec must demand AllTuples for the global
     // case — with UnspecifiedDistribution each partition emitted its own
     // "global" top-k (up to partitions*k rows, k of them rn=1)
-    graft.plans.TopKPerGroupStrategy.register(spark)
+    graft.plans.TopKRewriteRule.register(spark)
     import spark.implicits._
     val df = (1L to 100L).map(i => (i, (i * 37 % 101).toDouble))
       .toDF("id", "v").repartition(4)
@@ -220,7 +215,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
     // the final stage runs the spillable-sort fallback. The observable
     // contract: identical results to the pure-Scala model — the guard
     // trades speed for bounded memory, never correctness.
-    graft.plans.TopKPerGroupStrategy.register(spark)
+    graft.plans.TopKRewriteRule.register(spark)
     import spark.implicits._
     spark.conf.set(graft.plans.TopKRewriteRule.MaxRetainedKey, "37")
     try {
