@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.gen.{CmsEstimateExpr, ColMeansDExpr, DecUnscaledExpr, L2SqDExpr, L2SqFdExpr, LongSetAgg, Md5Hash60Expr, MinHashSigsExpr, NgramHashesExpr, PairsGenExpr, PqAdcExpr, PqCodesExpr, PqDmExpr, RandStringExpr, ShingleGenExpr, ShingleHashesExpr, Sum128Agg, TokNgramsGenExpr, TriPackGenExpr, TriUnpackExpr}
+import graft.gen.{ColMeansDExpr, L2SqDExpr, L2SqFdExpr, PairsGenExpr, PqAdcExpr, PqCodesExpr, PqDmExpr, ShingleGenExpr, ShingleHashesExpr, TokNgramsGenExpr, TriPackGenExpr, TriUnpackExpr}
 
 /** The engine posture every session that runs the inventory gets: the
-  * 23 `graft_*` functions in [[GraftExtensions.builders]] (generators,
-  * vector folds, sketches, hashes and the 128-bit decimal sums), the
+  * 13 `graft_*` functions in [[GraftExtensions.builders]] that the
+  * inventory's SQL calls (generators, vector folds, product-quantizer
+  * kernels and the shingle hash set), the
   * [[graft.plans.TopKPerGroupStrategy]] planner strategy and the
   * [[graft.plans.TopKRewriteRule]] optimizer rule.
   *
@@ -38,30 +39,11 @@ object GraftExtensions {
     case other => throw new IllegalArgumentException(s"expected integer literal, got $other")
   }
   private def litInt(e: Expression): Int = Math.toIntExact(litLong(e))
-  private def litString(e: Expression): String = e match {
-    case Literal(v, _) if v != null => v.toString
-    case other => throw new IllegalArgumentException(s"expected string literal, got $other")
-  }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_rand_string" -> { exprs =>
-      RandStringExpr(exprs(0), litLong(exprs(1)), litInt(exprs(2)),
-        litString(exprs(3)), if (exprs.length > 4) litInt(exprs(4)) else -1)
-    },
-    "graft_minhash_sigs" -> { exprs =>
-      MinHashSigsExpr(exprs(0),
-        if (exprs.length > 1) litInt(exprs(1)) else 5,
-        if (exprs.length > 2) litInt(exprs(2)) else 16)
-    },
-    "graft_ngram_hashes" -> { exprs =>
-      NgramHashesExpr(exprs(0), if (exprs.length > 1) litInt(exprs(1)) else 3)
-    },
-    "graft_md5_60" -> { exprs => Md5Hash60Expr(exprs(0)) },
     "graft_shingles" -> { exprs =>
       ShingleGenExpr(exprs(0), if (exprs.length > 1) litInt(exprs(1)) else 5)
     },
-    "graft_cms_estimate" -> { exprs => CmsEstimateExpr(exprs(0), exprs(1)) },
-    "graft_pairs" -> { exprs => PairsGenExpr(exprs(0), directed = false) },
     "graft_pairs_all" -> { exprs => PairsGenExpr(exprs(0), directed = true) },
     "graft_tri_pack" -> { exprs => TriPackGenExpr(exprs(0)) },
     "graft_tri_unpack" -> { exprs => TriUnpackExpr(exprs(0)) },
@@ -74,12 +56,6 @@ object GraftExtensions {
     "graft_pq_adc" -> { exprs => PqAdcExpr(exprs(0), exprs(1)) },
     "graft_shingle_hashes" -> { exprs =>
       ShingleHashesExpr(exprs(0), litInt(exprs(1)), litLong(exprs(2))) },
-    "graft_sum128" -> { exprs =>
-      Sum128Agg.single(exprs(0), litInt(exprs(1)), litInt(exprs(2))) },
-    "graft_sum128p" -> { exprs =>
-      Sum128Agg(exprs(0), exprs(1), litInt(exprs(2)), litInt(exprs(3))) },
-    "graft_dec_unscaled" -> { exprs => DecUnscaledExpr(exprs(0), litInt(exprs(1))) },
-    "graft_collect_sorted_set" -> { exprs => LongSetAgg(exprs(0)) },
     "graft_tok_ngrams" -> { exprs =>
       TokNgramsGenExpr(exprs(0), litInt(exprs(1)),
         if (exprs.length > 2) litInt(exprs(2)) else 1, distinct = false) },

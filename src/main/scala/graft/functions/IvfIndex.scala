@@ -50,9 +50,8 @@ import org.apache.spark.sql.graft.ColumnBridge
   * broadcasts up to BroadcastMaxCids = 10⁵ cids (~26-40 MB with row
   * overhead) and DELEGATES to a cell-keyed shuffle-hash join beyond
   * that — same plan shape, the k-row table exchanged on gid instead
-  * of shipped whole to every task (the q_dedup_embedding →
-  * q_dedup_embedding_blocked precedent; IvfIndexSpec's forced-
-  * delegation test pins result identity across the two regimes).
+  * of shipped whole to every task (IvfIndexSpec's forced-delegation
+  * test pins result identity across the two regimes).
   * Nothing here ever shuffles the corpus more than once.
   */
 object IvfIndex {

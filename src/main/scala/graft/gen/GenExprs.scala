@@ -93,31 +93,6 @@ object GenExprs {
       seed * 1000003L + colIdx * 2048L, fixedLen, alphabet.mkString, lenDraw))
   }
 
-  /** Spark type for each spec token (SURVEY.md §1.2 mapping). */
-  def sparkType(spec: ColSpec): DataType = spec.token match {
-    case "key" | "rkey" | "bigint"                  => LongType
-    case "bit" | "mediumint" | "int" | "year"       => IntegerType
-    case "tinyint"                                  => ByteType
-    case "smallint"                                 => ShortType
-    case "float"                                    => FloatType
-    case "double"                                   => DoubleType
-    case "char" | "nchar" | "varchar" | "varchar2" |
-         "nvarchar2" | "text" | "blob" | "time"     => StringType
-    case "date"                                     => DateType
-    case "datetime" | "timestamp"                   => TimestampType
-    case "decimal" | "number" =>
-      // scale may legally exceed precision in a spec; DecimalType throws
-      // on scale > precision, so clamp the same way exprFor does.
-      val prec = math.min(spec.precision, 38)
-      DecimalType(prec, math.min(math.min(spec.scale, prec), 37))
-    case _                                          => StringType // unknown → empty
-  }
-
-  def schemaFor(specs: Seq[ColSpec]): StructType =
-    StructType(specs.zipWithIndex.map { case (s, i) =>
-      StructField(s"c$i", sparkType(s), nullable = false)
-    })
-
   /** The generator expression for one column, over the `id` column of a
     * `spark.range`. Domains mirror generate_csv.cpp:197-241 exactly.
     */

@@ -54,25 +54,20 @@ object DedupQueries {
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id")).distinct()
   }
 
-  /** The broadcast-vs-blocked decision q_dedup_embedding makes: past
-    * ~500k×64f (~130 MB) the all-pairs candidate side must not be
-    * broadcast, so the query delegates to blockedAllPairs. The check
-    * is a bounded COUNT (limit(bound+1).count()) — it never pulls rows
-    * to the driver.
-    */
-  private def embeddingDelegates(s: SparkSession, d: String): Boolean =
-    embeddings(s, d).select(col("vec_id")).limit(500001).count() > 500000L
-
-  /** Blocked all-pairs cosine near-dup — the 100 TB form, shared by
-    * q_dedup_embedding_blocked (always) and q_dedup_embedding (as its
-    * automatic fallback past the broadcast bound). Vectors split into
-    * B blocks by id; every unordered block pair (bi ≤ bj) is one
-    * reduce group and each vector is replicated to the B groups
-    * containing its block. Per-task memory is 2·N/B vectors (tuned by
-    * B), shuffle volume is B·N rows, no driver collect and no
-    * whole-table broadcast — same result set, same oracle, identical
-    * double arithmetic (dot in index order, lower-id norm first) as
-    * the broadcast form.
+  /** Blocked all-pairs cosine: every pair a_id < b_id of embeddings
+    * with both norms > 0 and cos ≥ minCos, as (a_id, b_id, cos) — the
+    * one pair plan behind q_dedup_embedding, q_dedup_embedding_blocked
+    * (0.45) and q_dedup_sweep (0.30). A dense all-pairs scan has no
+    * algebraic shortcut for Catalyst, and every DataFrame formulation
+    * routes the pairs through an interpreted nested-loop-join
+    * condition, so the pair loop is one typed reduce over id blocks.
+    * Vectors split into B blocks by id; every unordered block pair
+    * (bi ≤ bj) is one reduce group and each vector is replicated to the
+    * B groups containing its block. Per-task memory is 2·N/B vectors,
+    * shuffle volume is B·N rows, no driver collect and no whole-table
+    * broadcast. Double math is IEEE, ascending-index dot with the lower
+    * id first and one norm per vector — bit-identical to the DuckDB
+    * list_reduce oracle.
     *
     * B adapts to corpus size (≈16k vectors per block, floor 4): a
     * fixed B caps parallelism at B·(B+1)/2 reduce groups, which at
@@ -82,7 +77,7 @@ object DedupQueries {
     * — at B=32 on 520k×64f that is ~4 GB spread over the cluster,
     * nothing against the 1.4e11 dots it parallelizes.
     */
-  private def blockedAllPairs(s: SparkSession, d: String): DataFrame = {
+  private def embeddingPairs(s: SparkSession, d: String, minCos: Double): DataFrame = {
     import s.implicits._
     val n = embeddings(s, d).select(col("vec_id")).count()
     val B = math.max(4L, (n + 16383L) / 16384L).min(256L).toInt
@@ -107,29 +102,52 @@ object DedupQueries {
         while (i < v.length) { sum += v(i).toDouble * v(i).toDouble; i += 1 }
         math.sqrt(sum)
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
       var i = 0
       while (i < rows.length) {
         val (aId, av) = rows(i)
         var j = i + 1
         while (j < rows.length) {
           val (bId, bv) = rows(j)
-          // in a cross-block group, only cross pairs belong here —
-          // intra-block pairs are owned by that block's (b, b) group
-          if (bi == bj || Math.floorMod(aId, B.toLong) != Math.floorMod(bId, B.toLong)) {
+          // a repeated vec_id is no pair (the oracle's a.vec_id <
+          // b.vec_id); in a cross-block group only cross pairs belong
+          // here — intra-block pairs are owned by that block's (b, b)
+          // group. Zero-norm guard: cosine is undefined (NaN), and NaN
+          // comparison semantics DIFFER across engines (JVM false,
+          // DuckDB sorts NaN above all) — both sides exclude explicitly.
+          if (aId < bId && norms(i) > 0 && norms(j) > 0
+            && (bi == bj || Math.floorMod(aId, B.toLong) != Math.floorMod(bId, B.toLong))) {
             var dot = 0.0
             var k = 0
             while (k < av.length) { dot += av(k).toDouble * bv(k).toDouble; k += 1 }
-            if (norms(i) > 0 && norms(j) > 0
-              && dot / (norms(i) * norms(j)) >= 0.45) out += ((aId, bId))
+            val cos = dot / (norms(i) * norms(j))
+            if (cos >= minCos) out += ((aId, bId, cos))
           }
           j += 1
         }
         i += 1
       }
       out.iterator
-    }.toDF("a_id", "b_id").orderBy("a_id", "b_id")
+    }.toDF("a_id", "b_id", "cos")
   }
+
+  private val embeddingDedup: Q = (s, d) =>
+    embeddingPairs(s, d, 0.45).select("a_id", "b_id").orderBy("a_id", "b_id")
+
+  private val embeddingOracle: String =
+    """WITH e AS (
+      |  SELECT vec_id, embedding,
+      |    sqrt(list_reduce(list_transform(generate_series(1, 64),
+      |      i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (x, y) -> x + y)) AS nrm
+      |  FROM embeddings
+      |)
+      |SELECT a.vec_id AS a_id, b.vec_id AS b_id
+      |FROM e a JOIN e b ON a.vec_id < b.vec_id
+      |WHERE a.nrm > 0 AND b.nrm > 0
+      |  AND list_reduce(list_transform(generate_series(1, 64),
+      |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE), (x, y) -> x + y)
+      |      / (a.nrm * b.nrm) >= 0.45
+      |ORDER BY a_id, b_id""".stripMargin
 
   def queries: Map[String, Q] = Map(
     // Exact dedup, keep-first semantics: group on md5(text) (at 100 TB
@@ -260,85 +278,14 @@ object DedupQueries {
         .orderBy("a_id", "b_id")
     }),
 
-    // Embedding-cosine near-dup: all-pairs dense similarity. This is
-    // the one operator where mapPartitions is the right physical plan
-    // (the documented last-resort case): a dense all-pairs scan has no
-    // algebraic shortcut for Catalyst to exploit, and every DataFrame
-    // formulation routes 2M pair evaluations through an interpreted
-    // nested-loop-join condition (~70 s at sf0.1 vs ~1 s here). The
-    // candidate side is broadcast once per executor; at 100 TB you
-    // broadcast blocks of the matrix instead of the whole table
-    // (block-partitioned all-pairs), or pre-bucket with LSH (q_sim_ann).
-    // Double math is IEEE, ascending-index accumulation — bit-identical
-    // to the DuckDB list_reduce oracle; only pairs are output, so
-    // last-ulp divergence cannot affect the hash compare.
-    "q_dedup_embedding" -> ((s, d) => {
-      import s.implicits._
-      val e = embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-      // Broadcast bound: all-pairs needs the candidate side resident on
-      // every executor. Past ~500k×64f (~130 MB) that design is wrong,
-      // so the query DELEGATES to the blocked plan (blockedAllPairs —
-      // same pairs, same double arithmetic, no broadcast) instead of
-      // failing: below the bound you get the fast broadcast form, past
-      // it the plan degrades to the scale-safe one automatically.
-      // The bound check (embeddingDelegates) is a bounded COUNT
-      // (limit(bound+1).count()): it never pulls rows to the driver,
-      // so when the blocked plan is taken the ~130 MB candidate
-      // collect simply never executes — the collect runs only on the
-      // small-side branch (round-6 verdict: the previous form
-      // collected unconditionally and discarded the pull when
-      // delegating). Acknowledged trade: the small-side branch now
-      // runs two jobs (bounded count + collect); the count job is
-      // bounded-scan cheap (~0.03 s at sf0.1, inside the broadcast
-      // form's timing) — accepted in exchange for never
-      // shipping the candidate table to the driver when the blocked
-      // plan is the one that runs.
-      if (embeddingDelegates(s, d)) blockedAllPairs(s, d)
-      else {
-        val all = e.collect().sortBy(_._1)
-        val norms = all.map { case (_, v) =>
-          var i = 0; var sum = 0.0
-          while (i < v.length) { sum += v(i).toDouble * v(i).toDouble; i += 1 }
-          math.sqrt(sum)
-        }
-        val bc = s.sparkContext.broadcast((all, norms))
-        // The probe pass is CPU-bound (O(n²) dots over O(n) input
-        // bytes): Spark's byte-sized file split would hand a ~50 MB
-        // 200k-vector corpus to 1-2 tasks and serialize 2e10 dot
-        // products. One cheap n-row shuffle spreads the quadratic
-        // compute over every core — partition by compute, not bytes.
-        e.repartition(s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-          .mapPartitions { rows =>
-          val (cands, cnorms) = bc.value
-          rows.flatMap { case (aId, av) =>
-            var aSum = 0.0
-            var i = 0
-            while (i < av.length) { aSum += av(i).toDouble * av(i).toDouble; i += 1 }
-            val aNorm = math.sqrt(aSum)
-            cands.iterator.zipWithIndex
-              .filter { case ((bId, _), _) => bId > aId }
-              .flatMap { case ((bId, bv), bi) =>
-                var dot = 0.0
-                var j = 0
-                while (j < av.length) { dot += av(j).toDouble * bv(j).toDouble; j += 1 }
-                // zero-norm guard: cosine is undefined (NaN), and NaN
-                // comparison semantics DIFFER across engines (JVM false,
-                // DuckDB sorts NaN above all) — both sides exclude explicitly
-                if (aNorm > 0 && cnorms(bi) > 0
-                  && dot / (aNorm * cnorms(bi)) >= 0.45) Some((aId, bId))
-                else None
-              }
-          }
-        }.toDF("a_id", "b_id").orderBy("a_id", "b_id")
-      }
-    }),
-
-    // Blocked all-pairs: the 100 TB form of q_dedup_embedding, made
-    // concrete and always-on (q_dedup_embedding reaches the same code
-    // automatically past its broadcast bound). See blockedAllPairs.
-    "q_dedup_embedding_blocked" -> ((s, d) => blockedAllPairs(s, d)),
+    // Embedding-cosine near-dup at 0.45: all-pairs dense similarity
+    // through the blocked pair plan (embeddingPairs). At 100 TB the
+    // alternative is to pre-bucket with LSH (q_sim_ann) or cells
+    // (q_dedup_semantic). Only pairs are output, so last-ulp divergence
+    // cannot affect the hash compare. q_dedup_embedding_blocked is the
+    // same query under its historical name.
+    "q_dedup_embedding" -> embeddingDedup,
+    "q_dedup_embedding_blocked" -> embeddingDedup,
 
     // Fuzzy entity-resolution join: match deterministically-corrupted
     // supplier names (one character dropped at an md5-chosen position)
@@ -623,60 +570,18 @@ object DedupQueries {
     // pairs at each threshold in {0.30 … 0.50} bracketing the
     // committed 0.45 cutoff (q_dedup_embedding), in ONE pass over the
     // pair space, so the retention curve (pairs vs cutoff) is known
-    // before the destructive keep/drop run. Rides
-    // the same block-pair replication as q_dedup_embedding_blocked
-    // (B=4 blocks, per-task 2·N/B vectors, no broadcast, no driver
-    // collect) and the same double arithmetic (index-order dot,
-    // lower-id norm first), so the counts are exactly the oracle's
-    // all-pairs counts. Thresholds compare the identical IEEE double
-    // both engines (decimal literal → nearest double).
+    // before the destructive keep/drop run. The pairs at the lowest
+    // cutoff come from embeddingPairs (same double arithmetic as the
+    // oracle's all-pairs counts); each pair then counts once per
+    // threshold it clears. Thresholds compare the identical IEEE
+    // double in both engines (decimal literal → nearest double).
     "q_dedup_sweep" -> ((s, d) => {
       import s.implicits._
       val thresholds = Seq(0.30, 0.35, 0.40, 0.45, 0.50)
-      val B = 4
-      val pairsIdx = for { bi <- 0 until B; bj <- bi until B } yield (bi, bj)
-      val e = embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-      val replicated = e.flatMap { case (id, v) =>
-        val b = Math.floorMod(id, B.toLong).toInt
-        pairsIdx.iterator.zipWithIndex.collect {
-          case ((bi, bj), pid) if bi == b || bj == b => (pid, id, v)
-        }
-      }
-      val hits = replicated.groupByKey(_._1).flatMapGroups {
-        (pid: Int, it: Iterator[(Int, Long, Array[Float])]) =>
-          val (bi, bj) = pairsIdx(pid)
-          val rows = it.map { case (_, id, v) => (id, v) }.toArray.sortBy(_._1)
-          val norms = rows.map { case (_, v) =>
-            var i = 0; var sum = 0.0
-            while (i < v.length) { sum += v(i).toDouble * v(i).toDouble; i += 1 }
-            math.sqrt(sum)
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var i = 0
-          while (i < rows.length) {
-            val av = rows(i)._2
-            var j = i + 1
-            while (j < rows.length) {
-              if (bi == bj ||
-                Math.floorMod(rows(i)._1, B.toLong) != Math.floorMod(rows(j)._1, B.toLong)) {
-                if (norms(i) > 0 && norms(j) > 0) {
-                  val bv = rows(j)._2
-                  var dot = 0.0
-                  var k = 0
-                  while (k < av.length) { dot += av(k).toDouble * bv(k).toDouble; k += 1 }
-                  val cos = dot / (norms(i) * norms(j))
-                  thresholds.foreach { t => if (cos >= t) out += math.round(t * 1e6) }
-                }
-              }
-              j += 1
-            }
-            i += 1
-          }
-          out.iterator
-      }.toDF("thr_ppm")
-      hits.groupBy("thr_ppm").agg(count(lit(1)).as("n_pairs"))
+        .map(t => (math.round(t * 1e6), t)).toDF("thr_ppm", "t")
+      embeddingPairs(s, d, 0.30)
+        .join(broadcast(thresholds), col("cos") >= col("t"))
+        .groupBy("thr_ppm").agg(count(lit(1)).as("n_pairs"))
         .orderBy("thr_ppm")
     }),
   )
@@ -769,37 +674,8 @@ object DedupQueries {
           // and DuckDB's NaN compares greater than everything — the Spark
           // side never materializes such pairs (no postings to join).
 
-      "q_dedup_embedding" ->
-        """WITH e AS (
-          |  SELECT vec_id, embedding,
-          |    sqrt(list_reduce(list_transform(generate_series(1, 64),
-          |      i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (x, y) -> x + y)) AS nrm
-          |  FROM embeddings
-          |)
-          |SELECT a.vec_id AS a_id, b.vec_id AS b_id
-          |FROM e a JOIN e b ON a.vec_id < b.vec_id
-          |WHERE a.nrm > 0 AND b.nrm > 0
-          |  AND list_reduce(list_transform(generate_series(1, 64),
-          |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE), (x, y) -> x + y)
-          |      / (a.nrm * b.nrm) >= 0.45
-          |ORDER BY a_id, b_id""".stripMargin,
-
-      // same semantics and arithmetic as q_dedup_embedding, different
-      // physical strategy — one oracle text, two gated plans
-      "q_dedup_embedding_blocked" ->
-        """WITH e AS (
-          |  SELECT vec_id, embedding,
-          |    sqrt(list_reduce(list_transform(generate_series(1, 64),
-          |      i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (x, y) -> x + y)) AS nrm
-          |  FROM embeddings
-          |)
-          |SELECT a.vec_id AS a_id, b.vec_id AS b_id
-          |FROM e a JOIN e b ON a.vec_id < b.vec_id
-          |WHERE a.nrm > 0 AND b.nrm > 0
-          |  AND list_reduce(list_transform(generate_series(1, 64),
-          |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE), (x, y) -> x + y)
-          |      / (a.nrm * b.nrm) >= 0.45
-          |ORDER BY a_id, b_id""".stripMargin,
+      "q_dedup_embedding" -> embeddingOracle,
+      "q_dedup_embedding_blocked" -> embeddingOracle,
 
       // same corruption (drop char at md5-hash mod length), same
       // symmetric-deletion blocking keys, same levenshtein residual

@@ -175,8 +175,7 @@ object ScalarQueries {
           col("l_quantity").cast("long").as("qty"))
         .as[(String, Long, Long)]
         .groupByKey(_._1)
-        .agg(new graft.functions.WeightedAvgOf[(String, Long, Long)](t => (t._2, t._3))
-          .toColumn.name("wavg_price"))
+        .agg(graft.functions.WeightedAvgPrice.toColumn.name("wavg_price"))
         .toDF("l_returnflag", "wavg_price")
         .orderBy("l_returnflag")
     }),

@@ -127,6 +127,22 @@ object SimilarityQueries {
       .select(col("vec_id"), col("embedding"), col("nrm"),
         (-col("best").getField("ncid")).as("cell"))
 
+  /** Semantic-dedup pair search over assigned cells: the cell
+    * equi-join (a_id < b_id) at cosine ≥ 0.45, shared by
+    * q_dedup_semantic and q_dedup_semantic_indexed. Input: (cell,
+    * vec_id, embedding, nrm > 0).
+    */
+  private def cellPairs(assigned: DataFrame): DataFrame = {
+    val a = assigned.select(col("cell"), col("vec_id").as("a_id"),
+      col("embedding").as("ae"), col("nrm").as("an"))
+    val b = assigned.select(col("cell").as("cellb"), col("vec_id").as("b_id"),
+      col("embedding").as("be"), col("nrm").as("bn"))
+    a.join(b, col("cell") === col("cellb") && col("a_id") < col("b_id"))
+      .filter(dotD(col("ae"), col("be")) / (col("an") * col("bn")) >= 0.45)
+      .select(col("cell"), col("a_id"), col("b_id"))
+      .orderBy("cell", "a_id", "b_id")
+  }
+
   /** LSH bucket id: bit h set iff dot(v, plane_h) > 0. Projection runs
     * through the codegen PlaneProjExpr; the plane components are
     * precomputed with the exact per-element arithmetic the DuckDB
@@ -444,15 +460,7 @@ object SimilarityQueries {
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
         .filter(col("nrm") > 0)
-      val assigned = assignCells(e, centArrOf(e))
-      val a = assigned.select(col("cell"), col("vec_id").as("a_id"),
-        col("embedding").as("ae"), col("nrm").as("an"))
-      val b = assigned.select(col("cell").as("cellb"), col("vec_id").as("b_id"),
-        col("embedding").as("be"), col("nrm").as("bn"))
-      a.join(b, col("cell") === col("cellb") && col("a_id") < col("b_id"))
-        .filter(dotD(col("ae"), col("be")) / (col("an") * col("bn")) >= 0.45)
-        .select(col("cell"), col("a_id"), col("b_id"))
-        .orderBy("cell", "a_id", "b_id")
+      cellPairs(assignCells(e, centArrOf(e)))
     }),
 
     // Semantic dedup through the TWO-LEVEL (IVF-over-centroids)
@@ -495,16 +503,8 @@ object SimilarityQueries {
       val (cents, _) = graft.functions.IvfIndex.fit(
         e.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
         k = IdxK, iters = IdxFitIters, groupSize = IdxGroup, nprobe = IdxProbe)
-      val assigned = graft.functions.IvfIndex.assignIndexed(e, cents, IdxGroup, IdxProbe,
-        kHint = IdxK)
-      val a = assigned.select(col("cell"), col("vec_id").as("a_id"),
-        col("embedding").as("ae"), col("nrm").as("an"))
-      val b = assigned.select(col("cell").as("cellb"), col("vec_id").as("b_id"),
-        col("embedding").as("be"), col("nrm").as("bn"))
-      a.join(b, col("cell") === col("cellb") && col("a_id") < col("b_id"))
-        .filter(dotD(col("ae"), col("be")) / (col("an") * col("bn")) >= 0.45)
-        .select(col("cell"), col("a_id"), col("b_id"))
-        .orderBy("cell", "a_id", "b_id")
+      cellPairs(graft.functions.IvfIndex.assignIndexed(e, cents, IdxGroup, IdxProbe,
+        kHint = IdxK))
     }),
 
     // Random-projection dimensionality reduction (the Johnson-

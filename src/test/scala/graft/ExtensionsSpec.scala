@@ -2,39 +2,24 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** SQL-surface checks for the native expressions registered by
-  * GraftExtensions: callable from spark.sql, results consistent with
-  * the Scala-API paths.
+/** Checks for the native expressions: each kernel against the
+  * reference formulation it replaces, built the way the program
+  * builds it (by name for the `graft_*` functions GraftExtensions
+  * registers, as an expression for the rest), plus the install paths.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkEntry.localSession(4)
 
-  test("graft_rand_string via SQL matches the generator column") {
-    GraftExtensions.register(spark)
-    val viaSql = spark.sql(
-      """SELECT graft_rand_string(id, 42002174, 10,
-        |  '0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz', -1) AS s
-        |FROM range(100)""".stripMargin)
-    assert(viaSql.count() == 100)
-    assert(viaSql.filter("s NOT RLIKE '^[0-9A-Za-z]{10}$'").count() == 0)
-    // seedMix = seed*1000003 + colIdx*2048 = 42*1000003 + 2048 = 42002174
-    // (column index 1 of seed 42) → must equal the varchar(10) column of
-    // the Scala-API generator
-    val viaApi = gen.SqloadGen.table(spark, "key,varchar(10)", 100, seed = 42)
-      .select("c1")
-    assert(viaSql.exceptAll(viaApi.toDF("s")).count() == 0)
-  }
-
   test("graft_minhash_sigs and graft_ngram_hashes run over documents") {
-    GraftExtensions.register(spark)
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .createOrReplaceTempView("docs_ext")
-    val r = spark.sql(
-      """SELECT doc_id, size(graft_minhash_sigs(text, 5, 16)) AS n_sigs,
-        |       size(graft_ngram_hashes(text, 3)) AS n_grams
-        |FROM docs_ext""".stripMargin)
+    import org.apache.spark.sql.functions.{col, size}
+    val text = ColumnBridge.expression(col("text"))
+    val r = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"),
+        size(ColumnBridge.column(gen.MinHashSigsExpr(text, 5, 16))).as("n_sigs"),
+        size(ColumnBridge.column(gen.NgramHashesExpr(text, 3))).as("n_grams"))
     assert(r.filter("n_sigs != 16").count() == 0)
     assert(r.filter("n_grams <= 0").count() == 0)
   }
@@ -53,16 +38,15 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_md5_60 equals the conv(substr(md5)) formulation") {
-    GraftExtensions.register(spark)
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, expr}
     val df = (Seq("", "a", "hello|42", "héllo", "x" * 300) ++
       (1 to 200).map(i => s"k$i")).toDF("s")
-    df.createOrReplaceTempView("md5_parity")
-    val bad = spark.sql(
-      """SELECT s, graft_md5_60(s) AS fast,
-        |  CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) AS ref
-        |FROM md5_parity WHERE graft_md5_60(s) != CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)
-        |""".stripMargin).collect()
+    val bad = df
+      .select(col("s"),
+        ColumnBridge.column(gen.Md5Hash60Expr(ColumnBridge.expression(col("s")))).as("fast"),
+        expr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)").as("ref"))
+      .filter(col("fast") =!= col("ref")).collect()
     assert(bad.isEmpty, bad.take(3).mkString(", "))
   }
 
@@ -70,7 +54,6 @@ class ExtensionsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.ColumnBridge
     val rnd = new scala.util.Random(7)
     val rows = (1 to 500).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() * 2 - 1), Array.fill(64)(rnd.nextFloat() * 2 - 1))
@@ -204,7 +187,6 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("vector expressions reject non-float-array inputs at analysis time") {
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
     val dbl = Seq((1L, Array(1.0, 2.0))).toDF("id", "v") // array<double>
     val flt = Seq((1L, Array(1.0f, 2.0f))).toDF("id", "v")
     def norm(df: org.apache.spark.sql.DataFrame) =
@@ -306,15 +288,16 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_cms_estimate: one-sided error within eps*N; analysis rejects bad types") {
-    GraftExtensions.register(spark)
     import spark.implicits._
-    import org.apache.spark.sql.functions.{broadcast, expr}
+    import org.apache.spark.sql.functions.{broadcast, col, expr}
+    def est(sk: String, k: String) = ColumnBridge.column(gen.CmsEstimateExpr(
+      ColumnBridge.expression(col(sk)), ColumnBridge.expression(col(k))))
     val n = 1000
     val df = (1 to n).map(i => (i % 7).toLong).toDF("k")
     val skDf = df.agg(expr("count_min_sketch(k, 0.01d, 0.99d, 7)").as("sk"))
     val rows = df.groupBy("k").count()
       .crossJoin(broadcast(skDf))
-      .selectExpr("k", "count AS exact", "graft_cms_estimate(sk, k) AS est")
+      .select(col("k"), col("count").as("exact"), est("sk", "k").as("est"))
       .collect()
     assert(rows.length == 7)
     rows.foreach { r =>
@@ -325,7 +308,7 @@ class ExtensionsSpec extends AnyFunSuite {
         s"k=${r.getLong(0)}: est $est above eps*N bound")
     }
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      df.selectExpr("graft_cms_estimate(k, k)").collect()
+      df.select(est("k", "k")).collect()
     }
     assert(err.getMessage.contains("BINARY"), err.getMessage)
   }
@@ -418,24 +401,6 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("graft_sum128 SQL surface matches the Scala API") {
-    GraftExtensions.register(spark)
-    spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .createOrReplaceTempView("li_s128")
-    val viaSql = spark.sql(
-      """SELECT graft_sum128(graft_dec_unscaled(l_quantity, 2), 28, 2) AS s,
-        |       graft_sum128p(graft_dec_unscaled(l_quantity, 2),
-        |                     graft_dec_unscaled(l_tax, 2), 38, 4) AS sp
-        |FROM li_s128""".stripMargin)
-    val viaApi = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select(graft.Tables.decU(org.apache.spark.sql.functions.col("l_quantity"), 2).as("qu"),
-        graft.Tables.decU(org.apache.spark.sql.functions.col("l_tax"), 2).as("tu"))
-      .agg(graft.Tables.sum128(org.apache.spark.sql.functions.col("qu"), 28, 2).as("s"),
-        graft.Tables.sum128p(org.apache.spark.sql.functions.col("qu"),
-          org.apache.spark.sql.functions.col("tu"), 38, 4).as("sp"))
-    assert(viaSql.collect().toSeq == viaApi.collect().toSeq)
-  }
-
   test("graft_tok_ngrams ≡ the transform/concat lambda chains on every window shape") {
     GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
@@ -493,7 +458,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_collect_sorted_set ≡ sort_array(collect_set) on adversarial longs") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     val rows: Seq[(String, java.lang.Long)] = Seq(
       ("a", 5L), ("a", 1L), ("a", 5L), ("a", -3L), ("a", null),
@@ -502,7 +466,8 @@ class ExtensionsSpec extends AnyFunSuite {
       ("d", 42L))
     val df = spark.createDataFrame(rows).toDF("k", "v")
     val ref = df.groupBy("k").agg(sort_array(collect_set(col("v"))).as("ps")).orderBy("k")
-    val got = df.groupBy("k").agg(expr("graft_collect_sorted_set(v)").as("ps")).orderBy("k")
+    val got = df.groupBy("k").agg(ColumnBridge.column(gen.LongSetAgg(
+      ColumnBridge.expression(col("v"))).toAggregateExpression()).as("ps")).orderBy("k")
     assert(ref.schema == got.schema, s"schema: ${ref.schema} vs ${got.schema}")
     assert(ref.collect().toSeq == got.collect().toSeq)
   }
@@ -528,10 +493,10 @@ class ExtensionsSpec extends AnyFunSuite {
     val fresh = spark.newSession()
     val registry = fresh.sessionState.functionRegistry
     val sentinel: Seq[Expression] => Expression = _ => Literal("sentinel")
-    registry.createOrReplaceTempFunction("graft_md5_60", sentinel, "scala_udf")
+    registry.createOrReplaceTempFunction("graft_shingles", sentinel, "scala_udf")
     GraftExtensions.register(fresh)
     GraftExtensions.register(fresh)
-    assert(registry.lookupFunctionBuilder(FunctionIdentifier("graft_md5_60")).exists(_ eq sentinel),
+    assert(registry.lookupFunctionBuilder(FunctionIdentifier("graft_shingles")).exists(_ eq sentinel),
       "register replaced an existing function")
     assert(GraftExtensions.builders.forall { case (name, _) =>
       registry.functionExists(FunctionIdentifier(name)) })

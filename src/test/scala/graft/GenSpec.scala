@@ -166,7 +166,7 @@ class GenSpec extends AnyFunSuite {
       val df = SqloadGen.table(spark, "key,int,varchar(10),date", 1000, seed = 3)
       CsvOracle.writeCsv(df, out)
       val back = spark.read
-        .schema(graft.gen.GenExprs.schemaFor(graft.gen.TypeSpecParser.parse("key,int,varchar(10),date")))
+        .schema(df.schema)
         .option("header", "false")
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
         .csv(out)

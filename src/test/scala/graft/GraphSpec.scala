@@ -87,13 +87,14 @@ class GraphSpec extends AnyFunSuite {
     val di = run(operators.RelationalQueries.directedPairsExpr("ps"))
     // the round-21 streaming Generator forms must emit the exact same
     // pair multisets as the lambda chains they replace
-    GraftExtensions.register(spark)
-    def runGen(fn: String): Map[Long, Seq[(Long, Long)]] =
-      df.select(col("id"), expr(s"$fn(ps)").as(Seq("a", "b"))).collect()
+    import org.apache.spark.sql.graft.ColumnBridge
+    def runGen(directed: Boolean): Map[Long, Seq[(Long, Long)]] =
+      df.select(col("id"), ColumnBridge.column(gen.PairsGenExpr(
+          ColumnBridge.expression(col("ps")), directed)).as(Seq("a", "b"))).collect()
         .groupBy(_.getLong(0))
         .view.mapValues(_.map(r => (r.getLong(1), r.getLong(2))).toSeq.sorted).toMap
-    val unGen = runGen("graft_pairs")
-    val diGen = runGen("graft_pairs_all")
+    val unGen = runGen(directed = false)
+    val diGen = runGen(directed = true)
     baskets.zipWithIndex.foreach { case (b, i) =>
       val expUn = (for { x <- b.indices; y <- x + 1 until b.size } yield (b(x), b(y))).sorted
       val expDi = (for { x <- b; y <- b if x != y } yield (x, y)).sorted

@@ -119,6 +119,27 @@ class InventorySpec extends AnyFunSuite {
     }
   }
 
+  test("embedding near-dup pairs a repeated vec_id with other ids, never with itself") {
+    // the oracle joins on a.vec_id < b.vec_id: each copy of id 7 pairs
+    // with id 3 (cos 1), and nothing pairs with the orthogonal id 12
+    import spark.implicits._
+    val v = Array.tabulate(64)(i => if (i % 2 == 0) 1f else 0f)
+    val w = Array.tabulate(64)(i => if (i % 2 == 1) 1f else 0f)
+    val dir = java.nio.file.Files.createTempDirectory("graft_embeddings").toFile
+    try {
+      Seq((7L, v, 0), (3L, v, 0), (7L, v, 0), (12L, w, 0))
+        .toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$dir/embeddings.parquet")
+      for (q <- Seq("q_dedup_embedding", "q_dedup_embedding_blocked")) {
+        val got = SparkEntry.queries(q)(spark, dir.getPath).as[(Long, Long)].collect().toSeq
+        assert(got == Seq((3L, 7L), (3L, 7L)), q)
+      }
+      val sweep = SparkEntry.queries("q_dedup_sweep")(spark, dir.getPath)
+        .as[(Long, Long)].collect().toSeq
+      assert(sweep == Seq(300000L, 350000L, 400000L, 450000L, 500000L).map(t => (t, 2L)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   test("no query output has array/map/struct columns after Verify.sanitize") {
     // The driver's pandas comparator crashes on array cells (unhashable
     // numpy.ndarray) and renders decimals differently from DuckDB floats.

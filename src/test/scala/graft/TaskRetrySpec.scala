@@ -2,6 +2,8 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.shuffle.graft.FaultyShuffleManager
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -68,6 +70,20 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def digest(name: String, sf: String): Digest =
     Digest.of(SparkEntry.queries(name)(spark, sf))
 
+  // Every injected failure logs an executor ERROR with a full stack
+  // trace and TaskSetManager WARNs. Those two loggers go quiet for the
+  // faulty legs only (a job abort is still an ERROR), so an executor
+  // error anywhere else in the run still shows.
+  private val injectedNoise = Seq(
+    "org.apache.spark.executor.Executor" -> Level.OFF,
+    "org.apache.spark.scheduler.TaskSetManager" -> Level.ERROR)
+
+  private def faultyLeg[T](body: => T): T = {
+    val saved = injectedNoise.map { case (n, _) => n -> LogManager.getLogger(n).getLevel }
+    injectedNoise.foreach { case (n, l) => Configurator.setLevel(n, l) }
+    try body finally saved.foreach { case (n, l) => Configurator.setLevel(n, l) }
+  }
+
   // Queries whose inputs never touch the faulty dir (pure generators,
   // or generate→/tmp-scratch→read round-trips) see no open() injection
   // by construction; they still run under the faulty dir to pin that
@@ -87,10 +103,10 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       val before = FaultyFileSystem.injected.get()
       // the faulty leg runs twice: each execution's first attempts fail
       // afresh, and both must equal the clean digest
-      val faulty = Seq.fill(2)(digest(name, faultySf))
+      val faulty = faultyLeg(Seq.fill(2)(digest(name, faultySf)))
       val openHits = FaultyFileSystem.injected.get() - before
       val beforeFetch = FaultyShuffleManager.injected.get()
-      val refetched = FaultyShuffleManager.armedDuring(digest(name, cleanSf))
+      val refetched = faultyLeg(FaultyShuffleManager.armedDuring(digest(name, cleanSf)))
       val fetchHits = FaultyShuffleManager.injected.get() - beforeFetch
       if (fetchHits == 0) zeroShuffle += name
       spark.catalog.clearCache()
