@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Testdata table loaders + cross-engine determinism conventions.
   *
@@ -75,8 +80,41 @@ object Tables {
         org.apache.spark.sql.graft.ColumnBridge.expression(xU),
         org.apache.spark.sql.graft.ColumnBridge.expression(yU), p, s).toAggregateExpression())
 
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Table `name` of `sfDir`, its Parquet schema inferred at most once
+    * per file: a read without a schema runs a one-task footer job
+    * (`SchemaMergeUtils.mergeSchemasInParallel`), `mergeSchema` off or
+    * not. The key holds what the inferred schema depends on:
+    *  - the Hadoop-qualified path, so `faulty:///x` and `/x` differ;
+    *  - the file's length and modification time, from one
+    *    `getFileStatus`, so a file rewritten in place is inferred anew;
+    *  - the session's explicitly set `spark.sql.parquet.*`,
+    *    `spark.sql.legacy.parquet.*` and `spark.sql.caseSensitive`
+    *    confs, which change what Parquet→Spark conversion returns
+    *    (`inferTimestampNTZ.enabled`: NTZ or LTZ for a zone-less
+    *    timestamp; `nanosAsLong`: TIMESTAMP(NANOS) as a Long). An unset
+    *    conf reads its default, the same in every session, so the
+    *    session itself is not in the key.
+    * Anything but a single file (a directory, a missing path) is not
+    * cached: it is read as it is, with inference.
+    */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+    val key = Try(fs.getFileStatus(path)).toOption.filter(_.isFile)
+      .map(st => (fs.makeQualified(path).toString, st.getLen, st.getModificationTime, confs))
+    key.flatMap(k => Option(schemas.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path.toString)
+      case None =>
+        val df = spark.read.parquet(path.toString)
+        key.foreach(schemas.put(_, df.schema))
+        df
+    }
+  }
+  private val schemas = new ConcurrentHashMap[(String, Long, Long, Map[String, String]), StructType]()
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

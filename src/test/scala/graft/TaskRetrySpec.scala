@@ -71,12 +71,17 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     Digest.of(SparkEntry.queries(name)(spark, sf))
 
   // Every injected failure logs an executor ERROR with a full stack
-  // trace and TaskSetManager WARNs. Those two loggers go quiet for the
-  // faulty legs only (a job abort is still an ERROR), so an executor
-  // error anywhere else in the run still shows.
+  // trace and TaskSetManager WARNs; a failed write task also logs
+  // Utils' "Aborting task" and FileFormatWriter ERRORs with traces, and
+  // a failed cache put a BlockManager WARN. Those loggers go quiet for
+  // the faulty legs only (a job abort is still an ERROR), so an
+  // executor error anywhere else in the run still shows.
   private val injectedNoise = Seq(
     "org.apache.spark.executor.Executor" -> Level.OFF,
-    "org.apache.spark.scheduler.TaskSetManager" -> Level.ERROR)
+    "org.apache.spark.scheduler.TaskSetManager" -> Level.ERROR,
+    "org.apache.spark.util.Utils" -> Level.OFF,
+    "org.apache.spark.sql.execution.datasources.FileFormatWriter" -> Level.OFF,
+    "org.apache.spark.storage.BlockManager" -> Level.ERROR)
 
   private def faultyLeg[T](body: => T): T = {
     val saved = injectedNoise.map { case (n, _) => n -> LogManager.getLogger(n).getLevel }
