@@ -2,16 +2,12 @@ package graft.gen
 
 import java.time.{Instant, ZoneId}
 
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TimeZoneAwareExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{DateFormatter, TimestampFormatter}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,6 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * escaping or trimming, written straight into one reused byte buffer
   * (CsvLineBuffer) and returned as one UTF8String. The generator's
   * charsets never produce ',', '"', a newline or edge whitespace.
+  * `SqloadGen.writeCsvText` copies each line, with a '\n', into its
+  * task's 64 KB write block.
   *
   * Field text, per type:
   *   - integers of every width: decimal digits;
@@ -222,22 +220,4 @@ final class CsvLineBuffer(zone: ZoneId) {
       byte('.')
       digits(v.scale, a % p)
     }
-}
-
-/** The `text` source with its part files named `part-*.csv`, the name
-  * bulk-load readers glob. Writes a single string column, one line per
-  * row.
-  */
-class CsvTextFormat extends TextFileFormat {
-  override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
-                            dataSchema: StructType): OutputWriterFactory = {
-    val text = super.prepareWrite(spark, job, options, dataSchema)
-    new OutputWriterFactory {
-      override def getFileExtension(context: TaskAttemptContext): String =
-        ".csv" + text.getFileExtension(context).stripPrefix(".txt")
-      override def newInstance(path: String, dataSchema: StructType,
-                               context: TaskAttemptContext): OutputWriter =
-        text.newInstance(path, dataSchema, context)
-    }
-  }
 }

@@ -230,8 +230,7 @@ class ClusterPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
     test(s"$name is bit-identical across the process boundary") {
       assert(truth(name) == digest(spark, name),
         s"$name diverged between local[4] and local-cluster")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Release.all(spark)
     }
   }
 

@@ -95,8 +95,7 @@ class DeterminismAuditSpec extends AnyFunSuite {
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")(digest(name))
       // same hygiene as InventorySpec: drop cache/localCheckpoint blocks
       // accumulated by the executions before the next query's triple
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Release.all(spark)
       assert(a == b,
         s"$name result depends on partition layout: default=$a adversarial=$b")
       assert(a == c,

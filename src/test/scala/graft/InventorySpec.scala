@@ -184,8 +184,7 @@ class InventorySpec extends AnyFunSuite {
       // release per query: 208 x 2 executions otherwise accumulate
       // localCheckpoint blocks in this JVM (same hygiene as
       // Bench.releaseState and the PlanAuditSpec window audit)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Release.all(spark)
       assert(a == b, s"$name not deterministic across re-runs")
     }
   }

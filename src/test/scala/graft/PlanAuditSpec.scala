@@ -377,8 +377,7 @@ class PlanAuditSpec extends AnyFunSuite {
         // per query or 158 constructions accumulate block-manager
         // state in this JVM — the same pressure Bench.releaseState
         // cures in the bench harness
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Release.all(spark)
         ws
       }
     } yield name

@@ -148,8 +148,7 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
       val bufferPressured = withSqlConfs(bufferPressure: _*)(digest(spark, name))
       org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
       if (spilledDisk.get() > diskBefore) spilledQueries += name
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Release.all(spark)
       assert(expected == sorterPressure,
         s"$name result changed under forced sorter spills: truth=$expected spilled=$sorterPressure")
       assert(expected == bufferPressured,

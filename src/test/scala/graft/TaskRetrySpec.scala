@@ -114,8 +114,7 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       val refetched = faultyLeg(FaultyShuffleManager.armedDuring(digest(name, cleanSf)))
       val fetchHits = FaultyShuffleManager.injected.get() - beforeFetch
       if (fetchHits == 0) zeroShuffle += name
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Release.all(spark)
       assert(faulty.forall(_ == clean),
         s"$name result changed under injected task retries: clean=$clean faulty=${faulty.mkString(", ")}")
       assert(clean == refetched,
